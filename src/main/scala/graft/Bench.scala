@@ -325,13 +325,16 @@ object Bench {
       * interference AND no same-guest neighbors (a neighbor burst on one
       * non-best rep explains that rep's slowness the same way steal does,
       * and must not inflate the spread or flag a level whose best rep ran
-      * alone — the same false-flag mode the steal exclusion fixed). */
+      * alone — the same false-flag mode the steal exclusion fixed). A rep
+      * without probe data proves nothing about its window, so it is not
+      * clean: one missing its steal, spin or load entry (`zip` drops it),
+      * or whose sampler took no spin sample (entry 0.0, a rep shorter than
+      * the sampling period). */
     def cleanRepSecs: Seq[Double] = {
       val quiet = if (minSpinMs == Double.MaxValue) 0.0 else minSpinMs
-      repSecs.zipAll(repSteal, 0.0, 0.0).zipAll(repSpin, (0.0, 0.0), 0.0)
-        .zipAll(repLoads, ((0.0, 0.0), 0.0), 0.0)
+      repSecs.zip(repSteal).zip(repSpin).zip(repLoads)
         .collect { case (((sec, steal), spin), load)
-          if steal <= 0.05 && load <= 2.0 &&
+          if steal <= 0.05 && load <= 2.0 && spin > 0.0 &&
             (quiet == 0.0 || spin / quiet <= 1.5) => sec }
     }
     private def bestRepLoad: Double = bestRepOf(repLoads)

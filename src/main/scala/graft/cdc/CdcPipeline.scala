@@ -134,9 +134,6 @@ object CdcPipeline {
   def applyBatch(table: SnapTable, batch: DataFrame, epoch: Long,
       opts: PipelineOptions = PipelineOptions()): LineageRecord = {
     val t0 = System.nanoTime()
-    val debug = sys.env.contains("GRAFT_DEBUG_TIMING")
-    def mark(phase: String, since: Long): Unit = if (debug)
-      System.err.println(f"[pipeline-timing] $phase: ${(System.nanoTime() - since) / 1e9}%.2fs")
     // NOT cached: the accounting agg and the merge each scan the source
     // once, and a columnar parquet re-scan (pushdown + pruning) is ~10x
     // cheaper than materializing an InMemoryRelation of the batch (measured
@@ -170,7 +167,6 @@ object CdcPipeline {
       stats.enforce(opts.errorLimit)
       val touched = acct.filter(_.isNullAt(1))
         .flatMap(_.getSeq[Int](5)).toSet
-      mark("accounting", t0)
 
       val clean = tagged.filter(col(Dirty.ReasonCol).isNull).drop(Dirty.ReasonCol)
       // Enrichment runs as write-time DERIVED columns inside the merge —
@@ -346,7 +342,11 @@ object CdcPipeline {
       // writer commits a given epoch, so the displaced record can only be
       // this epoch's own earlier corpse.)
       try fs.delete(p, false) catch { case _: java.io.IOException => () }
-      if (!fs.rename(tmp, p)) fs.delete(tmp, false): Unit
+      if (!fs.rename(tmp, p)) {
+        System.err.println(s"[lineage] WARNING epoch ${rec.epoch} record " +
+          s"(${rec.result}) not published: rename $tmp -> $p failed twice")
+        fs.delete(tmp, false): Unit
+      }
     }
   }
 
@@ -365,19 +365,21 @@ object CdcPipeline {
       // sideband, and the table's own epoch guard (not lineage) is what
       // enforces exactly-once
       if (st.getPath.getName.startsWith(".")) None
-      else {
+      else try {
+        // open inside the try: a record that vanishes between listStatus
+        // and open (a concurrent GC) is skipped like a torn one
         val in = fs.open(st.getPath)
         try {
           val bytes = new Array[Byte](st.getLen.toInt)
           in.readFully(bytes)
           Some(Serialization.read[LineageRecord](
             new String(bytes, StandardCharsets.UTF_8)))
-        } catch {
-          case scala.util.control.NonFatal(t) =>
-            System.err.println(s"[lineage] skipping torn record " +
-              s"${st.getPath.getName}: ${t.getMessage}")
-            None
         } finally in.close()
+      } catch {
+        case scala.util.control.NonFatal(t) =>
+          System.err.println(s"[lineage] skipping unreadable record " +
+            s"${st.getPath.getName}: ${t.getMessage}")
+          None
       }
     }
   }

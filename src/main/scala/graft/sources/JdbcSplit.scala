@@ -135,11 +135,12 @@ object JdbcSplit {
     // numeric points arrive as decimal STRINGS (Oracle SAMPLE resultset,
     // approxQuantile BigInts) — a lexicographic sort misorders mixed-width
     // values ("1000" < "500"), which turns the sliding ranges into
-    // overlapping slices that read rows twice; sort by numeric value
-    // whenever every point parses as one
+    // overlapping slices that read rows twice; sort an unquoted pk by
+    // numeric value. A QUOTED pk compares as a string in the database, so
+    // its points keep string order even when they all look numeric.
     val distinct = points.distinct
     val sorted =
-      if (distinct.forall(p => scala.util.Try(BigDecimal(p)).isSuccess))
+      if (!quoted && distinct.forall(p => scala.util.Try(BigDecimal(p)).isSuccess))
         distinct.sortBy(BigDecimal(_))
       else distinct.sorted
     val first = Slice(pk, None, Some(sorted.head), hiInclusive = false, quoted = quoted)

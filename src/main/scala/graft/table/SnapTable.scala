@@ -2,7 +2,7 @@ package graft.table
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.json4s._
@@ -535,40 +535,67 @@ final class SnapTable private (val root: String, fs: FileSystem) {
     * a competing writer into the conflict window). */
   private[graft] var beforeCommitHook: () => Unit = () => ()
 
+  /** Schema evolution of an epoch write (driver-side, before any executor
+    * plan binds — SURVEY.md §7.4 risk 4): the table schema widened by the
+    * batch plus the derived columns, and `snap` edited to record it (a new
+    * schema version only when it changed) together with the epoch. */
+  private def evolve(snap: Snapshot, batchSchema: StructType, derived: Derived,
+      epoch: Long): (StructType, Snapshot) = {
+    val target = SnapTable.withDerived(SchemaEvolution.merge(snap.schema, batchSchema), derived)
+    val props = snap.props + (PropLastEpoch -> epoch.toString)
+    if (target.toDDL == snap.schema.toDDL) (target, snap.copy(props = props))
+    else {
+      val v = snap.currentSchemaV + 1
+      (target, snap.copy(currentSchemaV = v,
+        schemaVersions = snap.schemaVersions + (v.toString -> target.toDDL), props = props))
+    }
+  }
+
+  /**
+   * The commit protocol every data-writing operation shares: write `rows`
+   * (carrying [[BucketCol]]) under a fresh per-attempt commit dir, manifest
+   * the written files from their parquet footers, and claim the next
+   * version for `edited` — `snap` plus the operation's manifest edits —
+   * with the written files in place of `replaced`. A lost claim deletes
+   * this attempt's dir and returns None, so [[retryingCommit]] recomputes
+   * against the winner's snapshot. `bucketsRewritten` of the result is the
+   * number of distinct buckets written.
+   */
+  private def writeAndClaim(snap: Snapshot, edited: Snapshot, rows: DataFrame,
+      replaced: Seq[DataFileEntry], kind: String = "base"): Option[MergeResult.Committed] = {
+    val version = nextVersion(snap.version)
+    val rel = SnapTable.commitDir(version)
+    withLwwAggConf(rows.sparkSession) {
+      rows.write.mode("overwrite").partitionBy(BucketCol).parquet(s"$root/$rel")
+    }
+    val written = listBucketFiles(rows.sparkSession, s"$root/$rel", rel,
+      edited.currentSchemaV, kind)
+    val files = snap.files.filterNot(replaced.toSet) ++ written
+    beforeCommitHook()
+    if (!tryCommit(edited.copy(version = version, parent = snap.version, files = files,
+        rows = files.map(_.rows).sum))) {
+      fs.delete(new Path(root, rel), true)
+      None
+    } else Some(MergeResult.Committed(version, written.map(_.rows).sum,
+      written.map(_.bucket).distinct.size, edited.currentSchemaV != snap.currentSchemaV,
+      orphaned = !onCurrentChain(version)))
+  }
+
   private def mergeAttempt(batch: DataFrame, epoch: Long, knownTouched: Option[Set[Int]],
       derived: Derived, batchRowsHint: Option[Long]): Option[MergeResult] = {
     val spark = batch.sparkSession
-    val debug = sys.env.contains("GRAFT_DEBUG_TIMING")
-    var tMark = System.nanoTime()
-    def mark(phase: String): Unit = if (debug) {
-      val now = System.nanoTime()
-      System.err.println(f"[merge-timing] $phase: ${(now - tMark) / 1e9}%.2fs")
-      tMark = now
-    }
     val snap = snapshot()
     requireBucketFn(snap)
     if (epoch <= snap.lastEpoch) return Some(MergeResult.SkippedEpoch)
-
-    // 1. schema evolution (driver-side, before any executor plan binds —
-    //    SURVEY.md §7.4 risk 4).
-    val tableSchema = snap.schema
-    val target = SnapTable.withDerived(
-      SchemaEvolution.merge(tableSchema, batch.schema), derived)
-    val evolved = target.toDDL != tableSchema.toDDL
-    val schemaVersions =
-      if (evolved) snap.schemaVersions + ((snap.currentSchemaV + 1).toString -> target.toDDL)
-      else snap.schemaVersions
-    val newSchemaV = if (evolved) snap.currentSchemaV + 1 else snap.currentSchemaV
-
+    val (target, edited) = evolve(snap, batch.schema, derived, epoch)
     val reduceSchema = SnapTable.withoutDerived(target, derived)
     val alignedBare = SchemaEvolution.align(batch, reduceSchema)
       .withColumn(BucketCol, bucketExpr(snap.numBuckets))
 
-    // 2. copy-on-write only the touched buckets.
+    // copy-on-write only the touched buckets.
     val touched = knownTouched.getOrElse(
       alignedBare.select(BucketCol).distinct().collect().map(_.getInt(0)).toSet)
-    mark("touched-buckets")
-    val (rewrite, keep) = snap.files.partition(f => touched(f.bucket))
+    val rewrite = snap.files.filter(f => touched(f.bucket))
 
     // Two regimes for derived columns (measured both ways, see merge's
     // doc): replay/backfill (batch >> stored) reduces the BARE envelope
@@ -580,7 +607,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
     // because a survivor's textStats pass costs far more than the wider
     // rows. The caller's batch-size hint (counted in the pipeline's
     // accounting pass — no extra scan) picks the regime per epoch.
-    val storedDerivedCols = derived.cols.map(_.name).filter(tableSchema.fieldNames.contains)
+    val storedDerivedCols = derived.cols.map(_.name).filter(snap.schema.fieldNames.contains)
     val carryStored = storedDerivedCols.nonEmpty &&
       batchRowsHint.exists(b => rewrite.map(_.rows).sum > b)
     val carrySchema =
@@ -593,43 +620,12 @@ final class SnapTable private (val root: String, fs: FileSystem) {
     val old = readAligned(spark, snap, rewrite, carrySchema)
       .withColumn(BucketCol, bucketExpr(snap.numBuckets))
 
-    // 3+4. LWW winners among stored rows + batch, in ONE shuffle that is
-    //    also the file layout: repartition by bucket first — __bucket is a
-    //    grouping column, so HashPartitioning(__bucket) already satisfies
-    //    the aggregation's ClusteredDistribution and no second exchange is
-    //    inserted between the reduce and the bucketed write.
-    val unioned = old.unionByName(aligned)
-    val winners = SnapTable.lwwWinners(unioned, carrySchema, math.max(1, touched.size))
-    val newVersion = nextVersion(snap.version)
-    val commitRel = SnapTable.commitDir(newVersion)
-    withLwwAggConf(spark) {
-      SnapTable.applyDerived(winners, derived)
-        .write.mode("overwrite").partitionBy(BucketCol).parquet(s"$root/$commitRel")
-    }
-    mark("merge-write")
-
-    // 5. manifest the written files (rows counted from parquet footers).
-    val written = listBucketFiles(spark, s"$root/$commitRel", commitRel, newSchemaV)
-    mark("manifest-files")
-    val newRows = written.map(_.rows).sum + keep.map(_.rows).sum
-    beforeCommitHook()
-    val committed = tryCommit(Snapshot(
-      version = newVersion,
-      parent = snap.version,
-      numBuckets = snap.numBuckets,
-      currentSchemaV = newSchemaV,
-      schemaVersions = schemaVersions,
-      files = keep ++ written,
-      props = snap.props + (PropLastEpoch -> epoch.toString),
-      rows = newRows))
-    if (!committed) {
-      // another writer owns this version: discard our files, recompute
-      // against the new current snapshot
-      fs.delete(new Path(root, commitRel), true)
-      return None
-    }
-    Some(MergeResult.Committed(newVersion, written.map(_.rows).sum, touched.size, evolved,
-      orphaned = !onCurrentChain(newVersion)))
+    // LWW winners among stored rows + batch, in ONE shuffle that is also
+    // the file layout (see [[SnapTable.lwwWinners]]).
+    val winners = SnapTable.lwwWinners(old.unionByName(aligned), carrySchema,
+      math.max(1, touched.size))
+    writeAndClaim(snap, edited, SnapTable.applyDerived(winners, derived), rewrite)
+      .map(_.copy(bucketsRewritten = touched.size))
   }
 
   /** Above this many files per commit, footer row-counts are read on the
@@ -793,15 +789,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
     val snap = snapshot()
     requireBucketFn(snap)
     if (epoch <= snap.lastEpoch) return Some(MergeResult.SkippedEpoch)
-    val tableSchema = snap.schema
-    val target = SnapTable.withDerived(
-      SchemaEvolution.merge(tableSchema, batch.schema), derived)
-    val evolved = target.toDDL != tableSchema.toDDL
-    val schemaVersions =
-      if (evolved) snap.schemaVersions + ((snap.currentSchemaV + 1).toString -> target.toDDL)
-      else snap.schemaVersions
-    val newSchemaV = if (evolved) snap.currentSchemaV + 1 else snap.currentSchemaV
-
+    val (target, edited) = evolve(snap, batch.schema, derived, epoch)
     val reduceSchema = SnapTable.withoutDerived(target, derived)
     val aligned = SchemaEvolution.align(batch, reduceSchema)
       .withColumn(BucketCol, bucketExpr(snap.numBuckets))
@@ -811,99 +799,79 @@ final class SnapTable private (val root: String, fs: FileSystem) {
     // cross-epoch reduce happens at read/compaction
     val winners = SnapTable.lwwWinners(aligned, reduceSchema,
       math.max(1, snap.numBuckets / 4))
-
-    val newVersion = nextVersion(snap.version)
-    val commitRel = SnapTable.commitDir(newVersion)
-    withLwwAggConf(batch.sparkSession) {
-      SnapTable.applyDerived(winners, derived)
-        .write.mode("overwrite").partitionBy(BucketCol).parquet(s"$root/$commitRel")
-    }
-    val written = listBucketFiles(spark = batch.sparkSession, s"$root/$commitRel",
-      commitRel, newSchemaV, kind = "delta")
-    beforeCommitHook()
-    val committed = tryCommit(Snapshot(
-      version = newVersion,
-      parent = snap.version,
-      numBuckets = snap.numBuckets,
-      currentSchemaV = newSchemaV,
-      schemaVersions = schemaVersions,
-      files = snap.files ++ written,
-      props = snap.props + (PropLastEpoch -> epoch.toString),
-      rows = snap.rows + written.map(_.rows).sum))
-    if (!committed) { fs.delete(new Path(root, commitRel), true); return None }
-    Some(MergeResult.Committed(newVersion, written.map(_.rows).sum,
-      written.map(_.bucket).distinct.size, evolved,
-      orphaned = !onCurrentChain(newVersion)))
+    writeAndClaim(snap, edited, SnapTable.applyDerived(winners, derived), Nil, kind = "delta")
   }
 
   /** Number of delta files currently outstanding (compaction-policy input). */
   def deltaFileCount: Int = snapshot().files.count(_.kind == "delta")
+
+  /** Rewrite `files` as their LWW winners at `buckets` buckets in `parts`
+    * write tasks, keeping only winners that match `keep`, and commit them
+    * as `edited`. Rows are clustered by merge key within each bucket file:
+    * this is the read-optimization pass, so parquet row-group min/max stats
+    * line up with key ranges — point lookups ([[readKey]]) skip row
+    * groups, and key-adjacent text compresses better. Ingest never pays
+    * this sort. */
+  private def rewrite(spark: SparkSession, snap: Snapshot, edited: Snapshot,
+      files: Seq[DataFileEntry], buckets: Int, parts: Int,
+      keep: Option[Column] = None): Option[MergeResult.Committed] = {
+    val winners = SnapTable.lwwWinners(readAligned(spark, snap, files, snap.schema)
+      .withColumn(BucketCol, bucketExpr(buckets)), snap.schema, parts)
+    writeAndClaim(snap, edited, keep.fold(winners)(winners.filter)
+      .sortWithinPartitions((BucketCol +: Schemas.keyCols).map(col): _*), files)
+  }
+
+  /** Run a maintenance rewrite until it lands on the current chain. An
+    * ORPHANED commit (stalled past the claim grace; a concurrent writer
+    * committed ahead on a different parent) rewrote onto a dead branch
+    * while the live chain still holds the old state, so it is recomputed
+    * against the current chain rather than reported as done. Orphaning
+    * needs a stall longer than the grace window, so repeats mean something
+    * is pathologically wrong with this process: after three, a `mustLand`
+    * operation (an explicit migration must not no-op) throws; any other
+    * gives up with SkippedEpoch and leaves the work to its next run. */
+  private def landOnChain(op: String, mustLand: Boolean)(
+      attempt: => Option[MergeResult]): MergeResult = {
+    @annotation.tailrec
+    def go(n: Int): MergeResult = retryingCommit(attempt) match {
+      case MergeResult.Committed(v, _, _, _, true) =>
+        if (n < 3) {
+          System.err.println(s"[snaptable] $op version $v ORPHANED " +
+            "(stalled past claim grace) — recomputing against the current chain")
+          go(n + 1)
+        } else if (mustLand)
+          throw new IllegalStateException(s"$op version $v orphaned 3x (writer " +
+            "repeatedly stalled past the claim grace window) — NOT applied")
+        else {
+          System.err.println(s"[snaptable] $op version $v ORPHANED 3x — " +
+            "giving up; the next run retries")
+          MergeResult.SkippedEpoch
+        }
+      case r => r
+    }
+    go(1)
+  }
 
   /**
    * Fold all merge-on-read deltas into base files: LWW-reduce the buckets
    * that have deltas and rewrite them as fresh base file groups (buckets
    * with no deltas are untouched). Read cost returns to one scan; the
    * operation is the CoW merge with an empty batch, scheduled by policy
-   * instead of per-epoch.
+   * instead of per-epoch. Returns the number of files rewritten.
    */
-  def compact(spark: SparkSession): Long = {
-    // an ORPHANED compact (stalled past the claim grace; a concurrent
-    // writer committed ahead on a different parent) rewrote buckets onto a
-    // dead branch — the live chain's deltas still stand, so recompute
-    // against the current chain rather than report buckets that never
-    // landed. Bounded: orphaning needs a >grace-window stall, so repeats
-    // mean something is pathologically wrong with this process.
-    @annotation.tailrec
-    def go(attempt: Int): Long =
-      retryingCommit(compactAttempt(spark)) match {
-        case MergeResult.Committed(v, _, buckets, _, orphaned) =>
-          if (!orphaned) buckets.toLong
-          else if (attempt >= 3) {
-            System.err.println(s"[snaptable] compact version $v ORPHANED " +
-              "3x — giving up; deltas remain and the next policy compaction retries")
-            0L
-          } else {
-            System.err.println(s"[snaptable] compact version $v ORPHANED " +
-              "(stalled past claim grace) — recomputing against the current chain")
-            go(attempt + 1)
-          }
-        case MergeResult.SkippedEpoch => 0L
-      }
-    go(1)
-  }
-
-  private def compactAttempt(spark: SparkSession): Option[MergeResult] = {
-    val snap = snapshot()
-    requireBucketFn(snap)
-    val dirty = snap.files.filter(_.kind == "delta").map(_.bucket).toSet
-    if (dirty.isEmpty) return Some(MergeResult.SkippedEpoch)
-    val (rewrite, keep) = snap.files.partition(f => dirty(f.bucket))
-    val target = snap.schema
-    val winners = SnapTable.lwwWinners(
-      readAligned(spark, snap, rewrite, target)
-        .withColumn(BucketCol, bucketExpr(snap.numBuckets)),
-      target, math.max(1, dirty.size))
-    val newVersion = nextVersion(snap.version)
-    val commitRel = SnapTable.commitDir(newVersion)
-    // compaction is the read-optimization pass: cluster rows by merge key
-    // within each bucket file so parquet row-group min/max stats line up
-    // with key ranges — point lookups (readKey) skip row groups, and
-    // key-adjacent text compresses better. Ingest never pays this sort.
-    withLwwAggConf(spark) {
-      winners
-        .sortWithinPartitions((BucketCol +: Schemas.keyCols).map(col): _*)
-        .write.mode("overwrite").partitionBy(BucketCol).parquet(s"$root/$commitRel")
+  def compact(spark: SparkSession): Long =
+    landOnChain("compact", mustLand = false) {
+      val snap = snapshot()
+      requireBucketFn(snap)
+      val dirty = snap.files.filter(_.kind == "delta").map(_.bucket).toSet
+      val files = snap.files.filter(f => dirty(f.bucket))
+      if (dirty.isEmpty) Some(MergeResult.SkippedEpoch)
+      else rewrite(spark, snap, snap, files, snap.numBuckets, dirty.size)
+        .map(_.copy(bucketsRewritten = files.size))
+    } match {
+      case c: MergeResult.Committed => c.bucketsRewritten.toLong
+      case MergeResult.SkippedEpoch => 0L
     }
-    val written = listBucketFiles(spark, s"$root/$commitRel", commitRel, snap.currentSchemaV)
-    beforeCommitHook()
-    val committed = tryCommit(snap.copy(version = newVersion, parent = snap.version,
-      files = keep ++ written, rows = keep.map(_.rows).sum + written.map(_.rows).sum))
-    if (!committed) { fs.delete(new Path(root, commitRel), true); return None }
-    // bucketsRewritten carries the FILE count here (compact's caller-facing
-    // "filesRewritten" metric)
-    Some(MergeResult.Committed(newVersion, written.map(_.rows).sum, rewrite.size, false,
-      orphaned = !onCurrentChain(newVersion)))
-  }
 
   /**
    * Layout evolution: rewrite the table into `newBuckets` hash buckets —
@@ -920,86 +888,50 @@ final class SnapTable private (val root: String, fs: FileSystem) {
    */
   def rebucket(spark: SparkSession, newBuckets: Int): Unit = {
     require(newBuckets >= 1, "need at least one bucket")
-    // an ORPHANED rebucket landed the new layout on a dead branch — the
-    // live chain still has the OLD layout and stamp, so silently returning
-    // would leave the caller believing a migration that never happened.
-    // Recompute against the current chain; if it keeps orphaning, fail
-    // loudly — an explicit migration must not no-op.
-    @annotation.tailrec
-    def go(attempt: Int): Unit =
-      retryingCommit(rebucketAttempt(spark, newBuckets)) match {
-        case MergeResult.Committed(v, _, _, _, true) =>
-          if (attempt >= 3)
-            throw new IllegalStateException(s"rebucket version $v orphaned " +
-              "3x (writer repeatedly stalled past the claim grace window) — " +
-              "layout NOT migrated")
-          System.err.println(s"[snaptable] rebucket version $v ORPHANED " +
-            "(stalled past claim grace) — recomputing against the current chain")
-          go(attempt + 1)
-        case _ => ()
-      }
-    go(1)
-  }
-
-  private def rebucketAttempt(spark: SparkSession, newBuckets: Int): Option[MergeResult] = {
-    val snap = snapshot()
-    val target = snap.schema
-    val all = readAligned(spark, snap, snap.files, target)
-      .withColumn(BucketCol, bucketExpr(newBuckets))
-    val winners = SnapTable.lwwWinners(all, target, newBuckets)
-    val newVersion = nextVersion(snap.version)
-    val commitRel = SnapTable.commitDir(newVersion)
-    withLwwAggConf(spark) {
-      winners
-        .sortWithinPartitions((BucketCol +: Schemas.keyCols).map(col): _*)
-        .write.mode("overwrite").partitionBy(BucketCol).parquet(s"$root/$commitRel")
-    }
-    val written = listBucketFiles(spark, s"$root/$commitRel", commitRel, snap.currentSchemaV)
-    beforeCommitHook()
-    // stamps the CURRENT hash version: rebucket rewrites every row under
-    // this build's bucketExpr, so it is the migration path for tables laid
-    // out by an older hash
-    val committed = tryCommit(snap.copy(version = newVersion, parent = snap.version,
-      numBuckets = newBuckets, files = written, rows = written.map(_.rows).sum,
-      props = snap.props + (PropBucketFn -> BucketFnVersion.toString)))
-    if (!committed) { fs.delete(new Path(root, commitRel), true); return None }
-    Some(MergeResult.Committed(newVersion, written.map(_.rows).sum, newBuckets, false,
-      orphaned = !onCurrentChain(newVersion)))
+    landOnChain("rebucket", mustLand = true) {
+      val snap = snapshot()
+      // stamps the CURRENT hash version: rebucket rewrites every row under
+      // this build's bucketExpr, so it is the migration path for tables
+      // laid out by an older hash
+      rewrite(spark, snap, snap.copy(numBuckets = newBuckets,
+        props = snap.props + (PropBucketFn -> BucketFnVersion.toString)),
+        snap.files, newBuckets, newBuckets)
+    }: Unit
   }
 
   /** Drop tombstones older than `lsnWatermark` by rewriting their buckets —
     * the compaction that bounds tombstone retention. Outstanding
-    * merge-on-read deltas are compacted first so the rewrite sees (and
-    * keeps) only winner rows. */
+    * merge-on-read deltas are compacted first so the count sees only
+    * winner rows; the rewrite itself LWW-reduces like [[compact]], so a
+    * delta a concurrent writer commits before a retried attempt folds in
+    * instead of duplicating its key. Returns the number of tombstones
+    * dropped. */
   def expireTombstones(spark: SparkSession, lsnWatermark: Long): Long = {
     compact(spark)
-    val snap = snapshot()
-    requireBucketFn(snap)
-    val target = snap.schema
-    val all = readAligned(spark, snap, snap.files, target)
-    val expired = all.filter(col("op") === "D" && col("lsn") < lsnWatermark)
-    val n = expired.count()
-    if (n == 0) return 0
-    val buckets = expired.select(bucketExpr(snap.numBuckets).as(BucketCol))
-      .distinct().collect().map(_.getInt(0)).toSet
-    val (rewrite, keep) = snap.files.partition(f => buckets(f.bucket))
-    val kept = readAligned(spark, snap, rewrite, target)
-      .filter(!(col("op") === "D" && col("lsn") < lsnWatermark))
-      .withColumn(BucketCol, bucketExpr(snap.numBuckets))
-    val newVersion = nextVersion(snap.version)
-    val commitRel = SnapTable.commitDir(newVersion)
-    kept.repartition(math.max(1, buckets.size), col(BucketCol))
-      .write.mode("overwrite").partitionBy(BucketCol).parquet(s"$root/$commitRel")
-    val written = listBucketFiles(spark, s"$root/$commitRel", commitRel, snap.currentSchemaV)
-    // stamp the horizon IN the same commit that drops the tombstones, so a
-    // resuming consumer can detect (and refuse) a watermark the expiry has
-    // outrun — see [[tombstoneHorizonLsn]]
-    val horizon = math.max(lsnWatermark,
-      snap.props.get(PropTombstoneHorizon).map(_.toLong).getOrElse(-1L))
-    commit(snap.copy(version = newVersion, parent = snap.version,
-      files = keep ++ written, rows = written.map(_.rows).sum + keep.map(_.rows).sum,
-      props = snap.props + (PropTombstoneHorizon -> horizon.toString)))
-    n
+    val expired = col("op") === "D" && col("lsn") < lsnWatermark
+    var n = 0L
+    landOnChain("expireTombstones", mustLand = false) {
+      val snap = snapshot()
+      requireBucketFn(snap)
+      // one aggregation yields both the count and the buckets to rewrite
+      val perBucket = readAligned(spark, snap, snap.files, snap.schema).filter(expired)
+        .groupBy(bucketExpr(snap.numBuckets)).count()
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      n = perBucket.values.sum
+      // stamp the horizon IN the same commit that drops the tombstones, so
+      // a resuming consumer can detect (and refuse) a watermark the expiry
+      // has outrun — see [[tombstoneHorizonLsn]]
+      val horizon = math.max(lsnWatermark,
+        snap.props.get(PropTombstoneHorizon).map(_.toLong).getOrElse(-1L))
+      if (n == 0) Some(MergeResult.SkippedEpoch)
+      else rewrite(spark, snap,
+        snap.copy(props = snap.props + (PropTombstoneHorizon -> horizon.toString)),
+        snap.files.filter(f => perBucket.contains(f.bucket)), snap.numBuckets,
+        perBucket.size, keep = Some(!expired))
+    } match {
+      case _: MergeResult.Committed => n
+      case MergeResult.SkippedEpoch => 0L
+    }
   }
 
   /** The lsn watermark below which delete tombstones have been physically

@@ -14,10 +14,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * set deterministically, so these cases exercise the steal gate.) */
 class BenchFlagSpec extends AnyFunSuite {
 
+  /** A level whose every rep carries all three probe entries; `loads`
+    * defaults to no neighbors and each spin sample to a quiet 1 ms. */
   private def level(secs: Seq[Double], steal: Seq[Double],
       loads: Seq[Double] = Nil): Bench.Level =
-    Bench.Level(events = 1000L, repSecs = secs, repLoads = loads,
-      repSteal = steal, repSpin = Nil)
+    Bench.Level(events = 1000L, repSecs = secs,
+      repLoads = if (loads.nonEmpty) loads else secs.map(_ => 0.0),
+      repSteal = steal, repSpin = secs.map(_ => 1.0))
 
   test("steal-poisoned slow rep is excluded from the spread — level stays clean") {
     // the round-5 incident: 12.6x raw spread, fully explained by recorded steal
@@ -56,6 +59,20 @@ class BenchFlagSpec extends AnyFunSuite {
     val l = level(Seq(80.0, 20.0), steal = Seq(0.0, 0.0), loads = Seq(3.0, 0.0))
     assert(l.cleanRepSecs == Seq(20.0))
     assert(!l.contended)
+  }
+
+  test("a rep with missing probe data is not clean and cannot suppress the spread flag") {
+    // the 20 s rep has no steal/load entry: padding it with 0.0 made it the
+    // only "clean" rep, hiding the 4x spread and the best rep's unknown window
+    val missing = Bench.Level(events = 1000L, repSecs = Seq(80.0, 20.0),
+      repLoads = Seq(0.0), repSteal = Seq(0.30), repSpin = Seq(1.0, 1.0))
+    assert(missing.cleanRepSecs.isEmpty)
+    assert(missing.contended)
+    // a spin entry of 0.0 means the sampler took no sample during the rep
+    val unsampled = Bench.Level(events = 1000L, repSecs = Seq(80.0, 20.0),
+      repLoads = Seq(0.0, 0.0), repSteal = Seq(0.30, 0.0), repSpin = Seq(1.0, 0.0))
+    assert(unsampled.cleanRepSecs.isEmpty)
+    assert(unsampled.contended)
   }
 
   test("best reported second always comes from the fastest rep") {

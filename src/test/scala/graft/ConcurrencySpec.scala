@@ -57,21 +57,49 @@ class ConcurrencySpec extends SparkSpec {
   }
 
   test("aborted attempts leave no orphan data directories") {
-    val root = tmpDir("table")
-    val t1 = SnapTable.create(spark, root, Schemas.payloadV2, numBuckets = 8)
-    CdcPipeline.applyBatch(t1, (1 to 20).map(i => ev(i, 100 + i)).toDF(), 0)
-    val t2 = SnapTable.load(spark, root)
-    var fired = false
-    t1.beforeCommitHook = () => if (!fired) {
-      fired = true; t2.merge(Seq(ev(21, 201)).toDF(), epoch = 1): Unit
+    // every data-writing operation goes through the same write-and-claim
+    // step: a competing commit inside its conflict window makes it lose the
+    // claim once, delete its attempt dir, and retry to the same result and
+    // visible state as if the competitor had simply committed first
+    val del = (i: Int, lsn: Long) => ev(i, lsn).copy(op = "D")
+    def setup(t: SnapTable, mor: Boolean): Unit = {
+      CdcPipeline.applyBatch(t, (1 to 20).map(i => ev(i, 100 + i)).toDF(), 0)
+      CdcPipeline.applyBatch(t, Seq(del(1, 150), del(2, 151), ev(3, 152)).toDF(), 1,
+        graft.cdc.PipelineOptions(mergeMode = if (mor) "mor" else "cow",
+          morCompactDeltasPerBucket = Int.MaxValue))
     }
-    try t1.merge(Seq(ev(22, 301)).toDF(), epoch = 2)
-    finally t1.beforeCommitHook = () => ()
-    val dataDirs = new java.io.File(s"$root/data").listFiles().filter(_.isDirectory)
-      .map(_.getName).toSet
-    val referenced = t1.history.flatMap(v => t1.snapshot(v).files)
-      .map(_.path.split("/")(1)).toSet
-    assert(dataDirs == referenced,
-      s"orphan commit dirs: ${dataDirs.diff(referenced)}")
+    val ops: Seq[(String, Boolean, SnapTable => Any)] = Seq(
+      ("merge", false, _.merge(Seq(ev(22, 301)).toDF(), epoch = 10)),
+      ("mergeDelta", false, _.mergeDelta(Seq(ev(22, 301)).toDF(), epoch = 10)),
+      ("compact", true, _.compact(spark)),
+      ("rebucket", true, _.rebucket(spark, 4)),
+      ("expireTombstones", false, _.expireTombstones(spark, lsnWatermark = 1000L)))
+    def compete(t: SnapTable): Unit =
+      assert(SnapTable.load(spark, t.root).merge(Seq(ev(21, 201)).toDF(), epoch = 5)
+        .isInstanceOf[MergeResult.Committed])
+    def state(t: SnapTable) = t.read(spark).collect().map(_.toString).sorted.toSeq
+    for ((name, mor, op) <- ops) {
+      // the same operation with no conflict: the competitor commits first
+      val calm = SnapTable.create(spark, tmpDir(s"calm-$name"), Schemas.payloadV2,
+        numBuckets = 8)
+      setup(calm, mor)
+      compete(calm)
+      val expected = op(calm)
+      val root = tmpDir(s"conflict-$name")
+      val t1 = SnapTable.create(spark, root, Schemas.payloadV2, numBuckets = 8)
+      setup(t1, mor)
+      var attempts = 0
+      t1.beforeCommitHook = () => { attempts += 1; if (attempts == 1) compete(t1) }
+      val got = try op(t1) finally t1.beforeCommitHook = () => ()
+      assert(attempts == 2, s"$name: expected one lost claim and one retry")
+      assert(got == expected, s"$name: result after retry")
+      assert(state(t1) == state(calm), s"$name: visible state after retry")
+      val dataDirs = new java.io.File(s"$root/data").listFiles().filter(_.isDirectory)
+        .map(_.getName).toSet
+      val referenced = t1.history.flatMap(v => t1.snapshot(v).files)
+        .map(_.path.split("/")(1)).toSet
+      assert(dataDirs == referenced,
+        s"$name: orphan commit dirs: ${dataDirs.diff(referenced)}")
+    }
   }
 }

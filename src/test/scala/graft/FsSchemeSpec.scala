@@ -8,9 +8,18 @@ import java.net.URI
 
 /** A `file://`-semantics filesystem under a DIFFERENT scheme: the probe for
   * "would this code path work on HDFS/object storage" without a cluster.
-  * Any `java.io.File` existence check is blind to this scheme. */
+  * Any `java.io.File` existence check is blind to this scheme. Opening the
+  * file named [[GraftTestFs.vanished]] fails as if it had been deleted
+  * after it was listed. */
 class GraftTestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: URI = URI.create("graftfs:///")
+  override def open(f: org.apache.hadoop.fs.Path,
+      bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream =
+    if (GraftTestFs.vanished.contains(f.getName)) throw new java.io.FileNotFoundException(s"$f")
+    else super.open(f, bufferSize)
+}
+object GraftTestFs {
+  @volatile var vanished: Option[String] = None
 }
 
 /**
@@ -52,5 +61,18 @@ class FsSchemeSpec extends SparkSpec {
     val report = graft.job.Job.run(spark, json)
     assert(report.error.isEmpty, report.error)
     assert(report.rowsRead == 15)
+  }
+
+  test("a lineage record that vanishes between list and open is skipped") {
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.graftfs.impl", classOf[GraftTestFs].getName)
+    val t = SnapTable.create(spark, s"graftfs:${tmpDir("vanish")}/t", Schemas.payloadV2,
+      numBuckets = 4)
+    for (e <- 0 to 2)
+      CdcPipeline.applyBatch(t, Seq(ev(e, 100 + e)).toDF(), e)
+    GraftTestFs.vanished = Some("epoch-00000001.json")
+    val epochs = try CdcPipeline.readLineage(spark, t).map(_.epoch)
+      finally GraftTestFs.vanished = None
+    assert(epochs == Seq(0L, 2L))
   }
 }

@@ -361,6 +361,25 @@ class JdbcSpec extends SparkSpec {
     assert(rCounts.max >= 85, s"range slicing should collapse under skew: ${rCounts.toSeq}")
   }
 
+  test("reader lane: sampled split of a digit-string VARCHAR pk keeps string order") {
+    import org.json4s.jackson.JsonMethods.parse
+    val conn = derby("digitstrdb")
+    conn.createStatement().execute("CREATE TABLE digitstr (pk VARCHAR(8), v INT)")
+    val ins = conn.prepareStatement("INSERT INTO digitstr VALUES (?, ?)")
+    // mixed-width digit strings: the database orders '1000' < '1500' < '500',
+    // so slice boundaries sorted as numbers would overlap and gap
+    val pks = Seq(500, 1000, 1500, 2000).flatMap(b => (0 until 25).map(i => (b + i).toString))
+    pks.foreach { k => ins.setString(1, k); ins.setInt(2, 1); ins.executeUpdate() }
+    conn.close()
+    val df = graft.job.JdbcLane.read(spark, parse("""{
+      "username": "app", "password": "app",
+      "connection": [{"jdbcUrl": "jdbc:derby:memory:digitstrdb", "table": ["digitstr"]}],
+      "splitPk": "pk", "splitMode": "sampled"}"""), channels = 4)
+    val read = df.collect().map(_.getString(0)).toSeq
+    assert(read.diff(read.distinct).isEmpty, s"rows read twice: ${read.diff(read.distinct)}")
+    assert(read.sorted == pks.sorted, s"rows missing: ${pks.diff(read)}")
+  }
+
   test("DRDS dialect: mandatory session SQL reaches the reader properties") {
     import JdbcDialect._
     assert(of("drds") == Drds)
