@@ -25,13 +25,14 @@ object GraftSession {
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       // ObjectHashAggregate (the typed-imperative lww_winner reduce) keeps
       // one full row per key in an UNSPILLABLE hash map; this threshold is
-      // its only memory guard. 262144 keys x ~1-2 KB transcript row ≈
-      // 256-512 MB per task — inside a standard 4-core/8GB executor slot —
-      // and far above the 128 default that would sort immediately. The
-      // merge hot path additionally raises it per-job (SnapTable scopes
-      // LwwFallbackThreshold around its reduce, where bucket sizing bounds
-      // keys per task); everything else keeps this graceful fallback.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
+      // its only memory guard: one task slot's key budget, far above the
+      // 128 default that would sort immediately. The merge hot path
+      // additionally raises it per-job (SnapTable scopes
+      // LwwFallbackThreshold around its reduce, whose task count keeps keys
+      // per task within a bucket or this budget); everything else keeps
+      // this graceful fallback.
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
+        graft.table.SnapTable.TaskKeyBudget.toString)
 
   def get(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = builder(cores).getOrCreate()

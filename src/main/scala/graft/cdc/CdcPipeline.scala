@@ -182,12 +182,12 @@ object CdcPipeline {
         else clean
       val mergeResult = opts.mergeMode match {
         // stats.clean (counted in the accounting pass above — no extra
-        // scan) lets the merge pick the derived-column regime: re-derive
-        // winners while the replay batch dominates, carry stored values
-        // once the table does
+        // scan) sizes the reduce's task count and lets the merge pick the
+        // derived-column regime: re-derive winners while the replay batch
+        // dominates, carry stored values once the table does
         case "cow" => table.merge(toMerge, epoch, Some(touched), derived, Some(stats.clean))
         case "mor" =>
-          val r = table.mergeDelta(toMerge, epoch, derived)
+          val r = table.mergeDelta(toMerge, epoch, derived, Some(stats.clean))
           // Long arithmetic: a large configured threshold (e.g. MaxValue =
           // "never auto-compact") times the bucket count overflows Int and
           // would flip this into compact-every-epoch

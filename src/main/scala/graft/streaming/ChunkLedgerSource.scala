@@ -21,12 +21,12 @@ import org.apache.spark.unsafe.types.UTF8String
  * whole tree every trigger and holds every seen file in a driver-side map —
  * at 10^6+ changelog files the listing and the map dominate trigger
  * latency. Here the OFFSET is the last consumed chunk-directory name, so a
- * trigger costs one listing of the top-level chunk dirs (O(chunks), not
- * O(files)) plus one listing of only the NEW chunks, and there is no
- * seen-file state at all. This is the Spark-native shape of the
- * reference's stream-reader master planning shards and handing each worker
- * a bounded range (reference: otsstreamreader/.../core/
- * OTSStreamReaderMasterProxy.java:78-107).
+ * trigger costs one listing of the top-level chunk dirs (one call, O(chunks)
+ * names, not O(files)) plus a `_SUCCESS` probe and a listing of only the
+ * NEW chunks, and there is no seen-file state at all. This is the
+ * Spark-native shape of the reference's stream-reader master planning
+ * shards and handing each worker a bounded range (reference:
+ * otsstreamreader/.../core/OTSStreamReaderMasterProxy.java:78-107).
  *
  * Contract: chunk directory names under the root are lexicographically
  * monotone in arrival order (zero-padded, as the generator writes them),
@@ -86,16 +86,27 @@ private[streaming] class ChunkLedgerStream(root: String, maxChunksPerTrigger: In
     new Path(root).getFileSystem(conf)
   }
 
-  /** Committed (complete, `_SUCCESS`-marked) chunk dir names, sorted. One
-    * top-level listing — O(chunks) driver work per call. */
-  private def completeChunks(): Seq[String] = {
+  /** Chunk dir names, sorted: one top-level listing. */
+  private def chunkNames(): IndexedSeq[String] = {
     val f = fs
     val rootPath = new Path(root)
-    if (!f.exists(rootPath)) return Nil
-    f.listStatus(rootPath).filter(_.isDirectory).map(_.getPath)
-      .filter(p => f.exists(new Path(p, "_SUCCESS")))
-      .map(_.getName).sorted.toSeq
+    if (!f.exists(rootPath)) return IndexedSeq.empty
+    f.listStatus(rootPath).filter(_.isDirectory).map(_.getPath.getName).sorted.toIndexedSeq
   }
+
+  private def isComplete(chunk: String): Boolean =
+    fs.exists(new Path(new Path(root, chunk), "_SUCCESS"))
+
+  /** Committed (complete, `_SUCCESS`-marked) chunks after `from`, in order.
+    * Lazy: `_SUCCESS` is probed only for names past the consumed offset,
+    * and only as far as the caller reads, so a trigger's FS calls do not
+    * grow with the number of chunks already consumed. */
+  private def completeChunksAfter(from: String): Iterator[String] =
+    chunkNames().iterator.filter(_ > from).filter(isComplete)
+
+  /** Newest committed chunk ("" = none), walking back from the newest name. */
+  private def newestComplete(): String =
+    chunkNames().reverseIterator.find(isComplete).getOrElse("")
 
   /** Pinned end for Trigger.AvailableNow: everything present at prepare
     * time is drained (across as many rate-limited batches as needed) and
@@ -103,7 +114,7 @@ private[streaming] class ChunkLedgerStream(root: String, maxChunksPerTrigger: In
   @volatile private var availableNowTarget: Option[String] = None
 
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowTarget = Some(completeChunks().lastOption.getOrElse(""))
+    availableNowTarget = Some(newestComplete())
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
@@ -124,16 +135,16 @@ private[streaming] class ChunkLedgerStream(root: String, maxChunksPerTrigger: In
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start.asInstanceOf[ChunkOffset].lastChunk
-    val fresh = completeChunks().filter(_ > from)
+    val fresh = completeChunksAfter(from)
     val capped = availableNowTarget match {
-      case Some(target) => fresh.filter(_ <= target)
+      case Some(target) => fresh.takeWhile(_ <= target)
       case None => fresh
     }
     // admission = the source's own chunk cap INTERSECTED with whatever cap
     // the engine passed in `limit` — Trigger.AvailableNow and future rate
     // configs hand composite ReadLimits here, and ignoring them would
     // silently over-admit the day a maxOffsets/maxFiles knob is set
-    val chunkCapped = capped.take(math.max(1, maxChunksPerTrigger))
+    val chunkCapped = capped.take(math.max(1, maxChunksPerTrigger)).toSeq
     val admitted = maxFilesOf(limit) match {
       case None => chunkCapped
       case Some(cap) =>
@@ -166,14 +177,13 @@ private[streaming] class ChunkLedgerStream(root: String, maxChunksPerTrigger: In
     case _ => None
   }
 
-  override def reportLatestOffset(): Offset =
-    ChunkOffset(completeChunks().lastOption.getOrElse(""))
+  override def reportLatestOffset(): Offset = ChunkOffset(newestComplete())
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val from = start.asInstanceOf[ChunkOffset].lastChunk
     val to = end.asInstanceOf[ChunkOffset].lastChunk
     val f = fs
-    completeChunks().filter(c => c > from && c <= to).map { c =>
+    completeChunksAfter(from).takeWhile(_ <= to).map { c =>
       val files = f.listStatus(new Path(new Path(root), c))
         .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
         .map(s => (s.getPath.toString, s.getLen))

@@ -302,9 +302,13 @@ final class SnapTable private (val root: String, fs: FileSystem) {
     * always as long) so the bucket of a key is invariant under merge-key
     * type widening — rows written before an int->long evolution land in the
     * same bucket as rows after it. */
-  private[graft] def bucketExpr(numBuckets: Int) =
-    pmod(xxhash64(graft.model.Schemas.mergeKeyCanonicalTypes
-      .map { case (n, t) => col(n).cast(t) }: _*), lit(numBuckets)).cast("int")
+  private[graft] def bucketExpr(numBuckets: Int): Column =
+    bucketHash(graft.model.Schemas.mergeKeyCanonicalTypes.map(p => col(p._1)), numBuckets)
+
+  /** The layout hash of merge-key values given in `mergeKeys` order. */
+  private def bucketHash(keys: Seq[Column], numBuckets: Int): Column =
+    pmod(xxhash64(keys.zip(graft.model.Schemas.mergeKeyCanonicalTypes)
+      .map { case (k, (_, t)) => k.cast(t) }: _*), lit(numBuckets)).cast("int")
 
   /** Refuse hash-dependent operations on a table laid out by a DIFFERENT
     * bucket-function version than this build computes: merging with a
@@ -470,7 +474,8 @@ final class SnapTable private (val root: String, fs: FileSystem) {
     * caller that knows the batch size (the pipeline counts it in its
     * accounting pass) passes `batchRowsHint` and the merge carries STORED
     * rows' persisted derived values through the reduce instead whenever
-    * storedRewriteRows > batchRows. */
+    * storedRewriteRows > batchRows. The hint also sizes the reduce (see
+    * [[SnapTable.lwwTasks]]). */
   def merge(batch: DataFrame, epoch: Long, knownTouched: Option[Set[Int]],
       derived: Derived = Derived.none,
       batchRowsHint: Option[Long] = None): MergeResult =
@@ -505,10 +510,11 @@ final class SnapTable private (val root: String, fs: FileSystem) {
     * [[SnapTable.LwwFallbackThreshold]], restoring the session value after.
     * Scoped per-job rather than session-wide: the raised threshold removes
     * the sort-based safety valve (each LwwBuffer pins a full UnsafeRow in
-    * an unspillable map), which is safe HERE because the reduce runs on
-    * bucket-partitioned winners — keys per task are bounded by bucket
-    * sizing (rebucket keeps buckets task-sized as the table grows) — but
-    * would be an OOM hazard for arbitrary session aggregations. */
+    * an unspillable map), which is safe HERE because [[SnapTable.lwwTasks]]
+    * sizes the reduce so a task's keys stay within about one bucket's rows
+    * or [[SnapTable.TaskKeyBudget]] input rows, whichever is larger
+    * (rebucket keeps buckets task-sized as the table grows) — but would be
+    * an OOM hazard for arbitrary session aggregations. */
   private def withLwwAggConf[T](spark: SparkSession)(body: => T): T = {
     val k = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
     // Serialized per SESSION: the threshold lives in the session-global SQL
@@ -623,7 +629,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
     // LWW winners among stored rows + batch, in ONE shuffle that is also
     // the file layout (see [[SnapTable.lwwWinners]]).
     val winners = SnapTable.lwwWinners(old.unionByName(aligned), carrySchema,
-      math.max(1, touched.size))
+      touched.size, batchRowsHint.map(_ + rewrite.map(_.rows).sum))
     writeAndClaim(snap, edited, SnapTable.applyDerived(winners, derived), rewrite)
       .map(_.copy(bucketsRewritten = touched.size))
   }
@@ -667,15 +673,13 @@ final class SnapTable private (val root: String, fs: FileSystem) {
 
   // ---- pruned read paths ----------------------------------------------------
 
-  /** Bucket of one concrete key (same canonical-cast hash the layout uses),
-    * resolved with one driver-local expression eval. */
-  private def bucketOf(spark: SparkSession, convId: String, turnIdx: Long,
+  /** Bucket of one concrete key: the layout's own hash expression over
+    * literals, resolved by the analyzer and evaluated interpreted on the
+    * driver (no Spark job, no codegen). */
+  private[graft] def bucketOf(spark: SparkSession, convId: String, turnIdx: Long,
       buckets: Int): Int =
-    spark.range(1).select(pmod(xxhash64(
-      graft.model.Schemas.mergeKeyCanonicalTypes.map {
-        case ("conv_id", t) => lit(convId).cast(t)
-        case (_, t) => lit(turnIdx).cast(t)
-      }: _*), lit(buckets)).cast("int")).head().getInt(0)
+    spark.range(1).select(bucketHash(Seq(lit(convId), lit(turnIdx)), buckets))
+      .queryExecution.analyzed.expressions.head.eval().asInstanceOf[Int]
 
   /**
    * Point lookup: prune to the single bucket of the key before scanning —
@@ -778,14 +782,16 @@ final class SnapTable private (val root: String, fs: FileSystem) {
    * rewrites the whole table per epoch; MoR amortizes that into periodic
    * compactions. Iceberg's MoR delete/overlay files are the same trade.
    * Exactly-once and schema evolution behave identically to [[merge]] (the
-   * epoch rides the same atomic commit).
+   * epoch rides the same atomic commit). `batchRowsHint` is the batch's
+   * row count when the caller knows it, as for [[merge]]; it sizes the
+   * reduce (see [[SnapTable.lwwTasks]]).
    */
-  def mergeDelta(batch: DataFrame, epoch: Long,
-      derived: Derived = Derived.none): MergeResult =
-    retryingCommit(mergeDeltaAttempt(batch, epoch, derived))
+  def mergeDelta(batch: DataFrame, epoch: Long, derived: Derived = Derived.none,
+      batchRowsHint: Option[Long] = None): MergeResult =
+    retryingCommit(mergeDeltaAttempt(batch, epoch, derived, batchRowsHint))
 
   private def mergeDeltaAttempt(batch: DataFrame, epoch: Long,
-      derived: Derived): Option[MergeResult] = {
+      derived: Derived, batchRowsHint: Option[Long]): Option[MergeResult] = {
     val snap = snapshot()
     requireBucketFn(snap)
     if (epoch <= snap.lastEpoch) return Some(MergeResult.SkippedEpoch)
@@ -797,26 +803,27 @@ final class SnapTable private (val root: String, fs: FileSystem) {
     // bucket-aligned shuffle over the bare envelope (derived columns are
     // projected onto the winners below); stored rows are NOT read —
     // cross-epoch reduce happens at read/compaction
-    val winners = SnapTable.lwwWinners(aligned, reduceSchema,
-      math.max(1, snap.numBuckets / 4))
+    val winners = SnapTable.lwwWinners(aligned, reduceSchema, snap.numBuckets,
+      batchRowsHint)
     writeAndClaim(snap, edited, SnapTable.applyDerived(winners, derived), Nil, kind = "delta")
   }
 
   /** Number of delta files currently outstanding (compaction-policy input). */
   def deltaFileCount: Int = snapshot().files.count(_.kind == "delta")
 
-  /** Rewrite `files` as their LWW winners at `buckets` buckets in `parts`
-    * write tasks, keeping only winners that match `keep`, and commit them
-    * as `edited`. Rows are clustered by merge key within each bucket file:
-    * this is the read-optimization pass, so parquet row-group min/max stats
-    * line up with key ranges — point lookups ([[readKey]]) skip row
-    * groups, and key-adjacent text compresses better. Ingest never pays
-    * this sort. */
+  /** Rewrite `files` as their LWW winners hashed into `buckets` buckets,
+    * `written` of which receive rows, keeping only winners that match
+    * `keep`, and commit them as `edited`. Rows are clustered by merge key
+    * within each bucket file: this is the read-optimization pass, so
+    * parquet row-group min/max stats line up with key ranges — point
+    * lookups ([[readKey]]) skip row groups, and key-adjacent text
+    * compresses better. Ingest never pays this sort. */
   private def rewrite(spark: SparkSession, snap: Snapshot, edited: Snapshot,
-      files: Seq[DataFileEntry], buckets: Int, parts: Int,
+      files: Seq[DataFileEntry], buckets: Int, written: Int,
       keep: Option[Column] = None): Option[MergeResult.Committed] = {
     val winners = SnapTable.lwwWinners(readAligned(spark, snap, files, snap.schema)
-      .withColumn(BucketCol, bucketExpr(buckets)), snap.schema, parts)
+      .withColumn(BucketCol, bucketExpr(buckets)), snap.schema, written,
+      Some(files.map(_.rows).sum))
     writeAndClaim(snap, edited, keep.fold(winners)(winners.filter)
       .sortWithinPartitions((BucketCol +: Schemas.keyCols).map(col): _*), files)
   }
@@ -968,10 +975,30 @@ object SnapTable {
     * can never be mistaken for a corpse; mutable for tests only. */
   @volatile private[table] var tornManifestGraceMs: Long = 60000L
   /** Per-job raised ObjectHashAggregate fallback threshold for the merge
-    * reduce (see `withLwwAggConf`): keys per task there are winners per
-    * touched bucket, kept task-sized by layout (rebucket), so removing the
-    * sort fallback up to 4M keys cannot pin unbounded memory. */
+    * reduce (see `withLwwAggConf`): keys per task there stay within about
+    * one bucket's rows (kept task-sized by layout, rebucket) or
+    * [[TaskKeyBudget]] input rows, whichever is larger (see [[lwwTasks]]),
+    * so removing the sort fallback up to 4M keys cannot pin unbounded
+    * memory. */
   val LwwFallbackThreshold = 4194304
+
+  /** Keys one task slot may safely hold in ObjectHashAggregate's
+    * unspillable map: 262144 keys x ~1-2 KB transcript row ≈ 256-512 MB,
+    * inside a standard 4-core/8GB executor slot. The session-wide sort
+    * fallback threshold (`GraftSession`) and the input-rows-per-task bound
+    * of [[lwwTasks]]. */
+  val TaskKeyBudget = 262144
+
+  /** Task count of an LWW reduce-and-write stage that writes `buckets`
+    * buckets from `inputRows` rows: one task per core, more only when that
+    * would put more than [[TaskKeyBudget]] input rows in a task, and never
+    * more than the buckets written (the bucket is the file and co-location
+    * unit, so an extra task would write nothing). An unknown input size
+    * counts as unbounded — one task per bucket. */
+  private[graft] def lwwTasks(buckets: Int, inputRows: Option[Long], cores: Int): Int = {
+    val byRows = inputRows.fold(Long.MaxValue)(r => (r + TaskKeyBudget - 1) / TaskKeyBudget)
+    math.max(1, math.min(buckets.toLong, math.max(cores.toLong, byRows)).toInt)
+  }
 
   /** One lock object per SparkSession for `withLwwAggConf` (weak keys: a
     * dropped session's lock is collectable). */
@@ -994,16 +1021,21 @@ object SnapTable {
    * rows of one key can never land in two partitions) and Catalyst inserts
    * no second exchange between the reduce and the partitionBy write.
    * `PlanQualitySpec` pins the single-exchange plan.
+   *
+   * `buckets` is the number of buckets the frame writes and `inputRows` its
+   * row count when known; [[lwwTasks]] turns them into the task count, so
+   * a task reduces and writes several whole buckets (each still one file).
    */
   private[graft] def lwwWinners(df: DataFrame, target: StructType,
-      numParts: Int): DataFrame = {
+      buckets: Int, inputRows: Option[Long] = None): DataFrame = {
     val dataCols = target.fields.map(_.name)
     // native lww_winner instead of max_by: max_by's struct buffer is not
     // hash-aggregatable, which planned the whole reduce as a SortAggregate
     // (every change event sorted by key); the typed-imperative aggregate
     // keeps one (ts, lsn, row) state per key in ObjectHashAggregate's hash
     // map — one probe + compare per event, no sort
-    df.repartition(numParts, col(BucketCol))
+    val tasks = lwwTasks(buckets, inputRows, df.sparkSession.sparkContext.defaultParallelism)
+    df.repartition(tasks, col(BucketCol))
       .groupBy((graft.model.Schemas.mergeKeys :+ BucketCol).map(col): _*)
       .agg(graft.functions.LwwWinner.lwwWinner(
         struct(dataCols.toIndexedSeq.map(col): _*), col("ts"), col("lsn")).as("w"))
