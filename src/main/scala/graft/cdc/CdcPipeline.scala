@@ -64,7 +64,6 @@ final case class PipelineOptions(
       * replaces the file-count trigger (Spark's file source treats the two
       * as alternative admission limits). */
     maxBytesPerTrigger: Option[Long] = None,
-    saltedDedup: Boolean = false,
     /** "cow" rewrites touched buckets per epoch (read-optimized); "mor"
       * appends delta files per epoch with O(batch) commit IO and defers the
       * cross-epoch reduce to read/compaction (write-optimized — the
@@ -176,18 +175,15 @@ object CdcPipeline {
       val derived = if (opts.enrich) enrichmentColumns else graft.table.Derived.none
       // No pre-merge dedup pass: the merge's own LWW aggregation reduces the
       // batch (with map-side partials) in the same shuffle that folds in the
-      // stored rows. Optional salted pre-reduce for pathological dup skew.
-      val toMerge =
-        if (opts.saltedDedup) Dedup.lwwSalted(clean, Schemas.mergeKeys, Schemas.lwwOrder)
-        else clean
+      // stored rows.
       val mergeResult = opts.mergeMode match {
         // stats.clean (counted in the accounting pass above — no extra
         // scan) sizes the reduce's task count and lets the merge pick the
         // derived-column regime: re-derive winners while the replay batch
         // dominates, carry stored values once the table does
-        case "cow" => table.merge(toMerge, epoch, Some(touched), derived, Some(stats.clean))
+        case "cow" => table.merge(clean, epoch, Some(touched), derived, Some(stats.clean))
         case "mor" =>
-          val r = table.mergeDelta(toMerge, epoch, derived, Some(stats.clean))
+          val r = table.mergeDelta(clean, epoch, derived, Some(stats.clean))
           // Long arithmetic: a large configured threshold (e.g. MaxValue =
           // "never auto-compact") times the bucket count overflows Int and
           // would flip this into compact-every-epoch

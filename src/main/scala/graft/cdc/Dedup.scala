@@ -30,7 +30,8 @@ object Dedup {
    * events first reduce within `salt` sub-groups (spreading one key over
    * `salt` reducers), then the `salt` partials reduce to one winner.
    * Associative + commutative by construction (max over a total order), so
-   * it is exactly equivalent to [[lww]] — property-tested.
+   * it is exactly equivalent to [[lww]]; `q_cdc_lww_salted` checks it
+   * against its DuckDB oracle.
    *
    * Reference analogue: DataX spreads one hot source over channels via task
    * splitting (reference: core/.../container/util/JobAssignUtil.java:20-57);

@@ -24,15 +24,6 @@ import org.apache.spark.sql.expressions.Window
  */
 object Similarity {
 
-  /** Vector hashing/scoring is CPU-bound per row; a small corpus often
-    * arrives as ONE parquet row group, serializing the pipeline on one
-    * core at test scale. Fan out when the scan's parallelism is under half
-    * the cluster's; no-op at real scale (thousands of input splits). */
-  private def ensureParallelism(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions * 2 <= target) df.repartition(target) else df
-  }
-
   /** Dimension-specialized dot product — stays in whole-stage codegen.
     * Elements are cast scalar-wise: an array-level `cast("array<double>")`
     * gets inlined into consumers by projection collapse, re-converting the
@@ -63,7 +54,7 @@ object Similarity {
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int = 64,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")))
-    val c = ensureParallelism(corpus).select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
+    val c = Parallelism.ensure(corpus).select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
     val scored = c.join(q, col("query_id") =!= col("neighbor_id"))
       .withColumn("cos", cosim(col("qv"), col("cv")))
     val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
@@ -102,7 +93,7 @@ object Similarity {
     val planeRows = for (t <- 0 until tables; b <- 0 until nbits) yield
       struct(lit(t).as("tbl"), lit(b).as("bit"),
         array(planes(t)(b).map(lit(_)).toIndexedSeq: _*).as("plane"))
-    ensureParallelism(df).select(col(idCol), col(vecCol).as("__v"),
+    Parallelism.ensure(df).select(col(idCol), col(vecCol).as("__v"),
         explode(array(planeRows: _*)).as("pl"))
       .select(col(idCol), col("__v"), col("pl.tbl").as("tbl"), col("pl.bit").as("bit"),
         col("pl.plane").as("plane"))
@@ -160,7 +151,7 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
       centroidStride: Int = 10, nprobe: Int = 4, lloydIters: Int = 0,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val corpusPar = ensureParallelism(corpus)
+    val corpusPar = Parallelism.ensure(corpus)
     var cent0 = corpus
       .filter(pmod(col(idCol), lit(centroidStride)) === 0)
       .select(col(idCol).as("cid"), col(vecCol).as("cvec"))
@@ -287,7 +278,7 @@ object Similarity {
     * [[nearDupPairs]], never the production path. */
   def nearDupPairsExact(df: DataFrame, threshold: Double, dim: Int = 64,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val a = ensureParallelism(df).select(col(idCol).as("a"), col(vecCol).as("va"))
+    val a = Parallelism.ensure(df).select(col(idCol).as("a"), col(vecCol).as("va"))
     val b = df.select(col(idCol).as("b"), col(vecCol).as("vb"))
     a.join(b, col("a") < col("b"))
       .withColumn("cos", cosim(col("va"), col("vb")))

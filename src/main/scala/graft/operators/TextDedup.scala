@@ -15,17 +15,6 @@ import org.apache.spark.sql.functions._
  */
 object TextDedup {
 
-  /** Text sketching is CPU-bound per row, but a small corpus arrives as few
-    * parquet row groups (often ONE input partition at test scale), which
-    * serializes the whole shingle/hash pipeline on one core. Fan the rows
-    * out when the scan's parallelism is under half the cluster's — and do
-    * nothing at real scale, where thousands of input splits already exceed
-    * the core count (a blanket repartition would shuffle the full corpus). */
-  private def ensureParallelism(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions * 2 <= target) df.repartition(target) else df
-  }
-
   /** Exact dedup by content hash: one hash-groupBy, keeps the smallest id
     * per group (deterministic canonical representative). */
   def exact(df: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
@@ -41,7 +30,7 @@ object TextDedup {
     * per document (measured 5x on the LSH pipeline at sf0.1). CollapseProject
     * keeps the multi-referenced non-cheap split un-inlined. */
   def shingles(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
-    val withWords = ensureParallelism(df).select(col(idCol), col(textCol),
+    val withWords = Parallelism.ensure(df).select(col(idCol), col(textCol),
       split(col(textCol), "\\s+").as("__w"))
     val grams = expr(
       s"""transform(sequence(0, greatest(size(__w) - $k, 0)),
@@ -268,7 +257,7 @@ object TextDedup {
     // instead of 60 substring+instr string parses per (doc, token) row.
     // Signature bit j still reads bit (j%4) of hex digit (j/4+1): that digit
     // sits at bit 4*(14 - j/4) of the big-endian parsed value.
-    val toks = ensureParallelism(df).select(col(idCol),
+    val toks = Parallelism.ensure(df).select(col(idCol),
       explode(array_distinct(split(col(textCol), "\\s+"))).as("tok"))
       .withColumn("hv", expr(
         "cast(conv(substring(md5(tok), 1, 15), 16, 10) as bigint)"))
@@ -349,7 +338,7 @@ object TextDedup {
     * one-conv-per-half bit extraction as [[simhash]]. */
   private[operators] def simhashWide(df: DataFrame, idCol: String,
       textCol: String): DataFrame = {
-    val toks = ensureParallelism(df).select(col(idCol),
+    val toks = Parallelism.ensure(df).select(col(idCol),
       explode(array_distinct(split(col(textCol), "\\s+"))).as("tok"))
       .withColumn("__h", md5(col("tok")))
       .withColumn("hv0", expr("cast(conv(substring(__h, 1, 15), 16, 10) as bigint)"))
