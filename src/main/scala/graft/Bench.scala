@@ -4,7 +4,6 @@ import graft.cdc.{CdcPipeline, PipelineOptions}
 import graft.gen.{ChangeStreamGen, GenConfig}
 import graft.model.Schemas
 import graft.table.SnapTable
-import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.TimeUnit
 import scala.collection.concurrent.TrieMap
@@ -57,12 +56,6 @@ object Bench {
   private val TailChunks = 8
   private val TailConvs = 40000
 
-  private def newSession(cores: Int): SparkSession = {
-    val s = GraftSession.builder(cores).getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   /** One full CDC replay in THIS JVM (after a warmup pass over the first
     * chunk); prints `CDCRESULT <events> <sec>`. Child-process entry.
     * Modes: enriched / raw = whole-log single-epoch replay (CoW);
@@ -74,7 +67,7 @@ object Bench {
     * single drain trigger) — the ledger's O(chunks) driver-state claim
     * carried as an ingest-throughput number next to its state measurement. */
   private def cdcRunInProcess(cores: Int, logDir: String, mode: String): Unit = {
-    val spark = newSession(cores)
+    val spark = GraftSession.get(cores)
     val work = java.nio.file.Files.createTempDirectory(s"bench-cdc-$cores").toString
     val opts = mode match {
       case "enriched" => PipelineOptions(enrich = true)
@@ -489,7 +482,7 @@ object Bench {
         else {
           val cfg = GenConfig(numEvents = benchEvents,
             numConvs = (benchEvents / 500).toInt.max(100), chunks = 8)
-          val s = newSession(cpus)
+          val s = GraftSession.get(cpus)
           val tGen0 = System.nanoTime()
           ChangeStreamGen.writeChangelog(s, cfg, dir)
           java.nio.file.Files.createFile(marker)
@@ -569,7 +562,7 @@ object Bench {
     // JIT-warm minimum pass runs last, budget permitting) ------------------
     val skipQueries = sys.env.contains("SPARK_GRAFT_BENCH_SKIP_QUERIES")
     def queryPass(): Seq[(String, Double)] = {
-      val spark = newSession(cpus)
+      val spark = GraftSession.get(cpus)
       val out = scala.collection.mutable.ArrayBuffer[(String, Double)]()
       val it = headline.iterator
       var over = false

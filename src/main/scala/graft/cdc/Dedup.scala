@@ -13,17 +13,14 @@ import org.apache.spark.sql.functions._
 object Dedup {
 
   /**
-   * Single-pass LWW reduce. Spark's hash aggregate already performs a
-   * map-side partial `max_by` before the shuffle (two-phase reduce for
-   * free), so per-key skew only costs shuffle-side merge of tiny partials.
+   * Single-pass LWW reduce over (ts, lsn) through the native `lww_winner`
+   * aggregate, the same reduce every snapshot-table write and read runs.
+   * ObjectHashAggregate performs a map-side partial before the shuffle
+   * (two-phase reduce for free), so per-key skew only costs shuffle-side
+   * merge of tiny partials, and nothing is sorted.
    */
-  def lww(df: DataFrame, keys: Seq[String] = Seq("conv_id", "turn_idx"),
-      order: Seq[String] = Seq("ts", "lsn")): DataFrame = {
-    val dataCols = df.columns.toSeq
-    df.groupBy(keys.map(col): _*)
-      .agg(max_by(struct(dataCols.map(col): _*), struct(order.map(col): _*)).as("w"))
-      .select(dataCols.map(n => col(s"w.$n").as(n)): _*)
-  }
+  def lww(df: DataFrame, keys: Seq[String] = Seq("conv_id", "turn_idx")): DataFrame =
+    graft.functions.LwwWinner.winners(df, keys, df.columns.toSeq)
 
   /**
    * Explicit salted two-phase LWW for pathological key skew: a hot key's

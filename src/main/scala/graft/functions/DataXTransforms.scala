@@ -32,9 +32,6 @@ object DataXTransforms {
       .when(length(c) < startIdx, lit(null).cast("string"))
       .otherwise(substring(c, startIdx + 1, len))
 
-  /** Rows dx_substr would route to the dirty channel. */
-  def dxSubstrDirty(c: Column, startIdx: Int): Column = c.isNotNull && length(c) < startIdx
-
   /** dx_pad(col, "l"|"r", len, padStr): null -> "", truncate over-long. */
   def dxPad(c: Column, leftOrRight: String, len: Int, padStr: String): Column = {
     val s = coalesce(c, lit(""))
@@ -103,11 +100,6 @@ object DataXTransforms {
     * OverFlowUtil.java:23-37): values outside Long range are errors, not
     * silent wraps. try_cast yields null -> routable to dirty. */
   def checkedLong(c: Column): Column = c.try_cast("long")
-
-  /** Empty-string -> null on numeric write (reference:
-    * CommonRdbmsWriter.java:434-439). */
-  def emptyToNullNumeric(c: Column): Column =
-    when(trim(c.cast("string")) === "", lit(null)).otherwise(c).try_cast("double")
 
   // ---- transform chain (job-config parity) --------------------------------
 

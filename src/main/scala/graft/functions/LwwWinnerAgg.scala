@@ -1,7 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftExprBridge
+import org.apache.spark.sql.{Column, DataFrame, GraftExprBridge}
+import org.apache.spark.sql.functions.{col, struct}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -43,13 +43,13 @@ case class LwwWinner(
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     val ordOk = Seq(ts, lsn).forall(e =>
-      e.dataType == LongType || e.dataType == TimestampType)
+      e.dataType == LongType || e.dataType == TimestampType || e.dataType == TimestampNTZType)
     if (!value.dataType.isInstanceOf[StructType])
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
         s"lww_winner value must be a struct, got ${value.dataType.catalogString}")
     else if (!ordOk)
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        "lww_winner ordering columns must be timestamp/bigint")
+        "lww_winner ordering columns must be timestamp/timestamp_ntz/bigint")
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
   }
 
@@ -134,4 +134,12 @@ object LwwWinner {
     GraftExprBridge.column(
       LwwWinner(GraftExprBridge.expression(value), GraftExprBridge.expression(ts),
         GraftExprBridge.expression(lsn)).toAggregateExpression())
+
+  /** Per group of `keys`, the `cols` of the row with the largest (ts, lsn):
+    * the one LWW reduce of the engine (merge, read-time MoR reduce, sync,
+    * `Dedup.lww`). Keys that are not among `cols` lead the output. */
+  def winners(df: DataFrame, keys: Seq[String], cols: Seq[String]): DataFrame =
+    df.groupBy(keys.map(col): _*)
+      .agg(lwwWinner(struct(cols.map(col): _*), col("ts"), col("lsn")).as("w"))
+      .select(keys.filterNot(cols.contains).map(col) ++ cols.map(n => col(s"w.$n").as(n)): _*)
 }

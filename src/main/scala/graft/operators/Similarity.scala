@@ -32,10 +32,6 @@ object Similarity {
     (0 until dim).map(i =>
       a.getItem(i).cast("double") * b.getItem(i).cast("double")).reduce(_ + _)
 
-  /** Generic (any-dimension) dot — interpreted eval; avoid in hot paths. */
-  def dotDyn(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
-
   def norm(a: Column, dim: Int): Column = sqrt(dot(a, a, dim))
 
   def cosine(a: Column, b: Column, dim: Int): Column =

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /**
@@ -28,10 +28,6 @@ object TextAnalysis {
     * native [[graft.functions.TextStatsExpr]] — one scan, no HOF fallbacks. */
   def textStats(c: Column): Column =
     graft.functions.TextStatsExpr.textStats(c, langCodes.map(stopwords))
-
-  /** Stopword-hit count for one language. */
-  def stopwordHits(c: Column, lang: String): Column =
-    textStats(c).getField("hits").getItem(langCodes.indexOf(lang))
 
   /**
    * Language ID: argmax of stopword hits across known languages; ties and
@@ -102,15 +98,4 @@ object TextAnalysis {
     * word set — catches shuffled near-dups. */
   def vocabFingerprint(c: Column): Column =
     md5(concat_ws(" ", array_sort(array_distinct(words(c)))))
-
-  /** Full per-document analysis frame. */
-  def analyze(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val c = col(textCol)
-    df.withColumn("lang_pred", languageId(c))
-      .withColumn("n_tokens", tokenCount(c))
-      .withColumn("n_words", wordCount(c))
-      .withColumn("quality", qualityScore(c))
-      .withColumn("fingerprint", fingerprint(c))
-      .withColumn("vocab_fingerprint", vocabFingerprint(c))
-  }
 }

@@ -46,10 +46,16 @@ object TextDedup {
    * shingle-join to count intersections, then sizes via a broadcast join.
    * At 100 TB this is only run on LSH candidates; standalone it is
    * O(sum over shingle of df^2) and suits corpus slices.
+   *
+   * The shingles are not cached: the result is lazy, so a cache could never
+   * be released and would pin the relation in the session for its
+   * lifetime. The two join sides are one plan under different aliases, so
+   * exchange reuse shuffles the shingles once for both; only the size
+   * count re-derives them.
    */
   def ngramJaccardPairs(df: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", k: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val sh = shingles(df, idCol, textCol, k).cache()
+    val sh = shingles(df, idCol, textCol, k)
     val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
     val a = sh.select(col(idCol).as("a"), col("shingle"))
     val b = sh.select(col(idCol).as("b"), col("shingle"))

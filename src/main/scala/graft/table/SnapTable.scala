@@ -367,7 +367,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
 
   /** Current winner rows (tombstones retained, envelope retained). For a
     * pure-base table this is a plain scan; when merge-on-read deltas exist,
-    * the per-key LWW reduce runs at read time (same `max_by (ts, lsn)` the
+    * the per-key LWW reduce runs at read time (same `lww_winner (ts, lsn)` the
     * CoW merge applies at write time, so both modes expose identical
     * state). */
   def readRaw(spark: SparkSession): DataFrame = {
@@ -377,13 +377,8 @@ final class SnapTable private (val root: String, fs: FileSystem) {
   }
 
   /** LWW winners of a raw (possibly multi-version) frame. */
-  private def lwwReduce(df: DataFrame, target: StructType): DataFrame = {
-    val dataCols = target.fields.map(_.name).toSeq
-    df.groupBy(Schemas.keyCols.map(col): _*)
-      .agg(graft.functions.LwwWinner.lwwWinner(
-        struct(dataCols.map(col): _*), col("ts"), col("lsn")).as("w"))
-      .select(dataCols.map(n => col(s"w.$n").as(n)): _*)
-  }
+  private def lwwReduce(df: DataFrame, target: StructType): DataFrame =
+    graft.functions.LwwWinner.winners(df, Schemas.keyCols, target.fieldNames.toSeq)
 
   /** User-facing state: tombstones dropped. */
   def read(spark: SparkSession): DataFrame = readRaw(spark).filter(col("op") =!= "D").drop("op")
@@ -1028,18 +1023,9 @@ object SnapTable {
    */
   private[graft] def lwwWinners(df: DataFrame, target: StructType,
       buckets: Int, inputRows: Option[Long] = None): DataFrame = {
-    val dataCols = target.fields.map(_.name)
-    // native lww_winner instead of max_by: max_by's struct buffer is not
-    // hash-aggregatable, which planned the whole reduce as a SortAggregate
-    // (every change event sorted by key); the typed-imperative aggregate
-    // keeps one (ts, lsn, row) state per key in ObjectHashAggregate's hash
-    // map — one probe + compare per event, no sort
     val tasks = lwwTasks(buckets, inputRows, df.sparkSession.sparkContext.defaultParallelism)
-    df.repartition(tasks, col(BucketCol))
-      .groupBy((graft.model.Schemas.mergeKeys :+ BucketCol).map(col): _*)
-      .agg(graft.functions.LwwWinner.lwwWinner(
-        struct(dataCols.toIndexedSeq.map(col): _*), col("ts"), col("lsn")).as("w"))
-      .select((col(BucketCol) +: dataCols.map(n => col(s"w.$n").as(n))).toIndexedSeq: _*)
+    graft.functions.LwwWinner.winners(df.repartition(tasks, col(BucketCol)),
+      graft.model.Schemas.mergeKeys :+ BucketCol, target.fieldNames.toSeq)
   }
 
   /** Data directory for one commit ATTEMPT: version-prefixed for humans,

@@ -1,24 +1,25 @@
 package graft
 
-/** Driver-contract smoke: every queries entry runs at sf0.001; entries with
-  * an oracle share its column names; entry() returns rows. */
+/** Contract smoke: every registry entry runs at sf0.001; registry names are
+  * unique; entry() returns rows. */
 class EntrySpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
-  test("oracleSql keys are a subset of queries keys") {
-    val missing = SparkEntry.oracleSql.keySet.diff(SparkEntry.queries.keySet)
-    assert(missing.isEmpty, s"oracleSql without queries entry: $missing")
+  // the name-keyed views are built with toMap, which would silently drop a
+  // duplicate entry
+  test("registry names are unique") {
+    val dups = SparkEntry.registry.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    assert(dups.isEmpty, s"duplicate registry names: $dups")
   }
 
   // queries that legitimately return few/zero rows at tiny scale
   private val mayBeEmpty = Set("q_anti_join")
 
-  for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1) if name != "q_cdc_pipeline") {
-    test(s"$name runs at sf0.001") {
-      val df = fn(spark, sf)
-      val n = df.count()
-      if (!mayBeEmpty(name)) assert(n > 0, s"$name returned 0 rows")
+  for (q <- SparkEntry.registry.sortBy(_.name)) {
+    test(s"${q.name} runs at sf0.001") {
+      val n = q.run(spark, sf).count()
+      if (!mayBeEmpty(q.name)) assert(n > 0, s"${q.name} returned 0 rows")
     }
   }
 

@@ -105,6 +105,14 @@ class OperatorsSpec extends SparkSpec {
     assert(lsh == exact)
   }
 
+  test("exact jaccard pairs leave nothing cached once collected") {
+    spark.catalog.clearCache() // this suite's fixture frames are cached
+    val fresh = spark.read.parquet(s"$sf/documents.parquet")
+    assert(TextDedup.ngramJaccardPairs(fresh, threshold = 0.5).collect().nonEmpty)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "ngramJaccardPairs pinned a relation in the session's CacheManager")
+  }
+
   test("prefix-filtered jaccard join == brute-force jaccard join") {
     // the prefix filter is lossless: identical (a, b, jaccard) output,
     // only the candidate generation changes (rarest-gram prefixes)

@@ -47,11 +47,10 @@ class PlanQualitySpec extends SparkSpec {
   test("LWW dedup does map-side partial aggregation") {
     val df = SparkEntry.queries("q_cdc_lww")(spark, sf)
     val s = planString(df)
-    // partial max_by below the exchange, final above (max_by's struct buffer
-    // plans as SortAggregate; the partial/final split is what matters)
-    assert(s.contains("partial_max_by"), s"expected map-side partial max_by:\n$s")
+    // partial lww_winner below the exchange, final above
+    assert(s.contains("partial_lww_winner"), s"expected map-side partial lww_winner:\n$s")
     val exchange = s.indexOf("Exchange hashpartitioning")
-    val partial = s.indexOf("partial_max_by")
+    val partial = s.indexOf("partial_lww_winner")
     assert(exchange >= 0 && partial > exchange,
       s"partial agg must sit below the shuffle:\n$s")
   }
@@ -160,10 +159,12 @@ class PlanQualitySpec extends SparkSpec {
     val events = Seq(
       graft.model.ChangeEvent("c1", 1, "user", "x", null,
         new java.sql.Timestamp(1000), 1, "I")).toDF()
-    // dedup plan: single shuffle on the merge keys, no extra exchanges
+    // dedup plan: single shuffle on the merge keys, no extra exchanges, and
+    // the native hash-aggregated reduce — no SortAggregate sorting every event
     val dedup = graft.cdc.Dedup.lww(events)
-    val exchanges = dedup.queryExecution.executedPlan.toString()
-      .linesIterator.count(_.contains("Exchange hashpartitioning"))
+    val plan = dedup.queryExecution.executedPlan.toString()
+    val exchanges = plan.linesIterator.count(_.contains("Exchange hashpartitioning"))
     assert(exchanges <= 1, s"LWW dedup must shuffle at most once, saw $exchanges")
+    assert(!plan.contains("SortAggregate"), s"LWW dedup must not sort-aggregate:\n$plan")
   }
 }
