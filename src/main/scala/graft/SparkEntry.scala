@@ -787,7 +787,7 @@ object SparkEntry {
       // the real job layer (dirtyreader -> parquetwriter) and gate the
       // replayed rows — reason column included — against SQL reproducing
       // the rule, the cap and the ordering
-      val ev = changelog(s, dir).withColumn("conv_id",
+      val ev = instantChangelog(s, dir).withColumn("conv_id",
           when(col("lsn") % 97 === 0, lit(null)).otherwise(col("conv_id")))
       val work = java.nio.file.Files.createTempDirectory("graft-dirtyq").toString
       val table = SnapTable.create(s, s"$work/t", Schemas.payloadV2, numBuckets = 16)
@@ -873,14 +873,14 @@ object SparkEntry {
 
     // flagship: the REAL streaming path (multi-epoch foreachBatch,
     // checkpoint, dirty gate, LWW dedup, bucketed snapshot MERGE)
-    cdcState("q_cdc_pipeline") { (s, chg) =>
+    cdcState("q_cdc_pipeline", streamed = true) { (s, chg) =>
       streamReplay(s, Seq(chg), filesPerPart = 16, Schemas.payloadV2, "cow")
     },
 
     // merge-on-read variant: O(batch) delta commits, NO compaction before
     // the read — the read-time LWW reduce must reproduce the same oracle
     // state as the copy-on-write path
-    cdcState("q_cdc_pipeline_mor") { (s, chg) =>
+    cdcState("q_cdc_pipeline_mor", streamed = true) { (s, chg) =>
       streamReplay(s, Seq(chg), filesPerPart = 16, Schemas.payloadV2, "mor")
     },
 
@@ -978,7 +978,7 @@ object SparkEntry {
     // column (payload v1) and the high-lsn files carry it; the table is
     // created at payload v1 and must evolve during the replay, with v1-file
     // winners surfacing tool = null
-    cdcState("q_cdc_schema_evo", tool = true) { (s, chg) =>
+    cdcState("q_cdc_schema_evo", tool = true, streamed = true) { (s, chg) =>
       val half = maxLsn(chg) / 2
       val toolOf = concat(col("role"), lit("#"), pmod(col("lsn"), lit(7)).cast("string"))
       streamReplay(s, Seq(chg.filter(col("lsn") < half).drop("tool"),
@@ -987,10 +987,9 @@ object SparkEntry {
     }
   )
 
-  /** Name-keyed views of [[registry]]. */
+  /** Name-keyed view of [[registry]]'s run functions. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map(q => q.name -> q.run).toMap
-  def oracleSql: Map[String, String] = registry.map(q => q.name -> q.oracle).toMap
 
   // ---------------------------------------------------------------------
   // CDC state: one changelog, one projection, one oracle
@@ -1000,9 +999,9 @@ object SparkEntry {
     * transcript envelope: event_id is the LSN, (user_id, event_id % 50) the
     * merge key, and every 17th event a delete. Deterministic and 1:1
     * SQL-expressible (the `chg` CTE of [[cdcStateOracle]] mirrors it), so
-    * every query replaying it is DuckDB-oracle-gated. Parquet surfaces `ts`
-    * as TIMESTAMP_NTZ (Spark 4 NTZ inference); the cast gives the table
-    * envelope's instant type, the same micros under the UTC session. */
+    * every query replaying it is DuckDB-oracle-gated. `ts` keeps the type
+    * parquet gives it: TIMESTAMP_NTZ (pyarrow's `timestamp[us]`, read by
+    * Spark 4 NTZ inference). */
   private def changelog(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "events").select(
       col("user_id").cast("string").as("conv_id"),
@@ -1010,20 +1009,29 @@ object SparkEntry {
       col("event_type").as("role"),
       col("props").as("text"),
       lit(null).cast("string").as("tool"),
-      col("ts").cast("timestamp").as("ts"),
+      col("ts"),
       col("event_id").as("lsn"),
       when(pmod(col("event_id"), lit(17)) === 0, "D").otherwise("U").as("op"))
 
-  /** A CDC-state entry: `build` applies [[changelog]] through one engine
+  /** [[changelog]] with `ts` cast to the table envelope's instant type (the
+    * same micros under the UTC session), as the batch apply needs it. */
+  private def instantChangelog(s: SparkSession, dir: String): DataFrame =
+    changelog(s, dir).withColumn("ts", col("ts").cast("timestamp"))
+
+  /** A CDC-state entry: `build` applies the changelog through one engine
     * path and returns the live state it reads back; the entry projects that
     * state (plus `tool` when set) in key order and is gated on
-    * [[cdcStateOracle]] with the same options. */
-  private def cdcState(name: String, firstHalfOnly: Boolean = false, tool: Boolean = false)(
-      build: (SparkSession, DataFrame) => DataFrame): Query =
+    * [[cdcStateOracle]] with the same options. `streamed` entries get
+    * [[changelog]] as parquet types it and write it as log files, so the
+    * stream source's envelope-schema read is what converts its NTZ `ts`;
+    * the others get [[instantChangelog]]. */
+  private def cdcState(name: String, firstHalfOnly: Boolean = false, tool: Boolean = false,
+      streamed: Boolean = false)(build: (SparkSession, DataFrame) => DataFrame): Query =
     Query(name, cdcStateOracle(firstHalfOnly, tool)) { (s, dir) =>
       val cols = Seq(col("conv_id"), col("turn_idx"), col("role"), col("text"),
         unix_micros(col("ts")).as("ts_us"), col("lsn")) ++ (if (tool) Seq(col("tool")) else Nil)
-      build(s, changelog(s, dir)).select(cols: _*).orderBy("conv_id", "turn_idx")
+      val chg = if (streamed) changelog(s, dir) else instantChangelog(s, dir)
+      build(s, chg).select(cols: _*).orderBy("conv_id", "turn_idx")
     }
 
   /** DuckDB oracle of the CDC-state entries: [[changelog]] as the `chg`
