@@ -142,8 +142,10 @@ object CdcPipeline {
       // One aggregation pass yields BOTH the per-source-partition offset
       // lineage and the dirty accounting (no extra scans of the batch).
       // collect_set of the merge bucket rides along so the merge can skip
-      // its own touched-bucket scan
-      val bucketCol = table.bucketExpr(table.numBuckets)
+      // its own touched-bucket scan (the hint names the bucket count it
+      // was counted under)
+      val numBuckets = table.snapshot().numBuckets
+      val bucketCol = table.bucketExpr(numBuckets)
       val acct = tagged
         .groupBy(spark_partition_id().as("p"), col(Dirty.ReasonCol))
         .agg(count(lit(1)).as("rows"), min("lsn").as("lo"), max("lsn").as("hi"),
@@ -181,14 +183,16 @@ object CdcPipeline {
         // scan) sizes the reduce's task count and lets the merge pick the
         // derived-column regime: re-derive winners while the replay batch
         // dominates, carry stored values once the table does
-        case "cow" => table.merge(clean, epoch, Some(touched), derived, Some(stats.clean))
+        case "cow" =>
+          table.merge(clean, epoch, Some((numBuckets, touched)), derived, Some(stats.clean))
         case "mor" =>
           val r = table.mergeDelta(clean, epoch, derived, Some(stats.clean))
           // Long arithmetic: a large configured threshold (e.g. MaxValue =
           // "never auto-compact") times the bucket count overflows Int and
           // would flip this into compact-every-epoch
-          if (table.deltaFileCount.toLong >
-              opts.morCompactDeltasPerBucket.toLong * table.numBuckets)
+          val snap = table.snapshot()
+          if (snap.files.count(_.kind == "delta").toLong >
+              opts.morCompactDeltasPerBucket.toLong * snap.numBuckets)
             table.compact(batch.sparkSession)
           r
         case other => throw new IllegalArgumentException(s"mergeMode '$other'")

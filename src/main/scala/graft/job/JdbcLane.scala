@@ -210,29 +210,36 @@ object JdbcLane {
             if (pts.isEmpty) Seq("1=1")
             else JdbcSplit.sampledSlices(pk, pts, quoted = false).map(_.toSql)
           } else {
-            // non-numeric pk: approxQuantile is numeric-only, so sort-sample
-            // instead — range-sort the single probe column (distributed:
-            // Spark's range partitioner samples the key space) and collect
-            // only the slice-boundary rows by global rank. The boundary
-            // values themselves are exact quantiles, so a skewed string pk
-            // still yields balanced slices.
-            // persist the SORTED probe: count, zipWithIndex's offset pass
-            // and the boundary collect otherwise each re-run the (single-
-            // connection, dominant-cost) JDBC scan — one scan, three reads
-            val sorted = probe.na.drop(Seq(gpk.name)).sort(gpk.name).persist()
+            // non-numeric pk: approxQuantile is numeric-only, so take the
+            // slice-boundary values at their global ranks in the DATABASE's
+            // order (ORDER BY): the slice predicates compare under its
+            // collation, which need not be Java String order. The boundary
+            // values are exact quantiles, so a skewed string pk still yields
+            // balanced slices; only they are kept on the driver.
+            val qpk = dialect.quoteColumn(pk)
+            val from = s" FROM ${dialect.quoteTable(table)} WHERE " +
+              where.map(w => s"($w) AND ").getOrElse("") + s"$qpk IS NOT NULL"
+            val c = connectWithRetry(url, user, pass, sessionSqls)
             try {
-              val n = sorted.count()
-              if (n == 0) Seq("1=1")
-              else {
-                val ranks = (1 until slices).map(i => i * n / slices)
-                  .filter(r => r > 0 && r < n).toSet
-                val pts = sorted.rdd.zipWithIndex()
-                  .filter { case (_, idx) => ranks.contains(idx) }
-                  .map(_._1.get(0).toString).collect().toSeq.distinct
-                if (pts.isEmpty) Seq("1=1")
-                else JdbcSplit.sampledSlices(pk, pts, quoted = true).map(_.toSql)
+              val count = c.createStatement().executeQuery(s"SELECT COUNT(*)$from")
+              count.next()
+              val n = count.getLong(1)
+              val ranks = (1 until slices).map(i => i * n / slices)
+                .filter(r => r > 0 && r < n).toSet
+              val ordered = c.createStatement()
+              // stream the ordered column (MySQL buffers a whole result
+              // set unless asked to stream)
+              ordered.setFetchSize(props.getProperty("fetchsize").toInt)
+              val rs = ordered.executeQuery(s"SELECT $qpk$from ORDER BY $qpk")
+              val pts = scala.collection.mutable.ArrayBuffer[String]()
+              var idx = 0L
+              while (idx <= ranks.maxOption.getOrElse(-1L) && rs.next()) {
+                if (ranks(idx)) pts += rs.getObject(1).toString
+                idx += 1
               }
-            } finally sorted.unpersist(): Unit
+              if (pts.isEmpty) Seq("1=1")
+              else JdbcSplit.sampledSlices(pk, pts.toSeq, quoted = true).map(_.toSql)
+            } finally c.close()
           }
       }
     } else rangeSlices(url, user, pass, dialect, pk, table, where, slices, sessionSqls)

@@ -126,9 +126,10 @@ object JdbcSplit {
       isNullSlice = true)) else Nil)
   }
 
-  /** Sampled split: caller-provided ascending quantile points become range
+  /** Sampled split: caller-provided quantile points become range
     * boundaries (first slice unbounded below, last unbounded above), plus
-    * the NULL slice — the Oracle SAMPLE() strategy's shape. */
+    * the NULL slice — the Oracle SAMPLE() strategy's shape. Quoted points
+    * must arrive in the database's ascending order. */
   def sampledSlices(pk: String, points: Seq[String], quoted: Boolean,
       nullSlice: Boolean = true): Seq[Slice] = {
     require(points.nonEmpty, "sampled split needs at least one point")
@@ -136,11 +137,13 @@ object JdbcSplit {
     // approxQuantile BigInts) — a lexicographic sort misorders mixed-width
     // values ("1000" < "500"), which turns the sliding ranges into
     // overlapping slices that read rows twice; sort an unquoted pk by
-    // numeric value. A QUOTED pk compares as a string in the database, so
-    // its points keep string order even when they all look numeric.
+    // numeric value. A QUOTED pk compares under the database's collation
+    // (case-insensitive, locale), which no Java sort reproduces, so its
+    // points keep the order the database returned them in (ORDER BY).
     val distinct = points.distinct
     val sorted =
-      if (!quoted && distinct.forall(p => scala.util.Try(BigDecimal(p)).isSuccess))
+      if (quoted) distinct
+      else if (distinct.forall(p => scala.util.Try(BigDecimal(p)).isSuccess))
         distinct.sortBy(BigDecimal(_))
       else distinct.sorted
     val first = Slice(pk, None, Some(sorted.head), hiInclusive = false, quoted = quoted)

@@ -148,21 +148,24 @@ final class SnapTable private (val root: String, fs: FileSystem) {
     * is always whole). */
   def currentVersion: Long = {
     val ptr = if (fs.exists(currentPtr)) readString(currentPtr).trim.toLong else 0L
-    val snaps = Option(fs.globStatus(new Path(metaDir, "snap-*.json"))).getOrElse(Array())
-    val ahead = snaps
-      .map(_.getPath.getName.stripPrefix("snap-").stripSuffix(".json").toLong)
-      .filter(_ > ptr).sorted(Ordering[Long].reverse)
-    ahead.find(v =>
-      try { snapshot(v); true } catch { case scala.util.control.NonFatal(_) => false }
-    ).getOrElse(ptr)
+    history.filter(_ > ptr).reverse.find(parsed(_).isDefined).getOrElse(ptr)
   }
 
   def snapshot(version: Long = currentVersion): Snapshot =
     Serialization.read[Snapshot](readString(snapPath(version)))
 
+  /** The manifest of `version`, or None when it is torn (a crashed
+    * writer's unparseable claim) or gone. */
+  private def parsed(version: Long): Option[Snapshot] =
+    try Some(snapshot(version)) catch { case scala.util.control.NonFatal(_) => None }
+
+  /** Every listed manifest version, ascending (torn claims included). */
   def history: Seq[Long] =
     Option(fs.globStatus(new Path(metaDir, "snap-*.json"))).getOrElse(Array())
       .map(_.getPath.getName.stripPrefix("snap-").stripSuffix(".json").toLong).sorted.toSeq
+
+  /** Each listed manifest with its parse; None marks a torn claim. */
+  private def manifests: Seq[(Long, Option[Snapshot])] = history.map(v => v -> parsed(v))
 
   private[table] def commit(s: Snapshot): Unit =
     require(tryCommit(s), s"snapshot ${s.version} already exists (concurrent writer)")
@@ -220,28 +223,26 @@ final class SnapTable private (val root: String, fs: FileSystem) {
     true
   }
 
-  /** True if `p` is a TORN manifest (unparseable JSON) older than
+  /** True if version `v`'s manifest is TORN (unparseable JSON) and older than
     * [[SnapTable.tornManifestGraceMs]] — a crashed writer's corpse. A
     * parseable file is a legitimate commit; a young unparseable file may be
     * a live writer between claim and close (the grace window is the
     * correctness boundary: a writer slower than it could otherwise be
     * skipped over and lose its commit). */
-  private def tornPastGrace(p: Path): Boolean = {
-    val st = try fs.getFileStatus(p) catch { case _: java.io.IOException => return false }
-    val parseable =
-      try { Serialization.read[Snapshot](readString(p)); true }
-      catch { case scala.util.control.NonFatal(_) => false }
-    if (parseable) return false
-    System.currentTimeMillis() - st.getModificationTime >= SnapTable.tornManifestGraceMs
+  private def tornPastGrace(v: Long): Boolean = {
+    val st = try fs.getFileStatus(snapPath(v))
+      catch { case _: java.io.IOException => return false }
+    parsed(v).isEmpty &&
+      System.currentTimeMillis() - st.getModificationTime >= SnapTable.tornManifestGraceMs
   }
 
-  /** Delete `p` if [[tornPastGrace]]; retention-path GC only — the commit
+  /** Delete version `v`'s manifest if [[tornPastGrace]]; retention-path GC only — the commit
     * claim path never deletes (see [[tryCommit]]). Safe there: writers
     * allocate versions via [[nextVersion]], which only targets a number
     * below an existing claim file after that file is already gone. */
-  private def reclaimTorn(p: Path): Boolean =
-    tornPastGrace(p) &&
-      (try fs.delete(p, false) catch { case _: java.io.IOException => false })
+  private def reclaimTorn(v: Long): Boolean =
+    tornPastGrace(v) &&
+      (try fs.delete(snapPath(v), false) catch { case _: java.io.IOException => false })
 
   /** Next commit target: the first version past `cur` whose slot is either
     * free or held by a torn-past-grace corpse (skipped — the crashed writer
@@ -251,7 +252,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
     * for the claimant to finish (new current snapshot) or die (grace). */
   private def nextVersion(cur: Long): Long = {
     var v = cur + 1
-    while (fs.exists(snapPath(v)) && tornPastGrace(snapPath(v))) v += 1
+    while (fs.exists(snapPath(v)) && tornPastGrace(v)) v += 1
     v
   }
 
@@ -349,8 +350,6 @@ final class SnapTable private (val root: String, fs: FileSystem) {
       props = snap.props + (PropBucketFn -> version.toString)))
   }
 
-  private[graft] def numBuckets: Int = snapshot().numBuckets
-
   /** Read the given files, aligning every physical schema generation to the
     * target schema (missing columns -> null, widened types -> cast). */
   private def readAligned(spark: SparkSession, snap: Snapshot,
@@ -372,24 +371,28 @@ final class SnapTable private (val root: String, fs: FileSystem) {
     * state). */
   def readRaw(spark: SparkSession): DataFrame = {
     val snap = snapshot()
-    val all = readAligned(spark, snap, snap.files, snap.schema)
-    if (!snap.files.exists(_.kind == "delta")) all else lwwReduce(all, snap.schema)
+    readWinners(spark, snap, snap.files, live = false)
   }
 
-  /** LWW winners of a raw (possibly multi-version) frame. */
-  private def lwwReduce(df: DataFrame, target: StructType): DataFrame =
-    graft.functions.LwwWinner.winners(df, Schemas.keyCols, target.fieldNames.toSeq)
+  /** The winner rows among `files` of `snap`: rows matching `where` (a
+    * filter applied below the reduce), LWW-reduced iff a delta is among
+    * the files; `live` drops tombstones and the `op` column (user reads). */
+  private def readWinners(spark: SparkSession, snap: Snapshot, files: Seq[DataFileEntry],
+      where: Option[Column] = None, live: Boolean = true): DataFrame = {
+    val all = readAligned(spark, snap, files, snap.schema)
+    val matched = where.fold(all)(all.filter)
+    val reduced = if (!files.exists(_.kind == "delta")) matched
+      else graft.functions.LwwWinner.winners(matched, Schemas.keyCols, snap.schema.fieldNames.toSeq)
+    if (live) reduced.filter(col("op") =!= "D").drop("op") else reduced
+  }
 
   /** User-facing state: tombstones dropped. */
-  def read(spark: SparkSession): DataFrame = readRaw(spark).filter(col("op") =!= "D").drop("op")
+  def read(spark: SparkSession): DataFrame = readVersion(spark, currentVersion)
 
   /** Time travel. */
   def readVersion(spark: SparkSession, version: Long): DataFrame = {
     val snap = snapshot(version)
-    val all = readAligned(spark, snap, snap.files, snap.schema)
-    val reduced = if (!snap.files.exists(_.kind == "delta")) all
-      else lwwReduce(all, snap.schema)
-    reduced.filter(col("op") =!= "D").drop("op")
+    readWinners(spark, snap, snap.files)
   }
 
   /**
@@ -411,10 +414,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
   def readVersionHistory(spark: SparkSession): DataFrame = {
     // skip torn claims from crashed writers (they were never committed
     // versions; retention GCs them past the grace window)
-    val snaps = history.filter(_ > 0).sorted.flatMap { v =>
-      try Seq((v, snapshot(v)))
-      catch { case scala.util.control.NonFatal(_) => Nil }
-    }
+    val snaps = manifests.collect { case (v, Some(s)) if v > 0 => (v, s) }
     require(snaps.nonEmpty, "table has no committed data versions")
     // the schema lattice only adds nullable columns / widens, so the newest
     // retained schema is the union the old per-version unionByName produced
@@ -451,30 +451,44 @@ final class SnapTable private (val root: String, fs: FileSystem) {
    *   MERGE INTO t USING batch s ON t.conv_id=s.conv_id AND t.turn_idx=s.turn_idx
    *   WHEN MATCHED AND (s.ts, s.lsn) > (t.ts, t.lsn) THEN UPDATE SET *
    *   WHEN NOT MATCHED THEN INSERT *        -- deletes become tombstones
+   *
+   * `knownTouched` is an optional precomputed touched-bucket hint,
+   * `(numBuckets, bucket ids)`: the pipeline derives it in the same
+   * aggregation pass as its lineage accounting, saving a scan, and an
+   * attempt uses it only when its own snapshot has that bucket count (a
+   * concurrent [[rebucket]] changes the layout under it); otherwise the
+   * attempt recomputes the set. Write-time [[DerivedColumn]]s are computed
+   * on winner rows AFTER the reduce, and `batchRowsHint` picks how stored
+   * rows' derived values travel through it (see [[reduceAndWrite]]) and
+   * sizes the reduce (see [[SnapTable.lwwTasks]]).
    */
-  def merge(batch: DataFrame, epoch: Long): MergeResult = merge(batch, epoch, None)
-
-  /** Variant with a precomputed touched-bucket set (the pipeline derives it
-    * in the same aggregation pass as its lineage accounting, saving a scan)
-    * and optional write-time [[DerivedColumn]]s, computed on winner rows
-    * AFTER the reduce: deriving per change event does ~10x the evals (the
-    * bench stream folds 10.5M events to 861k winners), and even carrying
-    * the columns as nulls through the reduce costs more than recomputing
-    * them (three UnsafeRow slots on every shuffled+sorted row ≈ 5s/epoch at
-    * 10M events vs ~1s to re-derive a rewritten bucket's winners), so the
-    * reduce runs on the bare envelope and the derivation projects onto its
-    * output. That trade inverts at steady state — when the rewritten
-    * buckets' surviving rows outnumber the batch, re-deriving every
-    * survivor (a full textStats pass over its text) dominates — so a
-    * caller that knows the batch size (the pipeline counts it in its
-    * accounting pass) passes `batchRowsHint` and the merge carries STORED
-    * rows' persisted derived values through the reduce instead whenever
-    * storedRewriteRows > batchRows. The hint also sizes the reduce (see
-    * [[SnapTable.lwwTasks]]). */
-  def merge(batch: DataFrame, epoch: Long, knownTouched: Option[Set[Int]],
+  def merge(batch: DataFrame, epoch: Long, knownTouched: Option[(Int, Set[Int])] = None,
       derived: Derived = Derived.none,
       batchRowsHint: Option[Long] = None): MergeResult =
-    retryingCommit(mergeAttempt(batch, epoch, knownTouched, derived, batchRowsHint))
+    epochWrite(batch, epoch, derived, batchRowsHint, "base") { snap =>
+      // copy-on-write only the touched buckets
+      val touched = knownTouched.collect { case (n, ids) if n == snap.numBuckets => ids }
+        .getOrElse(batch.select(bucketExpr(snap.numBuckets)).distinct().collect()
+          .map(_.getInt(0)).toSet)
+      (snap.files.filter(f => touched(f.bucket)), touched.size)
+    }
+
+  /** One epoch write, retried until it commits or finds its epoch applied:
+    * `fold` names the stored files the attempt's snapshot folds in and the
+    * number of buckets it writes. */
+  private def epochWrite(batch: DataFrame, epoch: Long, derived: Derived,
+      batchRowsHint: Option[Long], kind: String)(
+      fold: Snapshot => (Seq[DataFileEntry], Int)): MergeResult =
+    retryingCommit {
+      val snap = snapshot()
+      requireBucketFn(snap)
+      if (epoch <= snap.lastEpoch) Some(MergeResult.SkippedEpoch)
+      else {
+        val (files, written) = fold(snap)
+        reduceAndWrite(batch.sparkSession, snap, evolve(snap, batch.schema, derived, epoch),
+          files, Some((batch, batchRowsHint)), written, derived, kind = kind)
+      }
+    }
 
   /**
    * Run one optimistic attempt of `op` per loop iteration; an attempt
@@ -537,18 +551,18 @@ final class SnapTable private (val root: String, fs: FileSystem) {
   private[graft] var beforeCommitHook: () => Unit = () => ()
 
   /** Schema evolution of an epoch write (driver-side, before any executor
-    * plan binds — SURVEY.md §7.4 risk 4): the table schema widened by the
-    * batch plus the derived columns, and `snap` edited to record it (a new
+    * plan binds — SURVEY.md §7.4 risk 4): `snap` edited to record the
+    * table schema widened by the batch plus the derived columns (a new
     * schema version only when it changed) together with the epoch. */
   private def evolve(snap: Snapshot, batchSchema: StructType, derived: Derived,
-      epoch: Long): (StructType, Snapshot) = {
+      epoch: Long): Snapshot = {
     val target = SnapTable.withDerived(SchemaEvolution.merge(snap.schema, batchSchema), derived)
     val props = snap.props + (PropLastEpoch -> epoch.toString)
-    if (target.toDDL == snap.schema.toDDL) (target, snap.copy(props = props))
+    if (target.toDDL == snap.schema.toDDL) snap.copy(props = props)
     else {
       val v = snap.currentSchemaV + 1
-      (target, snap.copy(currentSchemaV = v,
-        schemaVersions = snap.schemaVersions + (v.toString -> target.toDDL), props = props))
+      snap.copy(currentSchemaV = v,
+        schemaVersions = snap.schemaVersions + (v.toString -> target.toDDL), props = props)
     }
   }
 
@@ -563,7 +577,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
    * number of distinct buckets written.
    */
   private def writeAndClaim(snap: Snapshot, edited: Snapshot, rows: DataFrame,
-      replaced: Seq[DataFileEntry], kind: String = "base"): Option[MergeResult.Committed] = {
+      replaced: Seq[DataFileEntry], kind: String): Option[MergeResult.Committed] = {
     val version = nextVersion(snap.version)
     val rel = SnapTable.commitDir(version)
     withLwwAggConf(rows.sparkSession) {
@@ -582,51 +596,53 @@ final class SnapTable private (val root: String, fs: FileSystem) {
       orphaned = !onCurrentChain(version)))
   }
 
-  private def mergeAttempt(batch: DataFrame, epoch: Long, knownTouched: Option[Set[Int]],
-      derived: Derived, batchRowsHint: Option[Long]): Option[MergeResult] = {
-    val spark = batch.sparkSession
-    val snap = snapshot()
-    requireBucketFn(snap)
-    if (epoch <= snap.lastEpoch) return Some(MergeResult.SkippedEpoch)
-    val (target, edited) = evolve(snap, batch.schema, derived, epoch)
-    val reduceSchema = SnapTable.withoutDerived(target, derived)
-    val alignedBare = SchemaEvolution.align(batch, reduceSchema)
-      .withColumn(BucketCol, bucketExpr(snap.numBuckets))
-
-    // copy-on-write only the touched buckets.
-    val touched = knownTouched.getOrElse(
-      alignedBare.select(BucketCol).distinct().collect().map(_.getInt(0)).toSet)
-    val rewrite = snap.files.filter(f => touched(f.bucket))
-
-    // Two regimes for derived columns (measured both ways, see merge's
-    // doc): replay/backfill (batch >> stored) reduces the BARE envelope
-    // and re-derives winners — extra null slots on every shuffled change
-    // event cost more than re-deriving the few survivors. Steady state
-    // (stored >> batch) carries the STORED rows' persisted values through
-    // the reduce — applyDerived's gated coalesce then recomputes only the
-    // winners whose values are null (fresh rows, pre-enrichment files) —
-    // because a survivor's textStats pass costs far more than the wider
-    // rows. The caller's batch-size hint (counted in the pipeline's
-    // accounting pass — no extra scan) picks the regime per epoch.
-    val storedDerivedCols = derived.cols.map(_.name).filter(snap.schema.fieldNames.contains)
-    val carryStored = storedDerivedCols.nonEmpty &&
-      batchRowsHint.exists(b => rewrite.map(_.rows).sum > b)
-    val carrySchema =
-      if (carryStored) storedDerivedCols.foldLeft(reduceSchema)((s, n) => s.add(target(n)))
-      else reduceSchema
-    val aligned =
-      if (carryStored) SchemaEvolution.align(batch, carrySchema)
-        .withColumn(BucketCol, bucketExpr(snap.numBuckets))
-      else alignedBare
-    val old = readAligned(spark, snap, rewrite, carrySchema)
-      .withColumn(BucketCol, bucketExpr(snap.numBuckets))
-
-    // LWW winners among stored rows + batch, in ONE shuffle that is also
-    // the file layout (see [[SnapTable.lwwWinners]]).
-    val winners = SnapTable.lwwWinners(old.unionByName(aligned), carrySchema,
-      touched.size, batchRowsHint.map(_ + rewrite.map(_.rows).sum))
-    writeAndClaim(snap, edited, SnapTable.applyDerived(winners, derived), rewrite)
-      .map(_.copy(bucketsRewritten = touched.size))
+  /**
+   * The reduce-and-write core of every data-writing operation: the LWW
+   * winners of the stored `fold` files plus the optional batch (with its
+   * row count when known), hashed into `edited`'s buckets (`written` of
+   * which receive rows) in ONE shuffle that is also the file layout (see
+   * [[SnapTable.lwwWinners]]), filtered by `keep`, with the derived columns
+   * projected on, committed as `edited` in place of `fold`.
+   *
+   * Two regimes for derived columns (measured both ways): replay/backfill
+   * (batch >> stored) reduces the BARE envelope and re-derives winners —
+   * deriving per change event does ~10x the evals (the bench stream folds
+   * 10.5M events to 861k winners), and even null slots for the columns on
+   * every shuffled change event (≈ 5s/epoch at 10M events) cost more than
+   * re-deriving the few survivors (~1s). Steady state (stored > batch)
+   * CARRIES the stored rows' persisted values through the reduce —
+   * applyDerived's gated coalesce then recomputes only the winners whose
+   * values are null (fresh rows, pre-enrichment files) — because a
+   * survivor's textStats pass costs far more than the wider rows. An
+   * unknown batch size counts as the larger side; a rewrite with no batch
+   * always carries.
+   *
+   * A rewrite with no batch is a maintenance pass and also clusters rows by
+   * merge key within each bucket file, so parquet row-group min/max stats
+   * line up with key ranges — point lookups ([[readKey]]) skip row groups,
+   * and key-adjacent text compresses better. Ingest never pays this sort.
+   */
+  private def reduceAndWrite(spark: SparkSession, snap: Snapshot, edited: Snapshot,
+      fold: Seq[DataFileEntry], batch: Option[(DataFrame, Option[Long])], written: Int,
+      derived: Derived = Derived.none, keep: Option[Column] = None,
+      kind: String = "base"): Option[MergeResult.Committed] = {
+    val stored = fold.map(_.rows).sum
+    val target = edited.schema
+    val names = derived.cols.map(_.name)
+    val carried = if (batch.forall(_._2.exists(stored > _)))
+      names.filter(snap.schema.fieldNames.contains) else Nil
+    // the reduce runs over the table schema minus the derived columns it
+    // does not carry; carried ones move to the end
+    val schema = StructType(target.filterNot(f => names.contains(f.name)) ++ carried.map(target(_)))
+    val storedRows = if (fold.isEmpty && batch.nonEmpty) None
+      else Some(readAligned(spark, snap, fold, schema))
+    val rows = (storedRows ++ batch.map(b => SchemaEvolution.align(b._1, schema)))
+      .map(_.withColumn(BucketCol, bucketExpr(edited.numBuckets))).reduce(_ unionByName _)
+    val winners = SnapTable.lwwWinners(rows, schema, written,
+      batch.fold(Option(stored))(_._2.map(_ + stored)))
+    val out = SnapTable.applyDerived(keep.fold(winners)(winners.filter), derived)
+    writeAndClaim(snap, edited, if (batch.nonEmpty) out
+      else out.sortWithinPartitions((BucketCol +: Schemas.keyCols).map(col): _*), fold, kind)
   }
 
   /** Above this many files per commit, footer row-counts are read on the
@@ -636,7 +652,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
   private val DriverManifestMax = 256
 
   private def listBucketFiles(spark: SparkSession, abs: String, rel: String,
-      schemaV: Int, kind: String = "base"): Seq[DataFileEntry] = {
+      schemaV: Int, kind: String): Seq[DataFileEntry] = {
     val stats = Option(fs.globStatus(new Path(abs, s"$BucketCol=*/part-*")))
       .getOrElse(Array()).toSeq
     val named = stats.map { st =>
@@ -644,7 +660,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
       (st.getPath.toString, bucket, st.getPath.getName)
     }
     val counted: Seq[(String, Int, String, SnapTable.FooterStats)] =
-      if (named.size <= DriverManifestMax || spark == null) {
+      if (named.size <= DriverManifestMax) {
         // footer reads are independent -> parallel on the driver
         import scala.collection.parallel.CollectionConverters._
         named.par.map { case (p, b, n) => (p, b, n, SnapTable.footerStats(p, fs.getConf)) }
@@ -686,22 +702,15 @@ final class SnapTable private (val root: String, fs: FileSystem) {
     val snap = snapshot()
     requireBucketFn(snap)
     val b = bucketOf(spark, convId, turnIdx, snap.numBuckets)
-    val files = snap.files.filter(_.bucket == b)
-    val raw = readAligned(spark, snap, files, snap.schema)
-      .filter(col("conv_id") === convId && col("turn_idx") === turnIdx)
-    val reduced = if (files.exists(_.kind == "delta")) lwwReduce(raw, snap.schema) else raw
-    reduced.filter(col("op") =!= "D").drop("op")
+    readWinners(spark, snap, snap.files.filter(_.bucket == b),
+      Some(col("conv_id") === convId && col("turn_idx") === turnIdx))
   }
-
-  /** Files that can contain rows with lsn > the watermark (footer-stats
-    * pruning; files without stats are conservatively included). */
-  private[table] def filesWithLsnAbove(snap: Snapshot, lsnExclusive: Long): Seq[DataFileEntry] =
-    snap.files.filter(_.maxLsn.forall(_ > lsnExclusive))
 
   /**
    * Incremental consumption: every retained change state with
    * `lsn > lsnExclusive` (tombstones INCLUDED — a downstream MERGE needs
-   * the deletes), pruned to the files whose footer lsn range overlaps.
+   * the deletes), pruned to the files whose footer lsn range overlaps
+   * (files without stats are conservatively included).
    * This is the table acting as a CDC SOURCE for downstream sync: a
    * consumer remembers the max lsn it applied and polls with it. CoW
    * rewrites copy old rows into new files, but the row-level lsn filter
@@ -709,7 +718,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
    */
   def readChangesSince(spark: SparkSession, lsnExclusive: Long): DataFrame = {
     val snap = snapshot()
-    readAligned(spark, snap, filesWithLsnAbove(snap, lsnExclusive), snap.schema)
+    readAligned(spark, snap, snap.files.filter(_.maxLsn.forall(_ > lsnExclusive)), snap.schema)
       .filter(col("lsn") > lsnExclusive)
   }
 
@@ -740,17 +749,16 @@ final class SnapTable private (val root: String, fs: FileSystem) {
    */
   def expireSnapshots(keepLast: Int): (Int, Int) = {
     require(keepLast >= 1, "must keep at least the current snapshot")
-    val parsed: Map[Long, Option[Snapshot]] = history.map(v => v ->
-      (try Some(snapshot(v)) catch { case scala.util.control.NonFatal(_) => None })).toMap
+    val listed = manifests
     // a TORN manifest (crashed writer mid-commit) is invisible to retention
     // accounting — it was never a committed version — and, once past the
     // grace window, is reclaimed here like tryCommit would
-    parsed.collect { case (v, None) => v }.foreach(v => reclaimTorn(snapPath(v)): Unit)
-    val versions = history.filter(v => parsed.get(v).exists(_.isDefined)).sorted
+    listed.collect { case (v, None) => v }.foreach(reclaimTorn(_): Unit)
+    val versions = listed.collect { case (v, Some(s)) => (v, s) }
     val (expire, retain) = versions.splitAt(math.max(0, versions.size - keepLast))
     if (expire.isEmpty) return (0, 0)
-    val referenced = retain.flatMap(parsed(_)).flatMap(_.files.map(_.path)).toSet
-    val doomed = expire.flatMap(parsed(_)).flatMap(_.files.map(_.path)).toSet -- referenced
+    val referenced = retain.flatMap(_._2.files.map(_.path)).toSet
+    val doomed = expire.flatMap(_._2.files.map(_.path)).toSet -- referenced
     def dirOf(rel: String) = rel.split("/").take(2).mkString("/")
     // a commit dir no retained snapshot reaches is removed WHOLE (it also
     // holds untracked writer artifacts — _SUCCESS, checksums — that would
@@ -761,7 +769,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
     val (inDeadDirs, inLiveDirs) = doomed.partition(f => !retainedDirs(dirOf(f)))
     inLiveDirs.foreach(rel => fs.delete(new Path(root, rel), false))
     inDeadDirs.map(dirOf).foreach(d => fs.delete(new Path(root, d), true))
-    expire.foreach(v => fs.delete(snapPath(v), false))
+    expire.foreach { case (v, _) => fs.delete(snapPath(v), false) }
     (expire.size, doomed.size)
   }
 
@@ -783,45 +791,12 @@ final class SnapTable private (val root: String, fs: FileSystem) {
    */
   def mergeDelta(batch: DataFrame, epoch: Long, derived: Derived = Derived.none,
       batchRowsHint: Option[Long] = None): MergeResult =
-    retryingCommit(mergeDeltaAttempt(batch, epoch, derived, batchRowsHint))
-
-  private def mergeDeltaAttempt(batch: DataFrame, epoch: Long,
-      derived: Derived, batchRowsHint: Option[Long]): Option[MergeResult] = {
-    val snap = snapshot()
-    requireBucketFn(snap)
-    if (epoch <= snap.lastEpoch) return Some(MergeResult.SkippedEpoch)
-    val (target, edited) = evolve(snap, batch.schema, derived, epoch)
-    val reduceSchema = SnapTable.withoutDerived(target, derived)
-    val aligned = SchemaEvolution.align(batch, reduceSchema)
-      .withColumn(BucketCol, bucketExpr(snap.numBuckets))
-    // batch-local LWW (dedupes duplicate delivery inside the epoch) in one
-    // bucket-aligned shuffle over the bare envelope (derived columns are
-    // projected onto the winners below); stored rows are NOT read —
-    // cross-epoch reduce happens at read/compaction
-    val winners = SnapTable.lwwWinners(aligned, reduceSchema, snap.numBuckets,
-      batchRowsHint)
-    writeAndClaim(snap, edited, SnapTable.applyDerived(winners, derived), Nil, kind = "delta")
-  }
+    // batch-local LWW (dedupes duplicate delivery inside the epoch); stored
+    // rows are NOT read — cross-epoch reduce happens at read/compaction
+    epochWrite(batch, epoch, derived, batchRowsHint, "delta")(snap => (Nil, snap.numBuckets))
 
   /** Number of delta files currently outstanding (compaction-policy input). */
   def deltaFileCount: Int = snapshot().files.count(_.kind == "delta")
-
-  /** Rewrite `files` as their LWW winners hashed into `buckets` buckets,
-    * `written` of which receive rows, keeping only winners that match
-    * `keep`, and commit them as `edited`. Rows are clustered by merge key
-    * within each bucket file: this is the read-optimization pass, so
-    * parquet row-group min/max stats line up with key ranges — point
-    * lookups ([[readKey]]) skip row groups, and key-adjacent text
-    * compresses better. Ingest never pays this sort. */
-  private def rewrite(spark: SparkSession, snap: Snapshot, edited: Snapshot,
-      files: Seq[DataFileEntry], buckets: Int, written: Int,
-      keep: Option[Column] = None): Option[MergeResult.Committed] = {
-    val winners = SnapTable.lwwWinners(readAligned(spark, snap, files, snap.schema)
-      .withColumn(BucketCol, bucketExpr(buckets)), snap.schema, written,
-      Some(files.map(_.rows).sum))
-    writeAndClaim(snap, edited, keep.fold(winners)(winners.filter)
-      .sortWithinPartitions((BucketCol +: Schemas.keyCols).map(col): _*), files)
-  }
 
   /** Run a maintenance rewrite until it lands on the current chain. An
     * ORPHANED commit (stalled past the claim grace; a concurrent writer
@@ -831,11 +806,13 @@ final class SnapTable private (val root: String, fs: FileSystem) {
     * needs a stall longer than the grace window, so repeats mean something
     * is pathologically wrong with this process: after three, a `mustLand`
     * operation (an explicit migration must not no-op) throws; any other
-    * gives up with SkippedEpoch and leaves the work to its next run. */
+    * gives up and leaves the work to its next run. True iff the operation
+    * committed on the current chain (false: it had nothing to do, or gave
+    * up). */
   private def landOnChain(op: String, mustLand: Boolean)(
-      attempt: => Option[MergeResult]): MergeResult = {
+      attempt: => Option[MergeResult]): Boolean = {
     @annotation.tailrec
-    def go(n: Int): MergeResult = retryingCommit(attempt) match {
+    def go(n: Int): Boolean = retryingCommit(attempt) match {
       case MergeResult.Committed(v, _, _, _, true) =>
         if (n < 3) {
           System.err.println(s"[snaptable] $op version $v ORPHANED " +
@@ -847,9 +824,9 @@ final class SnapTable private (val root: String, fs: FileSystem) {
         else {
           System.err.println(s"[snaptable] $op version $v ORPHANED 3x — " +
             "giving up; the next run retries")
-          MergeResult.SkippedEpoch
+          false
         }
-      case r => r
+      case r => r != MergeResult.SkippedEpoch
     }
     go(1)
   }
@@ -861,19 +838,19 @@ final class SnapTable private (val root: String, fs: FileSystem) {
    * operation is the CoW merge with an empty batch, scheduled by policy
    * instead of per-epoch. Returns the number of files rewritten.
    */
-  def compact(spark: SparkSession): Long =
-    landOnChain("compact", mustLand = false) {
+  def compact(spark: SparkSession): Long = {
+    var n = 0L
+    val landed = landOnChain("compact", mustLand = false) {
       val snap = snapshot()
       requireBucketFn(snap)
       val dirty = snap.files.filter(_.kind == "delta").map(_.bucket).toSet
       val files = snap.files.filter(f => dirty(f.bucket))
+      n = files.size
       if (dirty.isEmpty) Some(MergeResult.SkippedEpoch)
-      else rewrite(spark, snap, snap, files, snap.numBuckets, dirty.size)
-        .map(_.copy(bucketsRewritten = files.size))
-    } match {
-      case c: MergeResult.Committed => c.bucketsRewritten.toLong
-      case MergeResult.SkippedEpoch => 0L
+      else reduceAndWrite(spark, snap, snap, files, None, dirty.size)
     }
+    if (landed) n else 0L
+  }
 
   /**
    * Layout evolution: rewrite the table into `newBuckets` hash buckets —
@@ -895,9 +872,9 @@ final class SnapTable private (val root: String, fs: FileSystem) {
       // stamps the CURRENT hash version: rebucket rewrites every row under
       // this build's bucketExpr, so it is the migration path for tables
       // laid out by an older hash
-      rewrite(spark, snap, snap.copy(numBuckets = newBuckets,
+      reduceAndWrite(spark, snap, snap.copy(numBuckets = newBuckets,
         props = snap.props + (PropBucketFn -> BucketFnVersion.toString)),
-        snap.files, newBuckets, newBuckets)
+        snap.files, None, newBuckets)
     }: Unit
   }
 
@@ -912,7 +889,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
     compact(spark)
     val expired = col("op") === "D" && col("lsn") < lsnWatermark
     var n = 0L
-    landOnChain("expireTombstones", mustLand = false) {
+    val landed = landOnChain("expireTombstones", mustLand = false) {
       val snap = snapshot()
       requireBucketFn(snap)
       // one aggregation yields both the count and the buckets to rewrite
@@ -926,14 +903,12 @@ final class SnapTable private (val root: String, fs: FileSystem) {
       val horizon = math.max(lsnWatermark,
         snap.props.get(PropTombstoneHorizon).map(_.toLong).getOrElse(-1L))
       if (n == 0) Some(MergeResult.SkippedEpoch)
-      else rewrite(spark, snap,
+      else reduceAndWrite(spark, snap,
         snap.copy(props = snap.props + (PropTombstoneHorizon -> horizon.toString)),
-        snap.files.filter(f => perBucket.contains(f.bucket)), snap.numBuckets,
-        perBucket.size, keep = Some(!expired))
-    } match {
-      case _: MergeResult.Committed => n
-      case MergeResult.SkippedEpoch => 0L
+        snap.files.filter(f => perBucket.contains(f.bucket)), None, perBucket.size,
+        keep = Some(!expired))
     }
+    if (landed) n else 0L
   }
 
   /** The lsn watermark below which delete tombstones have been physically
@@ -1040,20 +1015,6 @@ object SnapTable {
     derived.cols.foldLeft(target)((s, d) =>
       if (s.fieldNames.contains(d.name)) s
       else s.add(StructField(d.name, d.dataType, nullable = true)))
-
-  /** Drop derived columns from the schema the replay-regime LWW reduce
-    * runs over — they are pure functions of the winner row, and when the
-    * batch dominates the stored side, carrying them (even as nulls:
-    * UnsafeRow slots are fixed-width) through the shuffle of every change
-    * event costs more than re-deriving the rewritten buckets' winners
-    * afterwards. The steady-state regime (stored >> batch) instead reduces
-    * under mergeAttempt's carrySchema so survivors keep stored values. */
-  private[table] def withoutDerived(target: StructType, derived: Derived): StructType =
-    if (derived.isEmpty) target
-    else {
-      val names = derived.cols.map(_.name).toSet
-      StructType(target.fields.filterNot(f => names(f.name)))
-    }
 
   /** Project derived columns onto winner rows: the shared prelude runs
     * once per row needing derivation, the generators read from it. Columns

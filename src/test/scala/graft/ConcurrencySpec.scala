@@ -56,6 +56,34 @@ class ConcurrencySpec extends SparkSpec {
       .select("text").as[String].collect().toSeq == Seq("v201"))
   }
 
+  test("a CoW epoch retried after a concurrent rebucket rewrites the new layout") {
+    val root = tmpDir("table")
+    val t = SnapTable.create(spark, root, Schemas.payloadV2, numBuckets = 8)
+    CdcPipeline.applyBatch(t, (1 to 40).map(i => ev(i, 100 + i)).toDF(), 0)
+    // the epoch's touched-bucket set is counted under 8 buckets; the
+    // rebucket inside its conflict window makes it retry on a 16-bucket table
+    var fired = false
+    t.beforeCommitHook = () => if (!fired) {
+      fired = true
+      SnapTable.load(spark, root).rebucket(spark, 16)
+    }
+    val rec = try CdcPipeline.applyBatch(t, (1 to 40).map(i => ev(i, 200 + i)).toDF(), 1)
+    finally t.beforeCommitHook = () => ()
+    assert(fired && rec.result == "committed")
+    val keys = t.readRaw(spark).select("conv_id", "turn_idx").as[(String, Int)].collect()
+    assert(keys.length == keys.distinct.length,
+      s"duplicate keys: ${keys.diff(keys.distinct).toSeq}")
+    val rows = t.read(spark).select("conv_id", "lsn").as[(String, Long)].collect()
+    assert(rows.length == 40)
+    assert(rows.forall { case (c, lsn) => lsn == 200L + c.drop(1).toInt },
+      s"stale rows: ${rows.filter { case (c, lsn) => lsn != 200L + c.drop(1).toInt }.toSeq}")
+    val snap = t.snapshot()
+    assert(snap.numBuckets == 16)
+    val written = snap.files.filterNot(t.snapshot(snap.parent).files.toSet).map(_.bucket).distinct
+    assert(rec.bucketsRewritten <= 16 && rec.bucketsRewritten == written.size,
+      s"lineage says ${rec.bucketsRewritten} buckets, the commit wrote ${written.size}")
+  }
+
   test("aborted attempts leave no orphan data directories") {
     // every data-writing operation goes through the same write-and-claim
     // step: a competing commit inside its conflict window makes it lose the

@@ -380,6 +380,27 @@ class JdbcSpec extends SparkSpec {
     assert(read.sorted == pks.sorted, s"rows missing: ${pks.diff(read)}")
   }
 
+  test("reader lane: sampled split of a mixed-case VARCHAR pk follows the database collation") {
+    import org.json4s.jackson.JsonMethods.parse
+    val conn = DriverManager.getConnection("jdbc:derby:memory:collatedb;create=true;" +
+      "territory=en_US;collation=TERRITORY_BASED:PRIMARY")
+    conn.createStatement().execute("CREATE TABLE collated (pk VARCHAR(8), v INT)")
+    val ins = conn.prepareStatement("INSERT INTO collated VALUES (?, ?)")
+    // the database orders every 'a…' key before every 'B…' key; Java String
+    // order puts 'B…' first, so boundaries taken in Java order overlap and gap
+    val pks = (1 to 50).flatMap(i => Seq(f"a$i%03d", f"B$i%03d"))
+    pks.foreach { k => ins.setString(1, k); ins.setInt(2, 1); ins.executeUpdate() }
+    conn.close()
+    val df = graft.job.JdbcLane.read(spark, parse("""{
+      "username": "app", "password": "app",
+      "connection": [{"jdbcUrl": "jdbc:derby:memory:collatedb", "table": ["collated"]}],
+      "splitPk": "pk", "splitMode": "sampled"}"""), channels = 4)
+    assert(df.rdd.getNumPartitions > 2)
+    val read = df.collect().map(_.getString(0)).toSeq
+    assert(read.diff(read.distinct).isEmpty, s"rows read twice: ${read.diff(read.distinct)}")
+    assert(read.sorted == pks.sorted, s"rows missing: ${pks.diff(read)}")
+  }
+
   test("DRDS dialect: mandatory session SQL reaches the reader properties") {
     import JdbcDialect._
     assert(of("drds") == Drds)

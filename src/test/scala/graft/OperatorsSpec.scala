@@ -13,6 +13,10 @@ class OperatorsSpec extends SparkSpec {
   private lazy val docs = spark.read.parquet(s"$sf/documents.parquet").cache()
   private lazy val emb = spark.read.parquet(s"$sf/embeddings.parquet").cache()
 
+  // the session is shared JVM-wide: release the fixtures for later suites
+  override def afterAll(): Unit =
+    try { docs.unpersist(); emb.unpersist(): Unit } finally super.afterAll()
+
   // ---- DataX transform parity (vectors from transformer/doc semantics) ----
 
   test("dx_substr null and bounds semantics") {

@@ -154,6 +154,52 @@ class PlanQualitySpec extends SparkSpec {
     assert(exchanges == 1, s"expected 1 exchange in the merge reduce, saw $exchanges:\n$s")
   }
 
+  test("every SnapTable write is one exchange; only maintenance rewrites sort by key") {
+    import spark.implicits._
+    val root = tmpDir("writes")
+    val ev = (i: Int, lsn: Long, op: String) => graft.model.ChangeEvent(s"c$i", i % 3,
+      "user", s"v$lsn", null, new java.sql.Timestamp(1000L + lsn), lsn, op)
+    val t = graft.table.SnapTable.create(spark, root, graft.model.Schemas.payloadV2,
+      numBuckets = 8)
+    t.merge((1 to 40).map(i => ev(i, 100 + i, "U")).toDF(), epoch = 0)
+    // the executed plan of each parquet write into the table
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = qe.optimizedPlan match {
+        case w: org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+            if w.outputPath.toString.contains(root) => plans.add(qe.executedPlan.toString)
+        case _ => ()
+      }
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val writes: Seq[(String, Boolean, () => Any)] = Seq(
+      ("merge", false, () => t.merge((1 to 40 by 2).map(i =>
+        ev(i, 200 + i, if (i % 5 == 0) "D" else "U")).toDF(), epoch = 1)),
+      ("mergeDelta", false, () => t.mergeDelta((1 to 40 by 3).map(i =>
+        ev(i, 300 + i, "U")).toDF(), epoch = 2)),
+      ("compact", true, () => t.compact(spark)),
+      ("rebucket", true, () => t.rebucket(spark, 4)),
+      ("expireTombstones", true, () => t.expireTombstones(spark, lsnWatermark = 1000L)))
+    spark.listenerManager.register(listener)
+    try for ((name, maintenance, op) <- writes) {
+      plans.clear()
+      op()
+      // listener delivery is async
+      val deadline = System.currentTimeMillis() + 30000
+      while (plans.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
+      assert(plans.size == 1, s"$name: expected one write, saw ${plans.size}")
+      // AQE prints the initial plan after the final one — only the final counts
+      val plan = plans.peek().split("== Initial Plan ==")(0)
+      val exchanges = plan.linesIterator.count(_.contains("Exchange"))
+      assert(exchanges == 1, s"$name: expected 1 exchange, saw $exchanges:\n$plan")
+      val sorts = plan.linesIterator.filter(_.contains("Sort [")).toSeq
+      assert(sorts.exists(_.contains("conv_id")) == maintenance,
+        s"$name: key sort expected only in maintenance rewrites:\n$plan")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("snapshot-table merge groups by bucket (shuffle keyed on merge keys)") {
     import spark.implicits._
     val events = Seq(
