@@ -138,89 +138,76 @@ object CdcPipeline {
     // cheaper than materializing an InMemoryRelation of the batch (measured
     // 0.5s vs 4-30s on a 2.1M-row batch).
     val tagged = batch.withColumn(Dirty.ReasonCol, Dirty.reason(Dirty.envelopeRules))
-    locally {
-      // One aggregation pass yields BOTH the per-source-partition offset
-      // lineage and the dirty accounting (no extra scans of the batch).
-      // collect_set of the merge bucket rides along so the merge can skip
-      // its own touched-bucket scan (the hint names the bucket count it
-      // was counted under)
-      val numBuckets = table.snapshot().numBuckets
-      val bucketCol = table.bucketExpr(numBuckets)
-      val acct = tagged
-        .groupBy(spark_partition_id().as("p"), col(Dirty.ReasonCol))
-        .agg(count(lit(1)).as("rows"), min("lsn").as("lo"), max("lsn").as("hi"),
-          collect_set(bucketCol).as("buckets"))
-        .collect()
-      val parts = acct.groupBy(_.getInt(0)).map { case (p, rs) =>
-        val los = rs.collect { case r if !r.isNullAt(3) => r.getLong(3) }
-        val his = rs.collect { case r if !r.isNullAt(4) => r.getLong(4) }
-        PartitionLineage(p, rs.map(_.getLong(2)).sum,
-          if (los.isEmpty) -1L else los.min, if (his.isEmpty) -1L else his.max)
-      }.toSeq.sortBy(_.partition)
-      val byReason = acct.filterNot(_.isNullAt(1))
-        .groupBy(_.getString(1)).map { case (k, rs) => k -> rs.map(_.getLong(2)).sum }
-      val nClean = acct.filter(_.isNullAt(1)).map(_.getLong(2)).sum
-      val stats = DirtyStats(nClean, byReason.values.sum, byReason.toMap)
-      // Quarantine samples BEFORE the error-limit gate so a failed batch is
-      // diagnosable from the persisted offenders (reference: dirty records
-      // retained by TaskPluginCollector even when the job then aborts).
-      if (stats.dirty > 0) writeDirtySamples(table, tagged, epoch, opts.dirtySampleN)
-      stats.enforce(opts.errorLimit)
-      val touched = acct.filter(_.isNullAt(1))
-        .flatMap(_.getSeq[Int](5)).toSet
+    // One aggregation pass yields BOTH the per-source-partition offset
+    // lineage and the dirty accounting (no extra scans of the batch).
+    // collect_set of the merge bucket rides along so the merge can skip
+    // its own touched-bucket scan (the hint names the bucket count it
+    // was counted under)
+    val numBuckets = table.snapshot().numBuckets
+    val bucketCol = table.bucketExpr(numBuckets)
+    val acct = tagged
+      .groupBy(spark_partition_id().as("p"), col(Dirty.ReasonCol))
+      .agg(count(lit(1)).as("rows"), min("lsn").as("lo"), max("lsn").as("hi"),
+        collect_set(bucketCol).as("buckets"))
+      .collect()
+    val parts = acct.groupBy(_.getInt(0)).map { case (p, rs) =>
+      val los = rs.collect { case r if !r.isNullAt(3) => r.getLong(3) }
+      val his = rs.collect { case r if !r.isNullAt(4) => r.getLong(4) }
+      PartitionLineage(p, rs.map(_.getLong(2)).sum,
+        if (los.isEmpty) -1L else los.min, if (his.isEmpty) -1L else his.max)
+    }.toSeq.sortBy(_.partition)
+    val byReason = acct.filterNot(_.isNullAt(1))
+      .groupBy(_.getString(1)).map { case (k, rs) => k -> rs.map(_.getLong(2)).sum }
+    val nClean = acct.filter(_.isNullAt(1)).map(_.getLong(2)).sum
+    val stats = DirtyStats(nClean, byReason.values.sum, byReason.toMap)
+    // Quarantine samples BEFORE the error-limit gate so a failed batch is
+    // diagnosable from the persisted offenders (reference: dirty records
+    // retained by TaskPluginCollector even when the job then aborts).
+    if (stats.dirty > 0) writeDirtySamples(table, tagged, epoch, opts.dirtySampleN)
+    stats.enforce(opts.errorLimit)
+    val touched = acct.filter(_.isNullAt(1))
+      .flatMap(_.getSeq[Int](5)).toSet
 
-      val clean = tagged.filter(col(Dirty.ReasonCol).isNull).drop(Dirty.ReasonCol)
-      // Enrichment runs as write-time DERIVED columns inside the merge —
-      // computed per WINNING row after the LWW reduce (~3x fewer evals than
-      // per change event; stored rows keep their persisted values), not as a
-      // per-event projection here.
-      val derived = if (opts.enrich) enrichmentColumns else graft.table.Derived.none
-      // No pre-merge dedup pass: the merge's own LWW aggregation reduces the
-      // batch (with map-side partials) in the same shuffle that folds in the
-      // stored rows.
-      val mergeResult = opts.mergeMode match {
-        // stats.clean (counted in the accounting pass above — no extra
-        // scan) sizes the reduce's task count and lets the merge pick the
-        // derived-column regime: re-derive winners while the replay batch
-        // dominates, carry stored values once the table does
-        case "cow" =>
-          table.merge(clean, epoch, Some((numBuckets, touched)), derived, Some(stats.clean))
-        case "mor" =>
-          val r = table.mergeDelta(clean, epoch, derived, Some(stats.clean))
-          // Long arithmetic: a large configured threshold (e.g. MaxValue =
-          // "never auto-compact") times the bucket count overflows Int and
-          // would flip this into compact-every-epoch
-          val snap = table.snapshot()
-          if (snap.files.count(_.kind == "delta").toLong >
-              opts.morCompactDeltasPerBucket.toLong * snap.numBuckets)
-            table.compact(batch.sparkSession)
-          r
-        case other => throw new IllegalArgumentException(s"mergeMode '$other'")
-      }
-      val (applied, buckets, result) = mergeResult match {
-        // an ORPHANED commit (writer stalled past the torn-claim grace
-        // window; its version got skipped and its manifest hangs off a dead
-        // branch) must never be recorded as a silent success — the epoch's
-        // rows are unreachable from the current snapshot and need replay
-        case MergeResult.Committed(v, _, b, _, true) =>
-          System.err.println(s"[pipeline] WARNING epoch $epoch commit v$v is " +
-            "ORPHANED (off the current snapshot chain — writer paused past " +
-            "the torn-claim grace window); its rows were NOT applied")
-          // rowsApplied = 0, like skipped_epoch: the rows went to a dead
-          // branch, and a consumer summing rowsApplied must not count them
-          (0L, b, "orphaned")
-        case MergeResult.Committed(_, rows, b, _, _) => (rows, b, "committed")
-        case MergeResult.SkippedEpoch => (0L, 0, "skipped_epoch")
-      }
-      val rec = LineageRecord(epoch, parts, stats.clean + stats.dirty, stats.dirty,
-        applied, buckets, (System.nanoTime() - t0) / 1000000L, result)
-      writeLineage(batch.sparkSession, table, rec)
-      opts.retention.foreach { pol =>
-        if (result == "committed" && epoch % math.max(1, pol.everyEpochs) == 0)
-          applyRetention(batch.sparkSession, table, pol, epoch)
-      }
-      rec
+    val clean = tagged.filter(col(Dirty.ReasonCol).isNull).drop(Dirty.ReasonCol)
+    // Enrichment runs as write-time DERIVED columns inside the merge —
+    // computed per WINNING row after the LWW reduce (~3x fewer evals than
+    // per change event; stored rows keep their persisted values), not as a
+    // per-event projection here.
+    val derived = if (opts.enrich) enrichmentColumns else graft.table.Derived.none
+    // No pre-merge dedup pass: the merge's own LWW aggregation reduces the
+    // batch (with map-side partials) in the same shuffle that folds in the
+    // stored rows.
+    val mergeResult = opts.mergeMode match {
+      // stats.clean (counted in the accounting pass above — no extra
+      // scan) sizes the reduce's task count and lets the merge pick the
+      // derived-column regime: re-derive winners while the replay batch
+      // dominates, carry stored values once the table does
+      case "cow" =>
+        table.merge(clean, epoch, Some((numBuckets, touched)), derived, Some(stats.clean))
+      case "mor" =>
+        val r = table.mergeDelta(clean, epoch, derived, Some(stats.clean))
+        // Long arithmetic: a large configured threshold (e.g. MaxValue =
+        // "never auto-compact") times the bucket count overflows Int and
+        // would flip this into compact-every-epoch
+        val snap = table.snapshot()
+        if (snap.files.count(_.kind == "delta").toLong >
+            opts.morCompactDeltasPerBucket.toLong * snap.numBuckets)
+          table.compact(batch.sparkSession)
+        r
+      case other => throw new IllegalArgumentException(s"mergeMode '$other'")
     }
+    val (applied, buckets, result) = mergeResult match {
+      case MergeResult.Committed(_, rows, b, _) => (rows, b, "committed")
+      case MergeResult.SkippedEpoch => (0L, 0, "skipped_epoch")
+    }
+    val rec = LineageRecord(epoch, parts, stats.clean + stats.dirty, stats.dirty,
+      applied, buckets, (System.nanoTime() - t0) / 1000000L, result)
+    writeLineage(batch.sparkSession, table, rec)
+    opts.retention.foreach { pol =>
+      if (result == "committed" && epoch % math.max(1, pol.everyEpochs) == 0)
+        applyRetention(batch.sparkSession, table, pol, epoch)
+    }
+    rec
   }
 
   /** One maintenance round (see [[RetentionPolicy]]): tombstone expiry
@@ -333,20 +320,11 @@ object CdcPipeline {
     val out = fs.create(tmp, true)
     try out.write(Serialization.write(rec).getBytes(StandardCharsets.UTF_8))
     finally out.close()
+    // exactly one writer commits a given epoch, so its slot is free
     if (!fs.rename(tmp, p)) {
-      // local-FS rename-to-existing overwrites; HDFS fails it. An occupied
-      // committed slot is NOT always the same record: a replayed epoch that
-      // previously ORPHANED re-commits on-chain and must overwrite its
-      // "orphaned" record, or replay tooling keeps alerting on an epoch
-      // that is actually applied — so displace and retry once. (Exactly one
-      // writer commits a given epoch, so the displaced record can only be
-      // this epoch's own earlier corpse.)
-      try fs.delete(p, false) catch { case _: java.io.IOException => () }
-      if (!fs.rename(tmp, p)) {
-        System.err.println(s"[lineage] WARNING epoch ${rec.epoch} record " +
-          s"(${rec.result}) not published: rename $tmp -> $p failed twice")
-        fs.delete(tmp, false): Unit
-      }
+      System.err.println(s"[lineage] WARNING epoch ${rec.epoch} record " +
+        s"(${rec.result}) not published: rename $tmp -> $p failed")
+      fs.delete(tmp, false): Unit
     }
   }
 

@@ -64,27 +64,21 @@ sealed trait MergeResult
 object MergeResult {
   /** epoch already committed — replay skipped (exactly-once). */
   case object SkippedEpoch extends MergeResult
-  /** `orphaned`: the claim succeeded but the version is NOT on the current
-    * snapshot chain — a writer stalled past the torn-manifest grace window
-    * had its version number skipped by a concurrent writer, and its
-    * eventually-closed manifest hangs off a dead branch. The epoch's data is
-    * unreachable from the current snapshot; lineage records it as
-    * `orphaned` (never a silent `committed`) so operators can detect the
-    * pause-induced loss and replay. */
   final case class Committed(version: Long, rowsWritten: Long, bucketsRewritten: Int,
-      schemaEvolved: Boolean, orphaned: Boolean = false) extends MergeResult
+      schemaEvolved: Boolean) extends MergeResult
 }
 
 /**
- * Iceberg-style snapshot table: parquet data files + JSON snapshot manifests
- * + an atomically-swapped current-version pointer. Built from scratch (no
- * Iceberg jar in this environment) but with the same guarantees the north
- * star asks of Iceberg:
+ * Iceberg-style snapshot table: parquet data files + JSON snapshot
+ * manifests, the newest of which is the current version. Built from scratch
+ * (no Iceberg jar in this environment) but with the same guarantees the
+ * north star asks of Iceberg:
  *
  *  - **Snapshot isolation / atomic commit** — a commit is: write the data
- *    files, write `meta/snap-<v>.json`, atomically swap `meta/_current`.
- *    Readers resolve the pointer once and only ever see a fully committed
- *    file list. (Reference analogue: HdfsWriter's temp-dir + rename two-phase
+ *    files, write the manifest aside, claim `meta/snap-<v>.json` for it with
+ *    one atomic no-replace step (see [[tryCommit]]). Readers resolve the
+ *    version once and only ever see a fully committed file list.
+ *    (Reference analogue: HdfsWriter's temp-dir + rename two-phase
  *    commit, reference: hdfswriter/.../HdfsWriter.java:190-191, 288-321, and
  *    OdpsWriter's disjoint block-id commit, odpswriter/.../OdpsWriter.java:
  *    158-160.)
@@ -117,10 +111,16 @@ final class SnapTable private (val root: String, fs: FileSystem) {
 
   private def metaDir = new Path(root, "meta")
   private def snapPath(v: Long) = new Path(metaDir, f"snap-$v%08d.json")
-  private def currentPtr = new Path(metaDir, "_current")
+
+  /** The filesystem below any checksumming wrapper: manifests and their
+    * asides carry no `.crc` sidecar. */
+  private val raw = fs match {
+    case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+    case other => other
+  }
 
   private def writeString(p: Path, s: String): Unit = {
-    val out = fs.create(p, true)
+    val out = raw.create(p, false)
     try out.write(s.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
 
@@ -135,166 +135,90 @@ final class SnapTable private (val root: String, fs: FileSystem) {
     } finally in.close()
   }
 
-  /** Current version: max of the pointer file and the max committed
-    * snapshot. The reconciliation covers BOTH failure windows: a crash
-    * between pointer delete and rename (pointer missing), and two
-    * overlapping writers swapping the pointer out of order (pointer stale
-    * behind an already-committed snapshot). Snapshot files AHEAD of the
-    * pointer are parse-validated before counting: the exclusive-create
-    * commit claim (see [[tryCommit]]) writes the manifest through the
-    * claiming stream, so a writer that crashes mid-write leaves a torn
-    * `snap-*.json` — readers must skip it (the pointer is only ever swapped
-    * after a complete manifest close, so everything at or below the pointer
-    * is always whole). */
-  def currentVersion: Long = {
-    val ptr = if (fs.exists(currentPtr)) readString(currentPtr).trim.toLong else 0L
-    history.filter(_ > ptr).reverse.find(parsed(_).isDefined).getOrElse(ptr)
+  /** Current version: the newest listed manifest. Every listed manifest is
+    * whole, because [[tryCommit]] only ever publishes a closed one (and
+    * [[SnapTable.load]] deletes a torn one an earlier build left). */
+  def currentVersion: Long = history.lastOption.getOrElse(0L)
+
+  def snapshot(version: Long = currentVersion): Snapshot = parsed(version)
+    .getOrElse(throw new java.io.FileNotFoundException(s"$root has no version $version"))
+
+  /** The manifest of `version`, or None when retention deleted it after it
+    * was listed, or when it is not whole JSON. Earlier builds claimed a
+    * version by creating its manifest and writing through it, so a kill
+    * mid-claim left a torn `snap-*.json`; [[tryCommit]] never lists a
+    * partial manifest, so such a file can only be that leftover, and it is
+    * deleted here (see also [[SnapTable.load]]). */
+  private def parsed(version: Long): Option[Snapshot] = {
+    val text = try readString(snapPath(version))
+      catch { case _: java.io.FileNotFoundException => return None }
+    scala.util.Try(org.json4s.jackson.JsonMethods.parse(text)) match {
+      case scala.util.Success(json: JObject) => Some(json.extract[Snapshot])
+      case _ => fs.delete(snapPath(version), false); None
+    }
   }
 
-  def snapshot(version: Long = currentVersion): Snapshot =
-    Serialization.read[Snapshot](readString(snapPath(version)))
-
-  /** The manifest of `version`, or None when it is torn (a crashed
-    * writer's unparseable claim) or gone. */
-  private def parsed(version: Long): Option[Snapshot] =
-    try Some(snapshot(version)) catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Every listed manifest version, ascending (torn claims included). */
+  /** Every listed manifest version, ascending. */
   def history: Seq[Long] =
     Option(fs.globStatus(new Path(metaDir, "snap-*.json"))).getOrElse(Array())
       .map(_.getPath.getName.stripPrefix("snap-").stripSuffix(".json").toLong).sorted.toSeq
 
-  /** Each listed manifest with its parse; None marks a torn claim. */
-  private def manifests: Seq[(Long, Option[Snapshot])] = history.map(v => v -> parsed(v))
+  /** Each listed manifest that is still there to read. */
+  private def manifests: Seq[(Long, Snapshot)] = history.flatMap(v => parsed(v).map(v -> _))
 
   private[table] def commit(s: Snapshot): Unit =
     require(tryCommit(s), s"snapshot ${s.version} already exists (concurrent writer)")
 
-  /** Attempt to commit; returns false when another writer claimed this
-    * version first (optimistic concurrency — the caller re-reads the new
-    * current snapshot and retries its operation against it, Iceberg-style).
-    *
-    * The claim is an ATOMIC EXCLUSIVE CREATE of the snapshot file itself,
-    * so two writers can never both think they own a version. Rename was
-    * deliberately rejected as the claim primitive: HDFS rename-to-existing
-    * fails, but Hadoop's local filesystems delegate to POSIX rename, which
-    * silently overwrites — two racing writers would both "win" and the
-    * first manifest would be lost. Exclusive create is atomic on both: the
-    * HDFS NameNode serializes `create(overwrite=false)`, and for `file://`
-    * we bypass the (check-then-act) local FS wrapper and claim via
-    * O_CREAT|O_EXCL (`Files.newOutputStream(CREATE_NEW)`). A crash between
-    * claim and close leaves a torn manifest; [[currentVersion]]
-    * parse-validates ahead-of-pointer snapshots, so readers never see it.
-    */
+  /**
+   * Publish `s` as version `s.version`; false when another writer published
+   * that version first (optimistic concurrency: the caller re-reads the new
+   * current snapshot and retries its operation against it, Iceberg-style).
+   *
+   * The manifest is written ASIDE (a dot-file in `meta/` named for its
+   * target version, see [[SnapTable.asideName]]), claimed under its final
+   * name by one atomic no-replace step, then the aside is deleted — so a
+   * listed manifest is always whole, and a crash at any step leaves at most
+   * a stale aside, which [[expireSnapshots]] collects. The claim is
+   * `link(2)` on local filesystems (EEXIST on an existing name; POSIX rename
+   * and Hadoop's local rename overwrite or check-then-act) and `rename`
+   * elsewhere (fails on an existing destination, atomic on HDFS). An aside
+   * that vanished before its claim (retention collected it) loses.
+   *
+   * A writer targets its snapshot's version + 1 and never burns a number, so
+   * versions are gap-free above the retention floor. A publish whose parent
+   * is no longer listed loses without claiming: retention deletes manifests
+   * ascending, so its slot may have been freed under a writer that stalled
+   * past newer publishes, and claiming it would list a manifest off the
+   * current chain whose parent's files may be deleted. That check and the
+   * claim are two steps, so a won publish is checked again: it stands if
+   * its parent is still listed or it is the newest version (retention keeps
+   * the newest). Otherwise the slot may have been freed between the two
+   * steps, or a newer publish and a retention round both landed just after
+   * the claim; the two cannot be told apart, so this throws and deletes
+   * nothing, and re-applying the operation either lands it or finds its
+   * epoch applied.
+   */
   private[table] def tryCommit(s: Snapshot): Boolean = {
-    val p = snapPath(s.version)
-    val out = exclusiveCreate(p) match {
-      case Some(o) => o
-      case None =>
-        // version already claimed — by a live concurrent writer (its
-        // manifest will be parseable shortly) or by a crashed one (a torn
-        // file). Either way the claim path NEVER deletes or re-takes the
-        // slot: the caller's retry recomputes its target via [[nextVersion]],
-        // which advances past torn-past-grace claims, so a crashed writer
-        // just burns one version number. (An in-claim reclaim-by-delete was
-        // rejected: two racing reclaimers can both parse-check the same old
-        // corpse and then one deletes the OTHER's freshly re-created claim —
-        // check-then-delete is not atomic — silently losing its commit.)
-        return false
-    }
-    // a write/close failure must not leave a half-written claim either:
-    // delete the claimed file before rethrowing so the next attempt (ours
-    // after backoff, or another writer's) can claim the version cleanly
-    try {
-      out.write(Serialization.write(s).getBytes(StandardCharsets.UTF_8))
-      out.close()
-    } catch {
-      case t: Throwable =>
-        try out.close() catch { case _: Throwable => () }
-        try fs.delete(p, false) catch { case _: Throwable => () }
-        throw t
-    }
-    val tmp = new Path(metaDir, s"_current.tmp-${s.version}")
-    writeString(tmp, s.version.toString)
-    // HDFS rename is atomic; the delete+rename window is covered by the
-    // max-snapshot fallback in currentVersion.
-    if (fs.exists(currentPtr)) fs.delete(currentPtr, false)
-    require(fs.rename(tmp, currentPtr), s"failed to swap $currentPtr")
-    true
-  }
-
-  /** True if version `v`'s manifest is TORN (unparseable JSON) and older than
-    * [[SnapTable.tornManifestGraceMs]] — a crashed writer's corpse. A
-    * parseable file is a legitimate commit; a young unparseable file may be
-    * a live writer between claim and close (the grace window is the
-    * correctness boundary: a writer slower than it could otherwise be
-    * skipped over and lose its commit). */
-  private def tornPastGrace(v: Long): Boolean = {
-    val st = try fs.getFileStatus(snapPath(v))
-      catch { case _: java.io.IOException => return false }
-    parsed(v).isEmpty &&
-      System.currentTimeMillis() - st.getModificationTime >= SnapTable.tornManifestGraceMs
-  }
-
-  /** Delete version `v`'s manifest if [[tornPastGrace]]; retention-path GC only — the commit
-    * claim path never deletes (see [[tryCommit]]). Safe there: writers
-    * allocate versions via [[nextVersion]], which only targets a number
-    * below an existing claim file after that file is already gone. */
-  private def reclaimTorn(v: Long): Boolean =
-    tornPastGrace(v) &&
-      (try fs.delete(snapPath(v), false) catch { case _: java.io.IOException => false })
-
-  /** Next commit target: the first version past `cur` whose slot is either
-    * free or held by a torn-past-grace corpse (skipped — the crashed writer
-    * permanently burns that number; `parent` records real lineage, so gaps
-    * are harmless). A YOUNG unparseable claim is NOT skipped: targeting it
-    * loses the exclusive-create race and the retry loop effectively waits
-    * for the claimant to finish (new current snapshot) or die (grace). */
-  private def nextVersion(cur: Long): Long = {
-    var v = cur + 1
-    while (fs.exists(snapPath(v)) && tornPastGrace(v)) v += 1
-    v
-  }
-
-  /** True when `version` is the current version or one of its ancestors
-    * (parent-pointer walk from [[currentVersion]] down). A freshly
-    * tryCommit-ed version that is NOT on the chain was ORPHANED: this
-    * writer stalled past [[SnapTable.tornManifestGraceMs]] between claim
-    * and manifest close, a concurrent writer's [[nextVersion]] skipped the
-    * (then-torn) slot and committed ahead with a different parent, and this
-    * writer's late close now hangs off a dead branch. Cost: zero extra
-    * reads in the normal case (current == version after our own pointer
-    * swap); the walk only runs when someone committed past us. */
-  private[table] def onCurrentChain(version: Long): Boolean = {
-    var v = currentVersion
-    while (v > version) v = snapshot(v).parent
-    v == version
-  }
-
-  /** Atomic create-if-absent of `p`; None when the version is already
-    * claimed. Local schemes go through java.nio `CREATE_NEW` (O_EXCL)
-    * because RawLocalFileSystem's `create(overwrite=false)` is a
-    * non-atomic exists-check; everything else uses the filesystem's own
-    * exclusive create (atomic on HDFS). */
-  private def exclusiveCreate(p: Path): Option[java.io.OutputStream] = {
-    val raw = fs match {
-      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-      case other => other
-    }
-    raw match {
+    def parentListed = s.parent < 0 || fs.exists(snapPath(s.parent)) // version 0 has none
+    val aside = new Path(metaDir, asideName(s.version))
+    writeString(aside, Serialization.write(s))
+    val won = parentListed && (raw match {
       case _: org.apache.hadoop.fs.RawLocalFileSystem =>
-        try Some(java.nio.file.Files.newOutputStream(
-          java.nio.file.Paths.get(p.toUri.getPath),
-          java.nio.file.StandardOpenOption.CREATE_NEW,
-          java.nio.file.StandardOpenOption.WRITE))
-        catch { case _: java.nio.file.FileAlreadyExistsException => None }
-      case _ =>
-        try Some(fs.create(p, false))
+        def local(p: Path) = java.nio.file.Paths.get(p.toUri.getPath)
+        try { java.nio.file.Files.createLink(local(snapPath(s.version)), local(aside)); true }
         catch {
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException => None
-          case _: java.io.IOException if fs.exists(p) => None
+          case _: java.nio.file.FileAlreadyExistsException | _: java.nio.file.NoSuchFileException =>
+            false
         }
-    }
+      case _ => try raw.rename(aside, snapPath(s.version))
+        catch { case _: java.io.FileNotFoundException => false }
+    })
+    raw.delete(aside, false) // the link's source, or a lost claim's
+    if (won && !parentListed && currentVersion != s.version)
+      throw new IllegalStateException(s"version ${s.version} was published while retention " +
+        s"expired its parent ${s.parent}: it may hang off the current chain; re-apply the " +
+        "operation (it lands, or its epoch is found applied)")
+    won
   }
 
   // ---- read path ----------------------------------------------------------
@@ -346,7 +270,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
     * [[requireBucketFn]] exists to prevent — when in doubt, rebucket()). */
   def stampBucketFn(version: Int = SnapTable.BucketFnVersion): Unit = {
     val snap = snapshot()
-    commit(snap.copy(version = nextVersion(snap.version), parent = snap.version,
+    commit(snap.copy(version = snap.version + 1, parent = snap.version,
       props = snap.props + (PropBucketFn -> version.toString)))
   }
 
@@ -412,9 +336,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
    * resolution is still O(versions) driver-side reads.
    */
   def readVersionHistory(spark: SparkSession): DataFrame = {
-    // skip torn claims from crashed writers (they were never committed
-    // versions; retention GCs them past the grace window)
-    val snaps = manifests.collect { case (v, Some(s)) if v > 0 => (v, s) }
+    val snaps = manifests.filter(_._1 > 0)
     require(snaps.nonEmpty, "table has no committed data versions")
     // the schema lattice only adds nullable columns / widens, so the newest
     // retained schema is the union the old per-version unionByName produced
@@ -578,7 +500,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
    */
   private def writeAndClaim(snap: Snapshot, edited: Snapshot, rows: DataFrame,
       replaced: Seq[DataFileEntry], kind: String): Option[MergeResult.Committed] = {
-    val version = nextVersion(snap.version)
+    val version = snap.version + 1
     val rel = SnapTable.commitDir(version)
     withLwwAggConf(rows.sparkSession) {
       rows.write.mode("overwrite").partitionBy(BucketCol).parquet(s"$root/$rel")
@@ -592,8 +514,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
       fs.delete(new Path(root, rel), true)
       None
     } else Some(MergeResult.Committed(version, written.map(_.rows).sum,
-      written.map(_.bucket).distinct.size, edited.currentSchemaV != snap.currentSchemaV,
-      orphaned = !onCurrentChain(version)))
+      written.map(_.bucket).distinct.size, edited.currentSchemaV != snap.currentSchemaV))
   }
 
   /**
@@ -744,17 +665,20 @@ final class SnapTable private (val root: String, fs: FileSystem) {
    * Retain the most recent `keepLast` snapshots (always including the
    * current one); delete older snapshot manifests and any data file no
    * retained snapshot references — the time-travel-horizon GC every
-   * snapshot table needs (Iceberg's expire_snapshots analogue). Returns
-   * (snapshotsDeleted, dataFilesDeleted).
+   * snapshot table needs (Iceberg's expire_snapshots analogue). Manifests
+   * go in ascending order, which [[tryCommit]]'s post-publish check relies
+   * on. Also deletes the manifest asides a crashed writer left: any whose
+   * target version is at or below the newest listed one (it was published,
+   * or its claim can only lose). Returns (snapshotsDeleted, dataFilesDeleted).
    */
   def expireSnapshots(keepLast: Int): (Int, Int) = {
     require(keepLast >= 1, "must keep at least the current snapshot")
-    val listed = manifests
-    // a TORN manifest (crashed writer mid-commit) is invisible to retention
-    // accounting — it was never a committed version — and, once past the
-    // grace window, is reclaimed here like tryCommit would
-    listed.collect { case (v, None) => v }.foreach(reclaimTorn(_): Unit)
-    val versions = listed.collect { case (v, Some(s)) => (v, s) }
+    val versions = manifests
+    versions.lastOption.foreach { case (newest, _) =>
+      Option(raw.globStatus(new Path(metaDir, ".snap-*.tmp"))).getOrElse(Array())
+        .filter(_.getPath.getName.drop(6).takeWhile(_.isDigit).toLongOption.exists(_ <= newest))
+        .foreach(st => raw.delete(st.getPath, false))
+    }
     val (expire, retain) = versions.splitAt(math.max(0, versions.size - keepLast))
     if (expire.isEmpty) return (0, 0)
     val referenced = retain.flatMap(_._2.files.map(_.path)).toSet
@@ -798,39 +722,6 @@ final class SnapTable private (val root: String, fs: FileSystem) {
   /** Number of delta files currently outstanding (compaction-policy input). */
   def deltaFileCount: Int = snapshot().files.count(_.kind == "delta")
 
-  /** Run a maintenance rewrite until it lands on the current chain. An
-    * ORPHANED commit (stalled past the claim grace; a concurrent writer
-    * committed ahead on a different parent) rewrote onto a dead branch
-    * while the live chain still holds the old state, so it is recomputed
-    * against the current chain rather than reported as done. Orphaning
-    * needs a stall longer than the grace window, so repeats mean something
-    * is pathologically wrong with this process: after three, a `mustLand`
-    * operation (an explicit migration must not no-op) throws; any other
-    * gives up and leaves the work to its next run. True iff the operation
-    * committed on the current chain (false: it had nothing to do, or gave
-    * up). */
-  private def landOnChain(op: String, mustLand: Boolean)(
-      attempt: => Option[MergeResult]): Boolean = {
-    @annotation.tailrec
-    def go(n: Int): Boolean = retryingCommit(attempt) match {
-      case MergeResult.Committed(v, _, _, _, true) =>
-        if (n < 3) {
-          System.err.println(s"[snaptable] $op version $v ORPHANED " +
-            "(stalled past claim grace) — recomputing against the current chain")
-          go(n + 1)
-        } else if (mustLand)
-          throw new IllegalStateException(s"$op version $v orphaned 3x (writer " +
-            "repeatedly stalled past the claim grace window) — NOT applied")
-        else {
-          System.err.println(s"[snaptable] $op version $v ORPHANED 3x — " +
-            "giving up; the next run retries")
-          false
-        }
-      case r => r != MergeResult.SkippedEpoch
-    }
-    go(1)
-  }
-
   /**
    * Fold all merge-on-read deltas into base files: LWW-reduce the buckets
    * that have deltas and rewrite them as fresh base file groups (buckets
@@ -840,7 +731,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
    */
   def compact(spark: SparkSession): Long = {
     var n = 0L
-    val landed = landOnChain("compact", mustLand = false) {
+    val r = retryingCommit {
       val snap = snapshot()
       requireBucketFn(snap)
       val dirty = snap.files.filter(_.kind == "delta").map(_.bucket).toSet
@@ -849,7 +740,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
       if (dirty.isEmpty) Some(MergeResult.SkippedEpoch)
       else reduceAndWrite(spark, snap, snap, files, None, dirty.size)
     }
-    if (landed) n else 0L
+    if (r == MergeResult.SkippedEpoch) 0L else n
   }
 
   /**
@@ -867,7 +758,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
    */
   def rebucket(spark: SparkSession, newBuckets: Int): Unit = {
     require(newBuckets >= 1, "need at least one bucket")
-    landOnChain("rebucket", mustLand = true) {
+    retryingCommit {
       val snap = snapshot()
       // stamps the CURRENT hash version: rebucket rewrites every row under
       // this build's bucketExpr, so it is the migration path for tables
@@ -889,11 +780,14 @@ final class SnapTable private (val root: String, fs: FileSystem) {
     compact(spark)
     val expired = col("op") === "D" && col("lsn") < lsnWatermark
     var n = 0L
-    val landed = landOnChain("expireTombstones", mustLand = false) {
+    val r = retryingCommit {
       val snap = snapshot()
       requireBucketFn(snap)
-      // one aggregation yields both the count and the buckets to rewrite
-      val perBucket = readAligned(spark, snap, snap.files, snap.schema).filter(expired)
+      // one aggregation yields both the count and the buckets to rewrite;
+      // it reads only files that can hold an expired tombstone (footer
+      // minLsn below the watermark; stat-less files conservatively)
+      val candidates = snap.files.filter(_.minLsn.forall(_ < lsnWatermark))
+      val perBucket = readAligned(spark, snap, candidates, snap.schema).filter(expired)
         .groupBy(bucketExpr(snap.numBuckets)).count()
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
       n = perBucket.values.sum
@@ -908,7 +802,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
         snap.files.filter(f => perBucket.contains(f.bucket)), None, perBucket.size,
         keep = Some(!expired))
     }
-    if (landed) n else 0L
+    if (r == MergeResult.SkippedEpoch) 0L else n
   }
 
   /** The lsn watermark below which delete tombstones have been physically
@@ -936,14 +830,6 @@ object SnapTable {
     * never be delivered the expired deletes — sync paths must fail fast and
     * full-resync instead of silently keeping deleted rows. */
   val PropTombstoneHorizon = "graft.tombstoneHorizonLsn"
-  /** How old an UNPARSEABLE snapshot manifest must be before a commit
-    * attempt reclaims its version (deletes it and takes the claim). Covers
-    * the hard-crash window of the exclusive-create commit protocol: a
-    * writer that died between claim and close leaves a torn file that
-    * would otherwise own its version forever. Large enough that a live
-    * writer's claim-to-close window (milliseconds — one small JSON write)
-    * can never be mistaken for a corpse; mutable for tests only. */
-  @volatile private[table] var tornManifestGraceMs: Long = 60000L
   /** Per-job raised ObjectHashAggregate fallback threshold for the merge
     * reduce (see `withLwwAggConf`): keys per task there stay within about
     * one bucket's rows (kept task-sized by layout, rebucket) or
@@ -1010,6 +896,11 @@ object SnapTable {
   private[table] def commitDir(version: Long): String =
     f"data/c$version%08d-${java.util.UUID.randomUUID().toString.take(8)}"
 
+  /** Name of a manifest's aside in `meta/` (see [[SnapTable.tryCommit]]):
+    * a dot-file carrying the target version, unique per attempt. */
+  private[table] def asideName(version: Long): String =
+    f".snap-$version%08d.${java.util.UUID.randomUUID().toString.take(8)}.tmp"
+
   /** Extend a merge target schema with derived columns not already present. */
   private[table] def withDerived(target: StructType, derived: Derived): StructType =
     derived.cols.foldLeft(target)((s, d) =>
@@ -1074,8 +965,7 @@ object SnapTable {
     val fs = filesystem(root, spark)
     val t = new SnapTable(root, fs)
     fs.mkdirs(new Path(root, "meta"))
-    require(!fs.exists(new Path(new Path(root, "meta"), "snap-00000000.json")),
-      s"table already exists at $root")
+    require(t.history.isEmpty, s"table already exists at $root")
     val envelope = StructType(schema.fields ++
       Seq("ts" -> TimestampType, "lsn" -> LongType, "op" -> StringType)
         .filterNot { case (n, _) => schema.fieldNames.contains(n) }
@@ -1086,14 +976,20 @@ object SnapTable {
     t
   }
 
-  def load(spark: SparkSession, root: String): SnapTable =
-    new SnapTable(root, filesystem(root, spark))
+  /** Open the table at `root`. A torn manifest that an earlier build's kill
+    * left at the head of the history is deleted here, so the current
+    * version is always whole; one lower in the history is deleted where it
+    * is read. */
+  def load(spark: SparkSession, root: String): SnapTable = {
+    val t = new SnapTable(root, filesystem(root, spark))
+    t.history.reverseIterator.find(t.parsed(_).isDefined)
+    t
+  }
 
-  /** Whether a table exists at `root`, checked through the root's OWN
-    * Hadoop filesystem — `java.io.File` probes only work on `file://`
-    * paths and would silently report "absent" for any other scheme,
-    * sending callers down the create path over live data. */
-  def exists(spark: SparkSession, root: String): Boolean =
-    filesystem(root, spark).exists(
-      new Path(new Path(root, "meta"), "snap-00000000.json"))
+  /** Whether a table exists at `root`: any manifest is listed (retention
+    * may have expired version 0), checked through the root's OWN Hadoop
+    * filesystem — `java.io.File` probes only work on `file://` paths and
+    * would silently report "absent" for any other scheme, sending callers
+    * down the create path over live data. */
+  def exists(spark: SparkSession, root: String): Boolean = load(spark, root).history.nonEmpty
 }

@@ -3,18 +3,21 @@ package graft.table
 import graft.SparkSpec
 import graft.cdc.CdcPipeline
 import graft.model.{ChangeEvent, Schemas}
+import graft.oracle.OracleReducer
+import org.json4s.{Formats, NoTypeHints}
+import org.json4s.jackson.Serialization
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
 /**
- * The commit-claim primitive itself: the snapshot file must be claimed by
- * an ATOMIC exclusive create, because local/POSIX rename silently
- * overwrites an existing destination — a rename-based claim would let two
- * racing writers both "commit" the same version (losing the first
- * writer's manifest). These tests race the raw claim on the local FS, the
- * exact filesystem family where rename gives no exclusivity.
+ * The publish protocol itself: a manifest is written aside and claimed
+ * under its final name by one atomic no-replace step — a hard link on the
+ * local FS, where rename silently overwrites an existing destination and a
+ * rename-based claim would let two racing writers both "commit" the same
+ * version. These tests race the claim on the local FS, build each state a
+ * kill during a publish can leave, and stall a writer across retention.
  */
 class CommitClaimSpec extends SparkSpec {
   import spark.implicits._
@@ -50,136 +53,141 @@ class CommitClaimSpec extends SparkSpec {
     assert(t.currentVersion == 1L)
   }
 
-  test("a torn ahead-of-pointer manifest is invisible to readers") {
-    val root = tmpDir("torn")
+  private def oracle(events: Seq[ChangeEvent]) =
+    OracleReducer.reduce(events).map(e => (e.conv_id, e.turn_idx, e.text))
+  private def state(t: SnapTable) = t.read(spark).select("conv_id", "turn_idx", "text")
+    .as[(String, Int, String)].collect().sortBy(r => (r._1, r._2)).toSeq
+  private def asides(root: String): Seq[String] =
+    new java.io.File(root, "meta").list().filter(_.startsWith(".snap-")).toSeq
+
+  /** A kill during one epoch's publish leaves `crash`'s state behind (it
+    * may commit epochs of its own, returned). The next epoch must commit
+    * on its first attempt, reads must equal the oracle, and retention must
+    * collect the stale aside. */
+  private def recoversFrom(name: String)(
+      crash: (SnapTable, String) => Seq[ChangeEvent]): Unit = {
+    val root = tmpDir(name)
     val t = SnapTable.create(spark, root, Schemas.payloadV2, numBuckets = 4)
-    CdcPipeline.applyBatch(t, (1 to 10).map(i => ev(i, 100 + i)).toDF(), 0)
-    assert(t.currentVersion == 1L)
-    // simulate a writer that claimed version 2 and died mid-write
-    Files.write(Paths.get(root, "meta", "snap-00000002.json"),
-      """{"version":2,"paren""".getBytes(StandardCharsets.UTF_8))
-    assert(t.currentVersion == 1L)
-    assert(t.read(spark).count() == 10)
-    // and a later whole commit (version 3 — 2 stays claimed by the corpse)
-    // is visible again; skipping the torn file never rolls back past it
-    t.commit(t.snapshot(1L).copy(version = 3L, parent = 1L))
-    assert(t.currentVersion == 3L)
+    val e0 = (1 to 10).map(i => ev(i, 100 + i))
+    CdcPipeline.applyBatch(t, e0.toDF(), 0)
+    val crashed = crash(t, root)
+    assert(asides(root).size == 1)
+    val next = Seq(ev(11, 301), ev(3, 302))
+    var attempts = 0
+    t.beforeCommitHook = () => attempts += 1
+    val rec = try CdcPipeline.applyBatch(t, next.toDF(), t.committedEpoch + 1)
+      finally t.beforeCommitHook = () => ()
+    assert(rec.result == "committed" && attempts == 1, s"${rec.result} after $attempts attempts")
+    val expected = oracle(e0 ++ crashed ++ next)
+    assert(state(t) == expected)
+    t.expireSnapshots(keepLast = 10)
+    assert(asides(root).isEmpty, s"stale asides: ${asides(root)}")
+    assert(state(t) == expected)
+    assert(t.history == (0L to t.currentVersion), "versions are gap-free")
   }
 
-  test("a stale torn claim is skipped (version burned), a fresh one honored") {
-    val root = tmpDir("reclaim")
-    val t = SnapTable.create(spark, root, Schemas.payloadV2, numBuckets = 4)
-    CdcPipeline.applyBatch(t, (1 to 10).map(i => ev(i, 100 + i)).toDF(), 0)
-    val base = t.snapshot()
-    // a crashed writer left a torn claim on version 2
-    val torn = Paths.get(root, "meta", "snap-00000002.json")
-    Files.write(torn, """{"version":2,"paren""".getBytes(StandardCharsets.UTF_8))
-    // within the grace window the claim is honored (it could be a LIVE
-    // writer between claim and close) — the commit loses the race as usual
-    assert(!t.tryCommit(base.copy(version = 2L)))
-    // past the grace window a direct claim on the slot STILL loses (the
-    // claim path never deletes — two racing recoveries could otherwise
-    // destroy each other's fresh claim); recovery is version allocation
-    // skipping the corpse: the next commit burns 2 and lands on 3
-    val prev = SnapTable.tornManifestGraceMs
-    SnapTable.tornManifestGraceMs = 0L
-    try {
-      assert(!t.tryCommit(base.copy(version = 2L)))
-      assert(t.merge(Seq(ev(11, 201)).toDF(), epoch = 1)
-        .isInstanceOf[MergeResult.Committed])
-    } finally SnapTable.tornManifestGraceMs = prev
-    assert(t.currentVersion == 3L)
-    assert(t.read(spark).count() == 11)
-    // the corpse persists (retention GCs it) and stays invisible to readers
-    assert(Files.exists(torn))
-    assert(t.history.contains(2L))
-    // another corpse on the NEXT version must not wedge ingest either
-    Files.write(Paths.get(root, "meta", "snap-00000004.json"),
-      """{"version":4,"paren""".getBytes(StandardCharsets.UTF_8))
-    SnapTable.tornManifestGraceMs = 0L
-    try assert(t.merge(Seq(ev(12, 301)).toDF(), epoch = 2)
-      .isInstanceOf[MergeResult.Committed])
-    finally SnapTable.tornManifestGraceMs = prev
-    assert(t.currentVersion == 5L)
-    assert(t.read(spark).count() == 12)
-    // the audit read skips the torn claims instead of crashing
-    assert(t.readVersionHistory(spark).count() >= 12)
-  }
-
-  test("expireSnapshots skips torn manifests instead of crashing") {
-    val root = tmpDir("expiretorn")
-    val t = SnapTable.create(spark, root, Schemas.payloadV2, numBuckets = 4)
-    for (e <- 0 to 2)
-      CdcPipeline.applyBatch(t, (1 to 5).map(i => ev(i, 100 * (e + 1) + i)).toDF(), e)
-    // a torn corpse ABOVE the pointer and inside what keepLast would retain
-    Files.write(Paths.get(root, "meta", "snap-00000009.json"),
-      """{"version":9,"paren""".getBytes(StandardCharsets.UTF_8))
-    val prev = SnapTable.tornManifestGraceMs
-    SnapTable.tornManifestGraceMs = 0L
-    val (snapsDeleted, _) =
-      try t.expireSnapshots(keepLast = 1)
-      finally { SnapTable.tornManifestGraceMs = prev }
-    assert(snapsDeleted >= 2, "parseable old snapshots expired")
-    assert(!Files.exists(Paths.get(root, "meta", "snap-00000009.json")),
-      "stale torn manifest reclaimed during retention")
-    assert(t.currentVersion == 3L)
-    assert(t.read(spark).count() == 5)
-  }
-
-  test("a commit landing off the current chain is reported ORPHANED, not committed") {
-    val root = tmpDir("orphan")
-    val t = SnapTable.create(spark, root, Schemas.payloadV2, numBuckets = 4)
-    CdcPipeline.applyBatch(t, (1 to 10).map(i => ev(i, 100 + i)).toDF(), 0)
-    assert(t.currentVersion == 1L)
-    // Scenario (the documented stalled-past-grace boundary): writer A is
-    // about to commit version 2, but it stalled so long that a concurrent
-    // writer B, seeing A's claim torn past the grace window, SKIPPED v2 and
-    // committed v3 with parent 1. A's late close then swaps the pointer to
-    // a version no longer on the chain. The beforeCommitHook seam plays B:
-    // it lands v3 (parent 1) right before A's tryCommit(2).
-    val prevHook = t.beforeCommitHook
-    t.beforeCommitHook = () =>
-      t.commit(t.snapshot(1L).copy(version = 3L, parent = 1L,
-        props = t.snapshot(1L).props + ("writer" -> "B")))
-    val r =
-      try CdcPipeline.applyBatch(t, Seq(ev(11, 201)).toDF(), epoch = 1)
-      finally t.beforeCommitHook = prevHook
-    // the lineage record says ORPHANED — a silent "committed" here would
-    // hide that the epoch's rows are unreachable from the current snapshot
-    assert(r.result == "orphaned", s"lineage result: ${r.result}")
-    assert(t.currentVersion == 3L)
-    assert(!t.onCurrentChain(2L) && t.onCurrentChain(3L) && t.onCurrentChain(1L))
-    // readers see B's chain: A's epoch-1 row never became visible
-    assert(t.read(spark).count() == 10)
-    // and the persisted lineage carries the orphan marker for operators
-    val lin = CdcPipeline.readLineage(spark, t).filter(_.epoch == 1L)
-    assert(lin.exists(_.result == "orphaned"))
-  }
-
-  test("an orphaned compact recomputes against the current chain (deltas still fold)") {
-    val root = tmpDir("orphan-compact")
-    val t = SnapTable.create(spark, root, Schemas.payloadV2, numBuckets = 4)
-    val opts = graft.cdc.PipelineOptions(mergeMode = "mor",
-      morCompactDeltasPerBucket = Int.MaxValue)
-    CdcPipeline.applyBatch(t, (1 to 10).map(i => ev(i, 100 + i)).toDF(), 0, opts)
-    CdcPipeline.applyBatch(t, (1 to 10).map(i => ev(i, 200 + i)).toDF(), 1, opts)
-    assert(t.deltaFileCount > 0)
-    val preState = t.read(spark).select("text").as[String].collect().sorted.toSeq
-    // first compact attempt orphans (concurrent writer B skips its slot and
-    // commits ahead with a different parent, like the merge orphan test);
-    // the retry must land the fold on B's chain
-    val prevHook = t.beforeCommitHook
-    var fired = false
-    t.beforeCommitHook = () => if (!fired) {
-      fired = true
-      val cur = t.currentVersion
-      t.commit(t.snapshot(cur).copy(version = cur + 2, parent = cur,
-        props = t.snapshot(cur).props + ("writer" -> "B")))
+  test("a kill mid-write leaves a half-written aside: the next epoch commits at once") {
+    recoversFrom("half-aside") { (_, root) =>
+      Files.write(Paths.get(root, "meta", SnapTable.asideName(2L)),
+        """{"version":2,"paren""".getBytes(StandardCharsets.UTF_8))
+      Nil
     }
-    val buckets = try t.compact(spark) finally t.beforeCommitHook = prevHook
-    assert(buckets > 0, "retried compact reported no folded buckets")
-    assert(t.deltaFileCount == 0, "current chain still has deltas")
-    assert(t.read(spark).select("text").as[String].collect().sorted.toSeq == preState)
+  }
+
+  test("a kill before the claim leaves a closed aside: the next epoch commits at once") {
+    recoversFrom("closed-aside") { (t, root) =>
+      implicit val fmts: Formats = Serialization.formats(NoTypeHints)
+      val lost = t.snapshot().copy(version = 2L, parent = 1L,
+        props = t.snapshot().props + ("writer" -> "killed"))
+      Files.write(Paths.get(root, "meta", SnapTable.asideName(2L)),
+        Serialization.write(lost).getBytes(StandardCharsets.UTF_8))
+      Nil
+    }
+  }
+
+  test("a kill after the link leaves a published manifest's aside: the next epoch commits") {
+    recoversFrom("linked-aside") { (t, root) =>
+      val applied = Seq(ev(12, 201))
+      CdcPipeline.applyBatch(t, applied.toDF(), 1)
+      // the local claim is a hard link: until the aside's delete, the
+      // published manifest has a second name
+      Files.createLink(Paths.get(root, "meta", SnapTable.asideName(2L)),
+        Paths.get(root, "meta", "snap-00000002.json"))
+      applied
+    }
+  }
+
+  test("a writer stalled across a retention round does not lose its epoch") {
+    val root = tmpDir("stall")
+    val t = SnapTable.create(spark, root, Schemas.payloadV2, numBuckets = 4)
+    val epochs = Seq((1 to 10).map(i => ev(i, 100 + i)), Seq(ev(11, 201)))
+    CdcPipeline.applyBatch(t, epochs(0).toDF(), 0)
+    // epoch 1's writer stalls before its publish of v2; meanwhile other
+    // writers commit v2 and v3, each rewriting every bucket, and a
+    // retention round keeps only v3 — deleting v1's files, which the
+    // stalled writer's manifest still lists — so the slot it targets is
+    // free again
+    var fired = 0
+    t.beforeCommitHook = () => if (fired == 0) {
+      fired += 1
+      t.rebucket(spark, 4)
+      t.rebucket(spark, 4)
+      t.expireSnapshots(keepLast = 1)
+    }
+    val first = try scala.util.Try(CdcPipeline.applyBatch(t, epochs(1).toDF(), 1))
+      finally t.beforeCommitHook = () => ()
+    assert(fired == 1)
+    // either the call lands the epoch, or it refuses the freed slot loudly
+    // and re-applying the epoch lands it
+    first.failed.foreach(e => assert(e.getMessage.contains("retention"), e.getMessage))
+    if (first.isFailure) CdcPipeline.applyBatch(t, epochs(1).toDF(), 1)
+    val keys = t.read(spark).select("conv_id").as[String].collect().toSet
+    assert(keys.contains("c11"), s"epoch 1's key is missing: history ${t.history}")
+    // and no lineage record calls an epoch committed that the table lacks
+    CdcPipeline.readLineage(spark, t).filter(_.result == "committed").foreach { r =>
+      assert(epochs(r.epoch.toInt).map(_.conv_id).forall(keys),
+        s"epoch ${r.epoch} is recorded committed but absent")
+    }
+    // the stalled writer's manifest is not listed: every retained version
+    // is on the current chain and every file it lists is there to read
+    assert(t.history == Seq(3L, 4L) && t.snapshot(4L).parent == 3L, s"history ${t.history}")
+    val firstSeen = t.readVersionHistory(spark).select("conv_id", "first_version")
+      .as[(String, Long)].collect().toMap
+    assert(firstSeen.size == 11 && firstSeen("c11") == 4L && firstSeen("c1") == 3L, firstSeen)
+  }
+
+  test("a torn manifest an earlier build left is deleted, at the head or lower in history") {
+    val root = tmpDir("legacy-torn")
+    val t = SnapTable.create(spark, root, Schemas.payloadV2, numBuckets = 4)
+    val e0 = (1 to 10).map(i => ev(i, 100 + i))
+    CdcPipeline.applyBatch(t, e0.toDF(), 0)
+    // earlier builds claimed a version by creating its manifest and writing
+    // through it, kept a `_current` pointer, and skipped a torn claim past
+    // a grace window: a kill mid-claim left a torn v2, a later writer
+    // committed v3 on v1, and another kill left a torn v4 at the head
+    implicit val fmts: Formats = Serialization.formats(NoTypeHints)
+    def meta(name: String, text: String) =
+      Files.write(Paths.get(root, "meta", name), text.getBytes(StandardCharsets.UTF_8))
+    meta("snap-00000002.json", """{"version":2,"parent":1,"numBu""")
+    meta("snap-00000003.json", Serialization.write(t.snapshot(1L).copy(version = 3L)))
+    meta("snap-00000004.json", "")
+    meta("_current", "3")
+    val u = SnapTable.load(spark, root)
+    assert(u.history == Seq(0L, 1L, 2L, 3L) && u.currentVersion == 3L, s"history ${u.history}")
+    val next = Seq(ev(11, 301), ev(3, 302))
+    var attempts = 0
+    u.beforeCommitHook = () => attempts += 1
+    val rec = try CdcPipeline.applyBatch(u, next.toDF(), 1)
+      finally u.beforeCommitHook = () => ()
+    assert(rec.result == "committed" && attempts == 1 && u.currentVersion == 4L,
+      s"${rec.result} v${u.currentVersion} after $attempts attempts")
+    assert(state(u) == oracle(e0 ++ next))
+    // the version history reads past the lower corpse, deleting it
+    assert(u.readVersionHistory(spark).count() == 12)
+    assert(u.history == Seq(0L, 1L, 3L, 4L), s"history ${u.history}")
+    intercept[java.io.FileNotFoundException](u.readVersion(spark, 2L))
+    assert(u.expireSnapshots(keepLast = 1)._1 == 3)
+    assert(u.history == Seq(4L) && state(u) == oracle(e0 ++ next))
   }
 
   test("pre-stamp tables re-stamp without a rewrite (stampBucketFn)") {

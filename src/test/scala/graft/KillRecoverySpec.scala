@@ -12,14 +12,14 @@ import java.util.concurrent.TimeUnit
  * HARD-crash recovery: a child JVM runs the real CLI ingest and is killed
  * with SIGKILL (`destroyForcibly`) while commits are in flight — no
  * shutdown hooks, no graceful stream stop, arbitrary interruption points
- * including mid-manifest-write (the torn-claim case) and the
- * pointer-swap window. The stream is then resumed (again through the
+ * including mid-manifest-write and between a manifest's claim and its
+ * aside's delete. The stream is then resumed (again through the
  * checkpoint) and the final table must equal the in-memory oracle with no
  * epoch applied twice. This is the conformance test for the commit
- * protocol as a whole: exclusive-create claims, torn-claim skipping at
- * version allocation, pointer reconciliation, and checkpoint +
- * epoch-guard exactly-once. (The graceful-stop variant lives in
- * CdcEndToEndSpec; this one covers what `q.stop()` cannot.)
+ * protocol as a whole: write-aside-then-link publishes (every listed
+ * manifest whole, versions gap-free) and checkpoint + epoch-guard
+ * exactly-once. (The graceful-stop variant lives in CdcEndToEndSpec; this
+ * one covers what `q.stop()` cannot.)
  */
 class KillRecoverySpec extends SparkSpec {
   import spark.implicits._
@@ -49,7 +49,7 @@ class KillRecoverySpec extends SparkSpec {
   test("two JVMs ingest the same changelog into one table: each epoch applies once") {
     // cross-process optimistic concurrency: both children see every file
     // (separate checkpoints), race every epoch's commit, and the epoch
-    // guard + exclusive-create claim must resolve each epoch to exactly
+    // guard + no-replace claim must resolve each epoch to exactly
     // one Committed — the in-process race test (CommitClaimSpec) cannot
     // cover two separate SparkSessions/JVMs contending on the real FS
     val log = tmpDir("race-log")
@@ -128,14 +128,9 @@ class KillRecoverySpec extends SparkSpec {
     assert(got == oracleState())
     val committed = CdcPipeline.readLineage(spark, t).filter(_.result == "committed").map(_.epoch)
     assert(committed.distinct.size == committed.size, s"epoch applied twice: $committed")
-    // the manifest chain is whole: every retained version parses
-    t.history.foreach { v =>
-      try t.snapshot(v)
-      catch { case scala.util.control.NonFatal(_) =>
-        // torn claims from the kills are allowed to persist — but only
-        // ABOVE the committed chain's reachable parents
-        assert(v > 0, "version 0 must always parse")
-      }
-    }
+    // the manifest chain is whole: versions are gap-free and each parses
+    // into a child of the version before it
+    assert(t.history == (0L to t.currentVersion), s"history: ${t.history}")
+    t.history.drop(1).foreach(v => assert(t.snapshot(v).parent == v - 1))
   }
 }

@@ -200,6 +200,51 @@ class PlanQualitySpec extends SparkSpec {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  test("tombstone expiry counts only files that can hold an expired tombstone") {
+    import spark.implicits._
+    val root = tmpDir("tombscan")
+    val ev = (i: Int, lsn: Long, op: String) => graft.model.ChangeEvent(s"c$i", 1,
+      "user", s"v$lsn", null, new java.sql.Timestamp(1000L + lsn), lsn, op)
+    val t = graft.table.SnapTable.create(spark, root, graft.model.Schemas.payloadV2,
+      numBuckets = 4)
+    t.merge((1 to 40).map(i => ev(i, 100 + i, if (i % 4 == 0) "D" else "U")).toDF(), epoch = 0)
+    // epoch 1 rewrites buckets 0 and 1 whole, every row above the watermark
+    val hot = (1 to 40).filter(i => t.bucketOf(spark, s"c$i", 1L, 4) < 2)
+    assert(hot.nonEmpty && hot.size < 40)
+    t.merge(hot.map(i => ev(i, 1000 + i, "U")).toDF(), epoch = 1)
+    val watermark = 500L
+    val (fresh, old) = t.snapshot().files.partition(_.bucket < 2)
+    assert(fresh.nonEmpty && fresh.forall(_.minLsn.exists(_ >= watermark)))
+    // the files each `collect` query reads
+    val scans = new java.util.concurrent.ConcurrentLinkedQueue[Set[String]]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = if (f == "collect") scans.add(qe.optimizedPlan.collect {
+        case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+      }.collect { case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+        r.location.inputFiles.map(p => new org.apache.hadoop.fs.Path(p).toUri.getPath)
+      }.flatten.toSet)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val dropped = try {
+      val n = t.expireTombstones(spark, watermark)
+      // listener delivery is async
+      val deadline = System.currentTimeMillis() + 30000
+      while (scans.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
+      n
+    } finally spark.listenerManager.unregister(listener)
+    assert(scans.size == 1, s"expected one count query, saw ${scans.size}")
+    assert(scans.peek() == old.map(f => s"$root/${f.path}").toSet,
+      s"the count read files above the watermark: ${scans.peek()}")
+    // every tombstone below the watermark went, and only its buckets were
+    // rewritten
+    assert(dropped == (1 to 40).filterNot(hot.contains).count(_ % 4 == 0))
+    assert(t.readRaw(spark).filter(col("op") === "D").isEmpty)
+    assert(t.snapshot().files.filter(_.bucket < 2).toSet == fresh.toSet)
+  }
+
   test("snapshot-table merge groups by bucket (shuffle keyed on merge keys)") {
     import spark.implicits._
     val events = Seq(

@@ -54,6 +54,9 @@ class RetentionSpec extends SparkSpec {
       .flatMap(v => table.snapshot(v).files.map(_.path.split("/")(1))).toSet
     assert(dataDirs == referenced, s"orphans: ${dataDirs.diff(referenced)}")
     assert(table.history.size <= 4)
+    // version 0 is long expired, yet the table is found, not re-created
+    assert(!table.history.contains(0L) && SnapTable.exists(spark, root))
+    intercept[IllegalArgumentException](SnapTable.create(spark, root, Schemas.payloadV1))
 
     // state unchanged by all that maintenance: live rows equal the oracle
     val expected = graft.oracle.OracleReducer.reduce(
