@@ -575,7 +575,7 @@ object Bench {
           // recorded by NAME in query_failures and excluded from the timing
           // map (correctness is independently oracle-gated; this keeps the
           // bench artifact honest about what actually ran)
-          try { SparkEntry.queries(name)(spark, sfDir).count(); () }
+          try { SparkEntry.registry.find(_.name == name).get.run(spark, sfDir)(_.count()); () }
           catch {
             case t: Throwable =>
               queryFailures += name

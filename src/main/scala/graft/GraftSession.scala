@@ -33,6 +33,11 @@ object GraftSession {
       // this graceful fallback.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         graft.table.SnapTable.TaskKeyBudget.toString)
+      // `file:` without libhadoop forks chmod per created file and readlink
+      // per FileContext rename; these keep Hadoop's bits, .crc files and
+      // link semantics without the forks (ForkFreeLocalFs.scala)
+      .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForkFreeLocalFs].getName)
 
   def get(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = builder(cores).getOrCreate()

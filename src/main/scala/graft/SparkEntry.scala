@@ -11,6 +11,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.StructType
 
+import scala.collection.mutable.ListBuffer
+
 /**
  * The query contract: one [[registry]] entry per implemented operator
  * (SURVEY.md §2 + the training-data operator set), each holding its name,
@@ -24,14 +26,36 @@ object SparkEntry {
     s.read.parquet(s"$dir/$name.parquet")
 
   /** Flagship: full CDC replay (generate -> dirty gate -> LWW dedup ->
-    * snapshot MERGE -> final transcript state) at smoke scale. */
-  def entry(spark: SparkSession): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft-entry").toString
+    * snapshot MERGE -> final transcript state) at smoke scale, handed to
+    * `consume` before its scratch space is deleted. */
+  def entry[A](spark: SparkSession)(consume: DataFrame => A): A = withScratch { _ =>
+    val work = scratchDir("graft-entry")
     val cfg = GenConfig(numEvents = 10000, numConvs = 100, chunks = 4)
     ChangeStreamGen.writeChangelog(spark, cfg, s"$work/log")
     val table = SnapTable.create(spark, s"$work/table", Schemas.payloadV2, numBuckets = 8)
     CdcPipeline.replayBatch(spark, s"$work/log", table)
-    table.read(spark).orderBy("conv_id", "turn_idx")
+    consume(table.read(spark).orderBy("conv_id", "turn_idx"))
+  }
+
+  /** The temp dirs made so far by the enclosing [[withScratch]]. */
+  private val scratch = new scala.util.DynamicVariable[ListBuffer[java.nio.file.Path]](null)
+
+  /** Runs `f`, which sees the temp dirs it has made through [[scratchDir]],
+    * and deletes them when it returns: the one owner of a run's scratch
+    * space, so a query that builds tables or files leaves nothing behind
+    * once its result is consumed. */
+  private def withScratch[A](f: collection.Seq[java.nio.file.Path] => A): A = {
+    val made = ListBuffer.empty[java.nio.file.Path]
+    try scratch.withValue(made)(f(made))
+    finally made.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+  }
+
+  /** A fresh temp dir owned by the enclosing [[withScratch]]. */
+  private def scratchDir(prefix: String): String = {
+    require(scratch.value != null, "scratch space is made only inside a query run")
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    scratch.value += d
+    d.toString
   }
 
   // ---------------------------------------------------------------------
@@ -41,7 +65,19 @@ object SparkEntry {
   /** One contract query: its name, the DuckDB SQL that gates it (every
     * query is oracle-gated) and its Spark run over a fixture directory. */
   final case class Query(name: String, oracle: String)(
-      val run: (SparkSession, String) => DataFrame)
+      body: (SparkSession, String) => DataFrame) {
+    /** Runs the query over `dir` and hands its result to `consume`; the
+      * tables and files the run built are deleted once `consume` returns. */
+    def run[A](s: SparkSession, dir: String)(consume: DataFrame => A): A =
+      withScratch(_ => consume(body(s, dir)))
+
+    /** The result as a frame that outlives the run: the query's own frame,
+      * or a local checkpoint of it when the run built tables or files. */
+    def frame(s: SparkSession, dir: String): DataFrame = withScratch { made =>
+      val df = body(s, dir)
+      if (made.isEmpty) df else df.localCheckpoint()
+    }
+  }
 
   /** Every contract query, in run order. */
   lazy val registry: Seq[Query] = Seq(
@@ -387,7 +423,7 @@ object SparkEntry {
       // and a gzip CSV copy are both read through readAuto
       import graft.sources.{TypedFileSink, TypedFileSource}
       import graft.sources.TypedFileSource.{ColumnSpec, CsvConfig}
-      val work = java.nio.file.Files.createTempDirectory("graft-sniff").toString
+      val work = scratchDir("graft-sniff")
       t(s, dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
         .coalesce(1).write.orc(s"$work/supp")
       TypedFileSink.writeCsv(
@@ -423,7 +459,7 @@ object SparkEntry {
         when(col("o_orderkey") % 7 === 0, lit(null))
           .otherwise(col("o_totalprice")).as("o_totalprice"),
         col("o_orderdate"))
-      val out = java.nio.file.Files.createTempDirectory("graft-csvrt").toString + "/orders"
+      val out = scratchDir("graft-csvrt") + "/orders"
       TypedFileSink.writeCsv(src, out, TypedFileSink.WriteConfig(writeMode = "truncate"))
       TypedFileSource.readCsv(s, Seq(out), Seq(
           ColumnSpec(index = Some(0), `type` = "long", name = Some("o_orderkey")),
@@ -450,7 +486,7 @@ object SparkEntry {
         col("p_partkey"), col("p_name"),
         when(col("p_partkey") % 5 === 0, lit(null))
           .otherwise(col("p_retailprice")).as("p_retailprice"))
-      val out = java.nio.file.Files.createTempDirectory("graft-orcrt").toString + "/part"
+      val out = scratchDir("graft-orcrt") + "/part"
       TypedFileSink.writeOrc(src, out, TypedFileSink.WriteConfig(writeMode = "truncate"))
       TypedFileSource.readOrc(s, Seq(out), Seq(
           ColumnSpec(index = Some(0), `type` = "long", name = Some("p_partkey")),
@@ -789,7 +825,7 @@ object SparkEntry {
       // the rule, the cap and the ordering
       val ev = instantChangelog(s, dir).withColumn("conv_id",
           when(col("lsn") % 97 === 0, lit(null)).otherwise(col("conv_id")))
-      val work = java.nio.file.Files.createTempDirectory("graft-dirtyq").toString
+      val work = scratchDir("graft-dirtyq")
       val table = SnapTable.create(s, s"$work/t", Schemas.payloadV2, numBuckets = 16)
       CdcPipeline.applyBatch(table, ev, epoch = 0,
         graft.cdc.PipelineOptions(
@@ -822,7 +858,7 @@ object SparkEntry {
       val rows = t(s, dir, "nation")
         .select(col("n_nationkey").cast("long"), col("n_name"))
         .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-      val work = java.nio.file.Files.createTempDirectory("graft-seqrc").toString
+      val work = scratchDir("graft-seqrc")
       val conf = s.sparkContext.hadoopConfiguration
       locally { // SEQ: k|name lines
         val w = org.apache.hadoop.io.SequenceFile.createWriter(conf,
@@ -987,9 +1023,9 @@ object SparkEntry {
     }
   )
 
-  /** Name-keyed view of [[registry]]'s run functions. */
+  /** Name-keyed view of [[registry]] as frames ([[Query.frame]]). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    registry.map(q => q.name -> q.run).toMap
+    registry.map(q => q.name -> (q.frame _)).toMap
 
   // ---------------------------------------------------------------------
   // CDC state: one changelog, one projection, one oracle
@@ -1065,7 +1101,7 @@ object SparkEntry {
 
   /** An empty payload-v2 snapshot table in a fresh temp dir. */
   private def tempTable(s: SparkSession, buckets: Int = 16): SnapTable =
-    SnapTable.create(s, java.nio.file.Files.createTempDirectory("graft-q").toString,
+    SnapTable.create(s, scratchDir("graft-q"),
       Schemas.payloadV2, numBuckets = buckets)
 
   /** Writes `parts` in order as changelog files (`filesPerPart` each), then
@@ -1073,7 +1109,7 @@ object SparkEntry {
     * path, 4 files per trigger; returns the table's live state. */
   private def streamReplay(s: SparkSession, parts: Seq[DataFrame], filesPerPart: Int,
       schema: StructType, mode: String): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft-cdcq").toString
+    val work = scratchDir("graft-cdcq")
     parts.foreach(_.repartition(filesPerPart).write.mode("append").parquet(s"$work/log"))
     val table = SnapTable.create(s, s"$work/table", schema, numBuckets = 16)
     CdcPipeline.stream(s, s"$work/log", table, s"$work/ckpt",

@@ -11,8 +11,8 @@ object Verify {
     val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.registry.foreach { q =>
-      try q.run(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/${q.name}")
+      try q.run(spark, sfDir)(_.coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }

@@ -2,9 +2,12 @@ package graft.cdc
 
 import graft.model.Schemas
 import graft.table.{MergeResult, SnapTable}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftExprBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+
+import scala.jdk.CollectionConverters._
 
 import java.nio.charset.StandardCharsets
 
@@ -138,17 +141,18 @@ object CdcPipeline {
     // cheaper than materializing an InMemoryRelation of the batch (measured
     // 0.5s vs 4-30s on a 2.1M-row batch).
     val tagged = batch.withColumn(Dirty.ReasonCol, Dirty.reason(Dirty.envelopeRules))
-    // One aggregation pass yields BOTH the per-source-partition offset
-    // lineage and the dirty accounting (no extra scans of the batch).
-    // collect_set of the merge bucket rides along so the merge can skip
-    // its own touched-bucket scan (the hint names the bucket count it
+    // One aggregation pass yields the per-source-partition offset lineage,
+    // the dirty accounting and the dirty samples (no extra scans of the
+    // batch). collect_set of the merge bucket rides along so the merge can
+    // skip its own touched-bucket scan (the hint names the bucket count it
     // was counted under)
     val numBuckets = table.snapshot().numBuckets
     val bucketCol = table.bucketExpr(numBuckets)
     val acct = tagged
       .groupBy(spark_partition_id().as("p"), col(Dirty.ReasonCol))
       .agg(count(lit(1)).as("rows"), min("lsn").as("lo"), max("lsn").as("hi"),
-        collect_set(bucketCol).as("buckets"))
+        collect_set(bucketCol).as("buckets"),
+        lowestLsnDirty(tagged.columns.toIndexedSeq, opts.dirtySampleN).as("samples"))
       .collect()
     val parts = acct.groupBy(_.getInt(0)).map { case (p, rs) =>
       val los = rs.collect { case r if !r.isNullAt(3) => r.getLong(3) }
@@ -163,7 +167,8 @@ object CdcPipeline {
     // Quarantine samples BEFORE the error-limit gate so a failed batch is
     // diagnosable from the persisted offenders (reference: dirty records
     // retained by TaskPluginCollector even when the job then aborts).
-    if (stats.dirty > 0) writeDirtySamples(table, tagged, epoch, opts.dirtySampleN)
+    if (stats.dirty > 0)
+      writeDirtySamples(table, tagged, acct.filterNot(_.isNullAt(1)), epoch, opts.dirtySampleN)
     stats.enforce(opts.errorLimit)
     val touched = acct.filter(_.isNullAt(1))
       .flatMap(_.getSeq[Int](5)).toSet
@@ -256,14 +261,33 @@ object CdcPipeline {
     }
   }
 
+  /** A group's `n` lowest-lsn dirty rows, nulls first, as
+    * array<struct<lsn, row>>: a bounded top-n aggregate (a heap of `n` per
+    * group, not a list of the group), so `collect` returns at most
+    * partitions x reasons x `n` rows. Rows of equal lsn order by their
+    * columns, all of which are orderable in the change envelope. */
+  private def lowestLsnDirty(cols: Seq[String], n: Int): Column = {
+    val dirtyRow = when(col(Dirty.ReasonCol).isNotNull,
+      struct(col("lsn").as("lsn"), struct(cols.map(col): _*).as("row")))
+    // the companion is package-private: reverse = true keeps the smallest
+    GraftExprBridge.column(new CollectTopK(GraftExprBridge.expression(dirtyRow),
+      math.max(n, 1), true, 0, 0).toAggregateExpression())
+  }
+
   /** Persist up to `n` offending rows per dirty reason for this epoch under
     * `<table>/meta/dirty/epoch-N/` (row + __dirty_reason), alongside the
     * lineage JSON — the reference's sampled dirty-record capture
-    * (reference: core/.../statistics/plugin/task/StdoutPluginCollector.java). */
-  private def writeDirtySamples(table: SnapTable, tagged: DataFrame, epoch: Long,
-      n: Int): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(Dirty.ReasonCol).orderBy(col("lsn").asc_nulls_first)
+    * (reference: core/.../statistics/plugin/task/StdoutPluginCollector.java).
+    * The rows come from the accounting pass's dirty groups ([[lowestLsnDirty]]
+    * per partition and reason); this keeps each reason's `n` lowest-lsn
+    * rows and writes them, ordered by reason and lsn, as one local relation. */
+  private def writeDirtySamples(table: SnapTable, tagged: DataFrame, dirtyGroups: Array[Row],
+      epoch: Long, n: Int): Unit = {
+    val lsnNullsFirst =
+      Ordering.by((r: Row) => (!r.isNullAt(0), if (r.isNullAt(0)) 0L else r.getLong(0)))
+    val rows = dirtyGroups.groupBy(_.getString(1)).toSeq.sortBy(_._1).flatMap { case (_, gs) =>
+      gs.flatMap(_.getSeq[Row](6)).sorted(lsnNullsFirst).take(n).map(_.getStruct(1))
+    }
     // write ASIDE, then claim the epoch dir by rename — two writers racing
     // the same epoch (see the cross-JVM race test) would otherwise
     // overwrite the same directory concurrently (delete-under-write); with
@@ -272,11 +296,10 @@ object CdcPipeline {
     val finalDir = new org.apache.hadoop.fs.Path(table.root, f"meta/dirty/epoch-$epoch%08d")
     val aside = new org.apache.hadoop.fs.Path(table.root,
       f"meta/dirty/.tmp-epoch-$epoch%08d-${System.nanoTime()}")
-    tagged.filter(col(Dirty.ReasonCol).isNotNull)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= n).drop("__rn")
+    val spark = tagged.sparkSession
+    spark.createDataFrame(rows.asJava, tagged.schema).coalesce(1)
       .write.mode("overwrite").parquet(aside.toString)
-    val fs = finalDir.getFileSystem(tagged.sparkSession.sessionState.newHadoopConf())
+    val fs = finalDir.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(finalDir) || !fs.rename(aside, finalDir)) fs.delete(aside, true): Unit
     // exists-then-rename is not atomic: a loser's rename against an existing
     // dst can land INSIDE it on local FS (dst/.tmp-*; dot-prefixed, so

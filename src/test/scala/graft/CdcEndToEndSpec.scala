@@ -249,6 +249,27 @@ class CdcEndToEndSpec extends SparkSpec {
     // epochs with no dirty rows write no quarantine dir
     CdcPipeline.applyBatch(t, good.toDF(), epoch = 1)
     assert(CdcPipeline.readDirtySamples(spark, t, 1).isEmpty)
+
+    // more than n dirty rows per reason over 4 input partitions: each
+    // reason keeps exactly its n lowest-lsn rows, null lsns first
+    val n = 5
+    def at(lsn: Long, conv: String = "c3", op: String = "U") =
+      ChangeEvent(conv, lsn.toInt, "user", s"d$lsn", null, new java.sql.Timestamp(2000L + lsn),
+        lsn, op)
+    val many = good.map(e => at(e.lsn + 400)) ++
+      (200L until 220L).map(at(_, conv = null)) ++ // conv_id_null; 210 and 215 lose their lsn
+      (311L to 300L by -1).map(at(_, op = "Z")) ++ // op_domain
+      (500L until 503L).map(at(_)) // lsn_null: fewer than n, all kept
+    val nullLsn = Set(210L, 215L) ++ (500L until 503L)
+    val batch = many.toDF().repartition(4)
+      .withColumn("lsn", when(col("lsn").isin(nullLsn.toSeq: _*), lit(null)).otherwise(col("lsn")))
+    CdcPipeline.applyBatch(t, batch, epoch = 2, PipelineOptions(
+      errorLimit = ErrorLimit(record = None, percentage = Some(0.9)), dirtySampleN = n))
+    val kept = CdcPipeline.readDirtySamples(spark, t, 2).get
+      .select(col(Dirty.ReasonCol), col("lsn").cast("string")).as[(String, String)].collect()
+    assert(kept.toSeq == Seq(("conv_id_null", null), ("conv_id_null", null),
+      ("conv_id_null", "200"), ("conv_id_null", "201"), ("conv_id_null", "202")) ++
+      Seq.fill(3)(("lsn_null", null)) ++ (300 to 304).map(l => ("op_domain", l.toString)))
   }
 
   test("bucket assignment is stable under merge-key type widening") {

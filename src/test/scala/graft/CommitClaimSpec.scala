@@ -117,6 +117,31 @@ class CommitClaimSpec extends SparkSpec {
     }
   }
 
+  test("a CoW epoch on the session's local FS claims its manifest by link") {
+    val root = tmpDir("claim-link")
+    val t = SnapTable.create(spark, root, Schemas.payloadV2, numBuckets = 4)
+    val e0 = (1 to 10).map(i => ev(i, 100 + i))
+    CdcPipeline.applyBatch(t, e0.toDF(), 0)
+    // a rival publishes v2 between this writer's snapshot and its claim:
+    // link(2) refuses the taken name, where a local rename would replace
+    // the rival's manifest, so the epoch retries and lands as v3
+    implicit val fmts: Formats = Serialization.formats(NoTypeHints)
+    val rival = t.snapshot().copy(version = 2L, parent = 1L,
+      props = t.snapshot().props + ("writer" -> "rival"))
+    var attempts = 0
+    t.beforeCommitHook = () => {
+      attempts += 1
+      if (attempts == 1) Files.write(Paths.get(root, "meta", "snap-00000002.json"),
+        Serialization.write(rival).getBytes(StandardCharsets.UTF_8)): Unit
+    }
+    val next = Seq(ev(11, 201))
+    val rec = try CdcPipeline.applyBatch(t, next.toDF(), 1)
+      finally t.beforeCommitHook = () => ()
+    assert(rec.result == "committed" && attempts == 2, s"${rec.result} after $attempts attempts")
+    assert(t.snapshot(2L).props("writer") == "rival" && t.currentVersion == 3L)
+    assert(state(t) == oracle(e0 ++ next))
+  }
+
   test("a writer stalled across a retention round does not lose its epoch") {
     val root = tmpDir("stall")
     val t = SnapTable.create(spark, root, Schemas.payloadV2, numBuckets = 4)

@@ -16,14 +16,34 @@ class EntrySpec extends SparkSpec {
   // queries that legitimately return few/zero rows at tiny scale
   private val mayBeEmpty = Set("q_anti_join")
 
+  /** The `graft-*` dirs in `java.io.tmpdir`, where query runs make their
+    * scratch space. */
+  private def scratchDirs(): Set[String] =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).list()).toSet.flatten
+      .filter(_.startsWith("graft-"))
+
   for (q <- SparkEntry.registry.sortBy(_.name)) {
     test(s"${q.name} runs at sf0.001") {
-      val n = q.run(spark, sf).count()
+      val n = q.run(spark, sf)(_.count())
       if (!mayBeEmpty(q.name)) assert(n > 0, s"${q.name} returned 0 rows")
     }
   }
 
+  // one pass above ran every entry; a second pass must leave the temp dir as
+  // it found it, and a frame taken from the name-keyed view stays readable
+  // after its run's scratch space is gone
+  test("registry runs delete their scratch space once the result is consumed") {
+    val before = scratchDirs()
+    for (q <- SparkEntry.registry) q.run(spark, sf)(_.count())
+    assert(scratchDirs() -- before == Set.empty)
+    val roundtrip = SparkEntry.queries("q_file_roundtrip")(spark, sf)
+    assert(scratchDirs() -- before == Set.empty)
+    assert(roundtrip.count() == spark.read.parquet(s"$sf/orders.parquet").count())
+  }
+
   test("entry() flagship returns rows") {
-    assert(SparkEntry.entry(spark).count() > 0)
+    val before = scratchDirs()
+    assert(SparkEntry.entry(spark)(_.count()) > 0)
+    assert(scratchDirs() -- before == Set.empty)
   }
 }

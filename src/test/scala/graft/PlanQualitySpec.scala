@@ -200,6 +200,48 @@ class PlanQualitySpec extends SparkSpec {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  test("dirty samples cost a CoW epoch one job: the write of the rows accounting kept") {
+    import spark.implicits._
+    val ev = (i: Int, lsn: Long, op: String) => graft.model.ChangeEvent(s"c${i % 40}", i,
+      "user", s"v$lsn", null, new java.sql.Timestamp(1000L + lsn), lsn, op)
+    val t = graft.table.SnapTable.create(spark, tmpDir("dirtyjobs"),
+      graft.model.Schemas.payloadV2, numBuckets = 8)
+    graft.cdc.CdcPipeline.applyBatch(t, (1 to 400).map(i => ev(i, i, "I")).toDF(), 0)
+    // two epochs of the same keys and shape; in the second, every 25th
+    // event is envelope-invalid
+    def epoch(e: Int, dirty: Boolean) = (1 to 400).map(i =>
+      ev(i, 1000L * e + i, if (dirty && i % 25 == 0) "X" else "U")).toDF().repartition(4)
+    val opts = graft.cdc.PipelineOptions(
+      errorLimit = graft.cdc.ErrorLimit(record = None, percentage = Some(0.5)))
+    // Spark jobs started on this thread (tagged by a local property, so
+    // suites sharing the session do not count)
+    def jobs(body: => Any): Int = {
+      val key = "graft.test.dirtyJobs"
+      val tag = java.util.UUID.randomUUID().toString
+      val started = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(j.properties).exists(_.getProperty(key) == tag)) started.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        spark.sparkContext.setLocalProperty(key, tag)
+        try body finally spark.sparkContext.setLocalProperty(key, null)
+        // listener delivery is async: poll until the count is stable
+        var (stable, last) = (0, -1)
+        while (stable < 5) {
+          Thread.sleep(200)
+          if (started.get == last) stable += 1 else { stable = 0; last = started.get }
+        }
+        last
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val clean = jobs(graft.cdc.CdcPipeline.applyBatch(t, epoch(1, dirty = false), 1, opts))
+    val dirty = jobs(graft.cdc.CdcPipeline.applyBatch(t, epoch(2, dirty = true), 2, opts))
+    assert(graft.cdc.CdcPipeline.readDirtySamples(spark, t, 2).get.count() == 16)
+    assert(dirty - clean == 1, s"clean epoch $clean jobs, dirty epoch $dirty")
+  }
+
   test("tombstone expiry counts only files that can hold an expired tombstone") {
     import spark.implicits._
     val root = tmpDir("tombscan")
