@@ -23,14 +23,7 @@ object GraftSession {
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      // ObjectHashAggregate (the typed-imperative lww_winner reduce) keeps
-      // one full row per key in an UNSPILLABLE hash map; this threshold is
-      // its only memory guard: one task slot's key budget, far above the
-      // 128 default that would sort immediately. The merge hot path
-      // additionally raises it per-job (SnapTable scopes
-      // LwwFallbackThreshold around its reduce, whose task count keeps keys
-      // per task within a bucket or this budget); everything else keeps
-      // this graceful fallback.
+      // the LWW reduce's memory bound: see SnapTable.TaskKeyBudget
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         graft.table.SnapTable.TaskKeyBudget.toString)
       // `file:` without libhadoop forks chmod per created file and readlink

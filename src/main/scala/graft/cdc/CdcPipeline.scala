@@ -180,8 +180,8 @@ object CdcPipeline {
     // per-event projection here.
     val derived = if (opts.enrich) enrichmentColumns else graft.table.Derived.none
     // No pre-merge dedup pass: the merge's own LWW aggregation reduces the
-    // batch (with map-side partials) in the same shuffle that folds in the
-    // stored rows.
+    // batch after the one bucket exchange that also brings in the stored
+    // rows; both of its aggregate phases run there, none map-side.
     val mergeResult = opts.mergeMode match {
       // stats.clean (counted in the accounting pass above — no extra
       // scan) sizes the reduce's task count and lets the merge pick the

@@ -24,10 +24,8 @@ final class LwwBuffer(var ts: Long, var lsn: Long, var value: UnsafeRow)
  * event gets SORTED by merge key before reduction. This
  * TypedImperativeAggregate keeps an 8+8-byte ordering plus one compact
  * UnsafeRow per key in ObjectHashAggregate's hash map: the reduce becomes
- * one hash probe + compare per event, no sort. (Pair it with a raised
- * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` — the 128-key
- * default falls back to sorting immediately; graft's session sets it high
- * enough for bucket-sized key counts.)
+ * one hash probe + compare per event, no sort, up to the session's sort
+ * fallback threshold (see `SnapTable.TaskKeyBudget`).
  *
  * Null ordering matches max_by: a null ts/lsn compares smallest (it can
  * only win when nothing else exists).

@@ -392,15 +392,15 @@ final class SnapTable private (val root: String, fs: FileSystem) {
       val touched = knownTouched.collect { case (n, ids) if n == snap.numBuckets => ids }
         .getOrElse(batch.select(bucketExpr(snap.numBuckets)).distinct().collect()
           .map(_.getInt(0)).toSet)
-      (snap.files.filter(f => touched(f.bucket)), touched.size)
+      (snap.files.filter(f => touched(f.bucket)), touched)
     }
 
   /** One epoch write, retried until it commits or finds its epoch applied:
     * `fold` names the stored files the attempt's snapshot folds in and the
-    * number of buckets it writes. */
+    * buckets it writes. */
   private def epochWrite(batch: DataFrame, epoch: Long, derived: Derived,
       batchRowsHint: Option[Long], kind: String)(
-      fold: Snapshot => (Seq[DataFileEntry], Int)): MergeResult =
+      fold: Snapshot => (Seq[DataFileEntry], Set[Int])): MergeResult =
     retryingCommit {
       val snap = snapshot()
       requireBucketFn(snap)
@@ -436,38 +436,6 @@ final class SnapTable private (val root: String, fs: FileSystem) {
 
   private val MaxCommitAttempts = 5
 
-  /** Run `body` (a job containing the LWW reduce) with the
-    * ObjectHashAggregate sort-fallback threshold raised to
-    * [[SnapTable.LwwFallbackThreshold]], restoring the session value after.
-    * Scoped per-job rather than session-wide: the raised threshold removes
-    * the sort-based safety valve (each LwwBuffer pins a full UnsafeRow in
-    * an unspillable map), which is safe HERE because [[SnapTable.lwwTasks]]
-    * sizes the reduce so a task's keys stay within about one bucket's rows
-    * or [[SnapTable.TaskKeyBudget]] input rows, whichever is larger
-    * (rebucket keeps buckets task-sized as the table grows) — but would be
-    * an OOM hazard for arbitrary session aggregations. */
-  private def withLwwAggConf[T](spark: SparkSession)(body: => T): T = {
-    val k = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    // Serialized per SESSION: the threshold lives in the session-global SQL
-    // conf, so two interleaved merge writes could save each other's raised
-    // value as "previous" and leave the 4M threshold set permanently
-    // (A-set, B-set-saving-4M, A-restore, B-restore-4M). One lock per
-    // session makes set/body/restore atomic; merges on DIFFERENT sessions
-    // (separate confs) still run concurrently. Residual, documented: an
-    // unrelated aggregation on the same session DURING a merge write sees
-    // the raised threshold for that bounded window — callers running mixed
-    // workloads should give ingest its own `spark.newSession()`.
-    SnapTable.lwwConfLock(spark).synchronized {
-      val prev = spark.conf.getOption(k)
-      spark.conf.set(k, SnapTable.LwwFallbackThreshold.toString)
-      try body
-      finally prev match {
-        case Some(v) => spark.conf.set(k, v)
-        case None => spark.conf.unset(k)
-      }
-    }
-  }
-
   /** Test seam: runs right before an attempt's commit (lets a test inject
     * a competing writer into the conflict window). */
   private[graft] var beforeCommitHook: () => Unit = () => ()
@@ -502,9 +470,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
       replaced: Seq[DataFileEntry], kind: String): Option[MergeResult.Committed] = {
     val version = snap.version + 1
     val rel = SnapTable.commitDir(version)
-    withLwwAggConf(rows.sparkSession) {
-      rows.write.mode("overwrite").partitionBy(BucketCol).parquet(s"$root/$rel")
-    }
+    rows.write.mode("overwrite").partitionBy(BucketCol).parquet(s"$root/$rel")
     val written = listBucketFiles(rows.sparkSession, s"$root/$rel", rel,
       edited.currentSchemaV, kind)
     val files = snap.files.filterNot(replaced.toSet) ++ written
@@ -544,7 +510,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
    * and key-adjacent text compresses better. Ingest never pays this sort.
    */
   private def reduceAndWrite(spark: SparkSession, snap: Snapshot, edited: Snapshot,
-      fold: Seq[DataFileEntry], batch: Option[(DataFrame, Option[Long])], written: Int,
+      fold: Seq[DataFileEntry], batch: Option[(DataFrame, Option[Long])], written: Set[Int],
       derived: Derived = Derived.none, keep: Option[Column] = None,
       kind: String = "base"): Option[MergeResult.Committed] = {
     val stored = fold.map(_.rows).sum
@@ -717,7 +683,8 @@ final class SnapTable private (val root: String, fs: FileSystem) {
       batchRowsHint: Option[Long] = None): MergeResult =
     // batch-local LWW (dedupes duplicate delivery inside the epoch); stored
     // rows are NOT read — cross-epoch reduce happens at read/compaction
-    epochWrite(batch, epoch, derived, batchRowsHint, "delta")(snap => (Nil, snap.numBuckets))
+    epochWrite(batch, epoch, derived, batchRowsHint, "delta")(snap =>
+      (Nil, (0 until snap.numBuckets).toSet))
 
   /** Number of delta files currently outstanding (compaction-policy input). */
   def deltaFileCount: Int = snapshot().files.count(_.kind == "delta")
@@ -738,7 +705,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
       val files = snap.files.filter(f => dirty(f.bucket))
       n = files.size
       if (dirty.isEmpty) Some(MergeResult.SkippedEpoch)
-      else reduceAndWrite(spark, snap, snap, files, None, dirty.size)
+      else reduceAndWrite(spark, snap, snap, files, None, dirty)
     }
     if (r == MergeResult.SkippedEpoch) 0L else n
   }
@@ -765,7 +732,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
       // laid out by an older hash
       reduceAndWrite(spark, snap, snap.copy(numBuckets = newBuckets,
         props = snap.props + (PropBucketFn -> BucketFnVersion.toString)),
-        snap.files, None, newBuckets)
+        snap.files, None, (0 until newBuckets).toSet)
     }: Unit
   }
 
@@ -799,7 +766,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
       if (n == 0) Some(MergeResult.SkippedEpoch)
       else reduceAndWrite(spark, snap,
         snap.copy(props = snap.props + (PropTombstoneHorizon -> horizon.toString)),
-        snap.files.filter(f => perBucket.contains(f.bucket)), None, perBucket.size,
+        snap.files.filter(f => perBucket.contains(f.bucket)), None, perBucket.keySet,
         keep = Some(!expired))
     }
     if (r == MergeResult.SkippedEpoch) 0L else n
@@ -830,43 +797,41 @@ object SnapTable {
     * never be delivered the expired deletes — sync paths must fail fast and
     * full-resync instead of silently keeping deleted rows. */
   val PropTombstoneHorizon = "graft.tombstoneHorizonLsn"
-  /** Per-job raised ObjectHashAggregate fallback threshold for the merge
-    * reduce (see `withLwwAggConf`): keys per task there stay within about
-    * one bucket's rows (kept task-sized by layout, rebucket) or
-    * [[TaskKeyBudget]] input rows, whichever is larger (see [[lwwTasks]]),
-    * so removing the sort fallback up to 4M keys cannot pin unbounded
-    * memory. */
-  val LwwFallbackThreshold = 4194304
-
-  /** Keys one task slot may safely hold in ObjectHashAggregate's
-    * unspillable map: 262144 keys x ~1-2 KB transcript row ≈ 256-512 MB,
-    * inside a standard 4-core/8GB executor slot. The session-wide sort
-    * fallback threshold (`GraftSession`) and the input-rows-per-task bound
-    * of [[lwwTasks]]. */
+  /** Keys one task slot may hold in ObjectHashAggregate's unspillable map:
+    * 262144 keys x ~1-2 KB transcript row ≈ 256-512 MB, inside a standard
+    * 4-core/8GB executor slot. It is the one memory bound of the LWW reduce:
+    * `GraftSession` sets it as the session's sort fallback threshold, and
+    * [[lwwTasks]] sizes every write so no task holds more input rows. A task
+    * past it falls back to the aggregate's spillable sort, which is bounded
+    * but slower, so a write's speed assumes that session threshold. */
   val TaskKeyBudget = 262144
 
-  /** Task count of an LWW reduce-and-write stage that writes `buckets`
-    * buckets from `inputRows` rows: one task per core, more only when that
-    * would put more than [[TaskKeyBudget]] input rows in a task, and never
-    * more than the buckets written (the bucket is the file and co-location
-    * unit, so an extra task would write nothing). An unknown input size
-    * counts as unbounded — one task per bucket. */
-  private[graft] def lwwTasks(buckets: Int, inputRows: Option[Long], cores: Int): Int = {
-    val byRows = inputRows.fold(Long.MaxValue)(r => (r + TaskKeyBudget - 1) / TaskKeyBudget)
-    math.max(1, math.min(buckets.toLong, math.max(cores.toLong, byRows)).toInt)
+  /** Task count of an LWW reduce-and-write stage that writes the buckets
+    * `bucketIds` from `inputRows` rows: the fewest tasks, at least one per
+    * core and ⌈rows ÷ [[TaskKeyBudget]]⌉, whose fullest task holds at most
+    * [[TaskKeyBudget]] rows, counting rows ÷ buckets rows a bucket placed
+    * where the exchange places it ([[placement]], which is uneven). Never
+    * more tasks than buckets written (the bucket is the file and
+    * co-location unit, so an extra task would write nothing); past that cap
+    * the aggregate's sort fallback bounds the memory, and the layout wants
+    * a [[rebucket]]. An unknown input size counts as unbounded — one task
+    * per bucket. */
+  private[graft] def lwwTasks(bucketIds: Set[Int], inputRows: Option[Long], cores: Int): Int = {
+    val buckets = bucketIds.size.toLong
+    def fullest(tasks: Long) =
+      bucketIds.toSeq.groupMapReduce(placement(_, tasks.toInt))(_ => 1)(_ + _).values.max
+    val tasks = inputRows.fold(buckets) { rows =>
+      val least = math.max(cores.toLong, (rows + TaskKeyBudget - 1) / TaskKeyBudget)
+      (least until buckets).find(t => fullest(t) * rows <= TaskKeyBudget * buckets)
+        .getOrElse(buckets)
+    }
+    math.max(1, tasks.toInt)
   }
 
-  /** One lock object per SparkSession for `withLwwAggConf` (weak keys: a
-    * dropped session's lock is collectable). */
-  private val lwwConfLocks =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, Object]())
-  private def lwwConfLock(spark: SparkSession): Object =
-    lwwConfLocks.synchronized {
-      var l = lwwConfLocks.get(spark)
-      if (l == null) { l = new Object; lwwConfLocks.put(spark, l) }
-      l
-    }
+  /** The task of `tasks` that the bucket exchange sends `bucket` to:
+    * `HashPartitioning`'s `pmod(murmur3(bucket, 42), tasks)`. */
+  private[graft] def placement(bucket: Int, tasks: Int): Int =
+    math.floorMod(org.apache.spark.unsafe.hash.Murmur3_x86_32.hashInt(bucket, 42), tasks)
 
   /**
    * Per-key LWW winners of a frame that carries [[BucketCol]], reduced in
@@ -878,12 +843,12 @@ object SnapTable {
    * no second exchange between the reduce and the partitionBy write.
    * `PlanQualitySpec` pins the single-exchange plan.
    *
-   * `buckets` is the number of buckets the frame writes and `inputRows` its
-   * row count when known; [[lwwTasks]] turns them into the task count, so
+   * `buckets` are the buckets the frame writes and `inputRows` its row
+   * count when known; [[lwwTasks]] turns them into the task count, so
    * a task reduces and writes several whole buckets (each still one file).
    */
   private[graft] def lwwWinners(df: DataFrame, target: StructType,
-      buckets: Int, inputRows: Option[Long] = None): DataFrame = {
+      buckets: Set[Int], inputRows: Option[Long] = None): DataFrame = {
     val tasks = lwwTasks(buckets, inputRows, df.sparkSession.sparkContext.defaultParallelism)
     graft.functions.LwwWinner.winners(df.repartition(tasks, col(BucketCol)),
       graft.model.Schemas.mergeKeys :+ BucketCol, target.fieldNames.toSeq)

@@ -130,4 +130,78 @@ class ConcurrencySpec extends SparkSpec {
         s"$name: orphan commit dirs: ${dataDirs.diff(referenced)}")
     }
   }
+
+  test("two tables' epochs write at once on one session, under its own fallback threshold") {
+    val threshold = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    val key = "graft.test.writer"
+    val events = (1 to 200).map(i => ev(i, 100 + i)) ++ (1 to 200 by 3).map(i => ev(i, 400 + i))
+    val ta = SnapTable.create(spark, tmpDir("overlap-a"), Schemas.payloadV2, numBuckets = 8)
+    val tb = SnapTable.create(spark, tmpDir("overlap-b"), Schemas.payloadV2, numBuckets = 8)
+    // A's first derived-column eval blocks until B's write job starts
+    val gate = graft.table.Derived(graft.table.DerivedColumn("text_len",
+      org.apache.spark.sql.types.IntegerType,
+      udf((text: String) => { OverlapGate.pass(); text.length }).asNondeterministic()(
+        col("text"))))
+    val writes = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+              if s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") =>
+            writes.add(s.executionId)
+          case _ => ()
+        }
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(j.properties)
+        val exec = props.flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        if (props.exists(_.getProperty(key) == "B") && exec.exists(id => writes.contains(id.toLong)))
+          OverlapGate.bWriting.countDown()
+      }
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutor(pool)
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val a = Future(ta.merge(events.toDF(), epoch = 0, derived = gate))
+      assert(OverlapGate.entered.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "A's write never evaluated its derived column")
+      // read while A's write task is blocked inside its reduce
+      val during = spark.conf.get(threshold)
+      val b = Future {
+        spark.sparkContext.setLocalProperty(key, "B")
+        try tb.merge(events.toDF(), epoch = 0)
+        finally spark.sparkContext.setLocalProperty(key, null)
+      }
+      val results = Seq(Await.result(a, 3.minutes), Await.result(b, 3.minutes))
+      assert(during == SnapTable.TaskKeyBudget.toString && OverlapGate.overlapped,
+        s"threshold during A's write: $during; B's write started while A's was blocked: " +
+          OverlapGate.overlapped)
+      assert(results.forall(_.isInstanceOf[MergeResult.Committed]))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      pool.shutdown()
+    }
+    val oracle = graft.oracle.OracleReducer.reduce(events)
+      .map(e => (e.conv_id, e.turn_idx, e.text)).toSet
+    for (t <- Seq(ta, tb)) assert(t.read(spark).select("conv_id", "turn_idx", "text")
+      .as[(String, Int, String)].collect().toSet == oracle)
+  }
+}
+
+/** JVM-wide latches for the overlap test: tasks deserialize their closures,
+  * so they reach shared state only through an object. */
+object OverlapGate {
+  val entered = new java.util.concurrent.CountDownLatch(1)
+  val bWriting = new java.util.concurrent.CountDownLatch(1)
+  private val first = new java.util.concurrent.atomic.AtomicBoolean(true)
+  @volatile var overlapped = false
+
+  /** The first caller waits (at most 30 s) for B's write job to start. */
+  def pass(): Unit = if (first.compareAndSet(true, false)) {
+    entered.countDown()
+    overlapped = bWriting.await(30, java.util.concurrent.TimeUnit.SECONDS)
+  }
 }

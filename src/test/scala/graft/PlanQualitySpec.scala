@@ -143,7 +143,7 @@ class PlanQualitySpec extends SparkSpec {
       .withColumn("__bucket", pmod(xxhash64(col("conv_id"),
         col("turn_idx").cast("long")), lit(8)).cast("int"))
     val winners = graft.table.SnapTable.lwwWinners(df,
-      graft.model.Schemas.envelopeV2, 8)
+      graft.model.Schemas.envelopeV2, (0 until 8).toSet)
     winners.collect()
     // AQE prints the initial plan after the final one — only the final counts
     val s = winners.queryExecution.executedPlan.toString()

@@ -5,7 +5,9 @@ import graft.model.{ChangeEvent, Schemas}
 import graft.oracle.OracleReducer
 import graft.table.SnapTable
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, spark_partition_id}
+
+import scala.jdk.CollectionConverters._
 
 /**
  * Task sizing of the LWW reduce-and-write stage: the task count comes from
@@ -54,17 +56,32 @@ class WriteStageSpec extends SparkSpec {
 
   test("sizing rule: cores, raised by input rows over the key budget, capped by buckets") {
     val budget = SnapTable.TaskKeyBudget.toLong
-    assert(SnapTable.lwwTasks(32, Some(1000L), 4) == 4)
-    assert(SnapTable.lwwTasks(32, Some(0L), 4) == 4)
-    // more input rows than budget x cores raise the count
-    assert(SnapTable.lwwTasks(32, Some(budget * 4 + 1), 4) == 5)
-    assert(SnapTable.lwwTasks(32, Some(budget * 10), 4) == 10)
+    val all32 = (0 until 32).toSet
+    assert(SnapTable.lwwTasks(all32, Some(1000L), 4) == 4)
+    assert(SnapTable.lwwTasks(all32, Some(0L), 4) == 4)
+    // more input rows than budget x cores raise the count until the fullest
+    // task's buckets fit: 32 buckets put 10 on the fullest of 4 tasks, and
+    // at budget/8 rows a bucket the first count holding at most 7 is 7
+    assert(SnapTable.lwwTasks(all32, Some(budget * 4 + 1), 4) == 7)
+    // at 10 x budget only 3 buckets fit a task; the first such count is 29
+    assert(SnapTable.lwwTasks(all32, Some(budget * 10), 4) == 29)
+    // 1.77M rows at 8 cores fit 4 buckets a task; the fullest task holds
+    // 6, 8, 7, 5, 8, 5, 5, 5, 4 buckets at 8 … 16 tasks
+    assert(SnapTable.lwwTasks(all32, Some(1770000L), 8) == 16)
     // never more tasks than buckets written
-    assert(SnapTable.lwwTasks(32, Some(budget * 1000), 4) == 32)
-    assert(SnapTable.lwwTasks(2, Some(10L), 8) == 2)
+    assert(SnapTable.lwwTasks(all32, Some(budget * 1000), 4) == 32)
+    assert(SnapTable.lwwTasks(Set(0, 1), Some(10L), 8) == 2)
     // unknown input size: one task per bucket
-    assert(SnapTable.lwwTasks(32, None, 4) == 32)
-    assert(SnapTable.lwwTasks(0, Some(0L), 4) == 1)
+    assert(SnapTable.lwwTasks(all32, None, 4) == 32)
+    assert(SnapTable.lwwTasks(Set.empty, Some(0L), 4) == 1)
+    // the rule places buckets where the bucket exchange does
+    val buckets = spark.range(32).select(col("id").cast("int").as(SnapTable.BucketCol))
+    for (t <- Seq(4, 8, 32)) {
+      val placed = buckets.repartition(t, col(SnapTable.BucketCol))
+        .select(col(SnapTable.BucketCol), spark_partition_id()).as[(Int, Int)].collect()
+      assert(placed.length == 32)
+      placed.foreach { case (b, p) => assert(SnapTable.placement(b, t) == p, s"bucket $b at $t") }
+    }
   }
 
   test("a CoW merge touching 32 buckets writes them in one task per core, one file each") {
@@ -102,6 +119,45 @@ class WriteStageSpec extends SparkSpec {
     assert(state(perBucket) == oracle)
   }
 
+  test("the session's sort fallback threshold governs the merge reduce") {
+    val session = spark.newSession()
+    session.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16")
+    val load = (1 to 1200).map(i => ev(i, i % 3, i))
+    val tail = (1 to 1200 by 2).map(i =>
+      ev(i, i % 3, 2000L + i, "w", if (i % 10 == 1) "D" else "U"))
+    val t = SnapTable.create(spark, tmpDir("valve"), Schemas.payloadV2, numBuckets = 8)
+    // the LWW aggregates of each write into the table, final plans
+    val aggs = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = qe.optimizedPlan match {
+        case _: org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand =>
+          AqePlans.collect(qe.executedPlan) {
+            case a: org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec => a
+          }.foreach(aggs.add)
+        case _ => ()
+      }
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    session.listenerManager.register(listener)
+    try {
+      t.merge(session.createDataFrame(load), epoch = 0)
+      t.merge(session.createDataFrame(tail), epoch = 1)
+      // listener delivery is async
+      val deadline = System.currentTimeMillis() + 30000
+      while (aggs.size < 4 && System.currentTimeMillis() < deadline) Thread.sleep(100)
+    } finally session.listenerManager.unregister(listener)
+    assert(aggs.size == 4, s"expected two aggregate phases in each of two writes: $aggs")
+    val fallbacks = aggs.asScala.map(_.metrics("numTasksFallBacked").value).sum
+    assert(fallbacks > 0, "no reduce task fell back to the sort at a 16-key threshold")
+    val oracle = OracleReducer.reduce(load ++ tail).filter(_.op != "D")
+      .map(e => (e.conv_id, e.turn_idx, e.text)).toSet
+    assert(t.read(spark).select("conv_id", "turn_idx", "text").as[(String, Int, String)]
+      .collect().toSet == oracle)
+  }
+
   test("bucketOf computes the layout bucket of int and long turn_idx keys") {
     val keys = (1 to 300).map(i => (s"conv-${i * 7919}", (i * 104729L) % 5000))
     val intKeys = keys.map { case (c, t) => (c, t.toInt) }.toDF("conv_id", "turn_idx")
@@ -127,3 +183,6 @@ class WriteStageSpec extends SparkSpec {
     }
   }
 }
+
+/** Walks a plan through its adaptive wrappers and query stages. */
+private object AqePlans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
