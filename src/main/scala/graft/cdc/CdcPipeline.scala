@@ -2,14 +2,16 @@ package graft.cdc
 
 import graft.model.Schemas
 import graft.table.{MergeResult, SnapTable}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, GraftExprBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.json4s.{Formats, NoTypeHints}
+import org.json4s.jackson.Serialization
 
 import scala.jdk.CollectionConverters._
-
-import java.nio.charset.StandardCharsets
 
 /** Per-epoch lineage record (north rule: per-partition source offset range,
   * rows applied, merge latency). */
@@ -111,6 +113,8 @@ final case class PipelineOptions(
  */
 object CdcPipeline {
 
+  private implicit val fmts: Formats = Serialization.formats(NoTypeHints)
+
   /** Per-row text enrichment (quality score, language id, token count) as
     * write-time derived columns: one gated `textStats` single-pass eval per
     * FRESH winner (the prelude), three cheap projections reading from it. */
@@ -207,7 +211,7 @@ object CdcPipeline {
     }
     val rec = LineageRecord(epoch, parts, stats.clean + stats.dirty, stats.dirty,
       applied, buckets, (System.nanoTime() - t0) / 1000000L, result)
-    writeLineage(batch.sparkSession, table, rec)
+    writeLineage(table, rec)
     opts.retention.foreach { pol =>
       if (result == "committed" && epoch % math.max(1, pol.everyEpochs) == 0)
         applyRetention(batch.sparkSession, table, pol, epoch)
@@ -230,8 +234,11 @@ object CdcPipeline {
     gcEpochMeta(spark, table, epoch - pol.retainMetaEpochs)
   }
 
-  /** Delete quarantine dirs and lineage records for epochs strictly below
-    * `beforeEpoch`. */
+  /** Delete the quarantine samples and lineage records of epochs strictly
+    * below `beforeEpoch`, with the asides a crashed publish left: every
+    * name under `meta/dirty` and `meta/lineage` carries its epoch as its
+    * first run of digits ([[epochOf]]), including an earlier build's
+    * `epoch-N/` sample dirs and `.tmp-epoch-*` asides. */
   private def gcEpochMeta(spark: SparkSession, table: SnapTable,
       beforeEpoch: Long): Unit = {
     if (beforeEpoch <= 0) return
@@ -239,27 +246,17 @@ object CdcPipeline {
     // settings (object-store credentials, endpoints) must reach the FS
     val conf = spark.sessionState.newHadoopConf()
     for (sub <- Seq("dirty", "lineage")) {
-      val dir = new org.apache.hadoop.fs.Path(table.root, s"meta/$sub")
+      val dir = new Path(table.root, s"meta/$sub")
       val fs = dir.getFileSystem(conf)
-      if (fs.exists(dir)) {
-        fs.listStatus(dir).foreach { st =>
-          // epoch-XXXXXXXX[.json | .skip-<nanos>.json] (dirs or files), plus
-          // .tmp-epoch-XXXXXXXX-<nanos> aside dirs orphaned by a writer that
-          // crashed between the quarantine parquet write and its claiming
-          // rename (writeDirtySamples) — without collecting those, a
-          // long-running stream accumulates one dead dir per crash forever.
-          // Parse the leading digit run so every suffix variant GCs.
-          val name = st.getPath.getName
-          val core =
-            if (name.startsWith(".tmp-epoch-")) name.stripPrefix(".tmp-epoch-")
-            else name.stripPrefix("epoch-")
-          val ep = core.takeWhile(_.isDigit)
-          if (ep.nonEmpty && ep.toLong < beforeEpoch)
-            fs.delete(st.getPath, true): Unit
-        }
-      }
+      if (fs.exists(dir)) fs.listStatus(dir)
+        .filter(st => epochOf(st.getPath.getName).exists(_ < beforeEpoch))
+        .foreach(st => fs.delete(st.getPath, true))
     }
   }
+
+  /** The epoch a `meta/` sideband name carries: its first run of digits. */
+  private def epochOf(name: String): Option[Long] =
+    name.dropWhile(!_.isDigit).takeWhile(_.isDigit).toLongOption
 
   /** A group's `n` lowest-lsn dirty rows, nulls first, as
     * array<struct<lsn, row>>: a bounded top-n aggregate (a heap of `n` per
@@ -274,13 +271,16 @@ object CdcPipeline {
       math.max(n, 1), true, 0, 0).toAggregateExpression())
   }
 
-  /** Persist up to `n` offending rows per dirty reason for this epoch under
-    * `<table>/meta/dirty/epoch-N/` (row + __dirty_reason), alongside the
+  /** Persist up to `n` offending rows per dirty reason for this epoch as
+    * `<table>/meta/dirty/epoch-N.json` (row + __dirty_reason), alongside the
     * lineage JSON — the reference's sampled dirty-record capture
     * (reference: core/.../statistics/plugin/task/StdoutPluginCollector.java).
     * The rows come from the accounting pass's dirty groups ([[lowestLsnDirty]]
     * per partition and reason); this keeps each reason's `n` lowest-lsn
-    * rows and writes them, ordered by reason and lsn, as one local relation. */
+    * rows, ordered by reason and lsn, and encodes them on the driver: the
+    * first line is the batch schema, then one JSON row per line (`to_json`
+    * over a local relation, which Catalyst folds without a job). Two
+    * writers racing the epoch publish identical samples; the first stands. */
   private def writeDirtySamples(table: SnapTable, tagged: DataFrame, dirtyGroups: Array[Row],
       epoch: Long, n: Int): Unit = {
     val lsnNullsFirst =
@@ -288,101 +288,71 @@ object CdcPipeline {
     val rows = dirtyGroups.groupBy(_.getString(1)).toSeq.sortBy(_._1).flatMap { case (_, gs) =>
       gs.flatMap(_.getSeq[Row](6)).sorted(lsnNullsFirst).take(n).map(_.getStruct(1))
     }
-    // write ASIDE, then claim the epoch dir by rename — two writers racing
-    // the same epoch (see the cross-JVM race test) would otherwise
-    // overwrite the same directory concurrently (delete-under-write); with
-    // rename the first claimant's samples stand and the loser discards its
-    // identical copy
-    val finalDir = new org.apache.hadoop.fs.Path(table.root, f"meta/dirty/epoch-$epoch%08d")
-    val aside = new org.apache.hadoop.fs.Path(table.root,
-      f"meta/dirty/.tmp-epoch-$epoch%08d-${System.nanoTime()}")
-    val spark = tagged.sparkSession
-    spark.createDataFrame(rows.asJava, tagged.schema).coalesce(1)
-      .write.mode("overwrite").parquet(aside.toString)
-    val fs = finalDir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(finalDir) || !fs.rename(aside, finalDir)) fs.delete(aside, true): Unit
-    // exists-then-rename is not atomic: a loser's rename against an existing
-    // dst can land INSIDE it on local FS (dst/.tmp-*; dot-prefixed, so
-    // parquet readers ignore it) — sweep it
-    val nested = new org.apache.hadoop.fs.Path(finalDir, aside.getName)
-    if (fs.exists(nested)) fs.delete(nested, true): Unit
+    val json = tagged.sparkSession.createDataFrame(rows.asJava, tagged.schema)
+      .select(to_json(struct(col("*")), SampleJson)).collect().map(_.getString(0))
+    table.publish(dirtySamplesPath(table, epoch), (tagged.schema.json +: json).mkString("\n")): Unit
   }
 
-  /** Read back the quarantined sample rows of an epoch (empty frame if the
-    * epoch had no dirty rows). */
+  /** JSON options of the sample file: the default timestamp formats keep
+    * milliseconds, these keep every microsecond. */
+  private val SampleJson = Map(
+    "timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+    "timestampNTZFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
+
+  private def dirtySamplesPath(table: SnapTable, epoch: Long) =
+    new Path(table.root, f"meta/dirty/epoch-$epoch%08d.json")
+
+  /** Read back the quarantined sample rows of an epoch, with their stored
+    * schema and in their stored order (None if the epoch had no dirty
+    * rows). */
   def readDirtySamples(spark: SparkSession, table: SnapTable, epoch: Long): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(table.root, f"meta/dirty/epoch-$epoch%08d")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
+    val text = try table.readString(dirtySamplesPath(table, epoch))
+      catch { case _: java.io.FileNotFoundException => return None }
+    // to_json escapes newlines inside values, so each line is one row
+    val lines = text.split('\n')
+    val schema = DataType.fromJson(lines.head).asInstanceOf[StructType]
+    import spark.implicits._
+    val rows = lines.tail.toSeq.toDF("j")
+      .select(from_json(col("j"), schema, SampleJson).as("r")).select("r.*").collect()
+    Some(spark.createDataFrame(rows.toSeq.asJava, schema))
   }
 
-  private def writeLineage(spark: SparkSession, table: SnapTable,
-      rec: LineageRecord): Unit = {
-    import org.json4s._
-    import org.json4s.jackson.Serialization
-    implicit val fmts: Formats = Serialization.formats(NoTypeHints)
-    val conf = spark.sessionState.newHadoopConf()
-    // exactly one writer commits a given epoch (the table's epoch guard),
-    // so the authoritative record owns `epoch-N.json`; a REPLAYED or
-    // concurrently-racing consumer records its skip under a distinct name —
-    // writing it to the same path would overwrite (or tear, under
-    // concurrent create) the committed writer's lineage
+  /** Publish the epoch's lineage record. Exactly one writer commits a given
+    * epoch (the table's epoch guard), so the committed record owns
+    * `epoch-N.json`; a REPLAYED or concurrently-racing consumer records its
+    * skip under a distinct name, so it can never replace the committed
+    * record. */
+  private def writeLineage(table: SnapTable, rec: LineageRecord): Unit = {
     val name =
       if (rec.result == "committed") f"epoch-${rec.epoch}%08d.json"
       else f"epoch-${rec.epoch}%08d.skip-${System.nanoTime()}.json"
-    val p = new org.apache.hadoop.fs.Path(table.root, s"meta/lineage/$name")
-    val fs = p.getFileSystem(conf)
-    // write-then-rename, never create-in-place: a crash (SIGKILL, stream
-    // stop) between create and write would leave a ZERO-LENGTH record under
-    // the final name — permanently, since a resumed consumer skip-records
-    // under a different name and never rewrites the committed slot. The
-    // dot-tmp is invisible to readLineage; a crash mid-write orphans only
-    // the tmp, which gcEpochMeta collects like the dirty-dir asides.
-    val tmp = new org.apache.hadoop.fs.Path(table.root,
-      f"meta/lineage/.tmp-epoch-${rec.epoch}%08d-${System.nanoTime()}.json")
-    val out = fs.create(tmp, true)
-    try out.write(Serialization.write(rec).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    // exactly one writer commits a given epoch, so its slot is free
-    if (!fs.rename(tmp, p)) {
+    val p = new Path(table.root, s"meta/lineage/$name")
+    if (!table.publish(p, Serialization.write(rec)))
       System.err.println(s"[lineage] WARNING epoch ${rec.epoch} record " +
-        s"(${rec.result}) not published: rename $tmp -> $p failed")
-      fs.delete(tmp, false): Unit
-    }
+        s"(${rec.result}) not published: $p is taken")
   }
 
+  /** Every readable lineage record, by epoch (then name: a committed record
+    * before its epoch's skips). */
   def readLineage(spark: SparkSession, table: SnapTable): Seq[LineageRecord] = {
-    import org.json4s._
-    import org.json4s.jackson.Serialization
-    implicit val fmts: Formats = Serialization.formats(NoTypeHints)
-    val conf = spark.sessionState.newHadoopConf()
-    val dir = new org.apache.hadoop.fs.Path(table.root, "meta/lineage")
-    val fs = dir.getFileSystem(conf)
+    val dir = new Path(table.root, "meta/lineage")
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(dir)) return Seq.empty
-    fs.listStatus(dir).toSeq.sortBy(_.getPath.getName).flatMap { st =>
-      // dot-names are in-flight tmps (writeLineage publishes by rename);
-      // anything unparseable is a pre-atomic-publish torn corpse — skip it
-      // loudly rather than fail the whole observability read: lineage is a
-      // sideband, and the table's own epoch guard (not lineage) is what
-      // enforces exactly-once
-      if (st.getPath.getName.startsWith(".")) None
-      else try {
-        // open inside the try: a record that vanishes between listStatus
-        // and open (a concurrent GC) is skipped like a torn one
-        val in = fs.open(st.getPath)
-        try {
-          val bytes = new Array[Byte](st.getLen.toInt)
-          in.readFully(bytes)
-          Some(Serialization.read[LineageRecord](
-            new String(bytes, StandardCharsets.UTF_8)))
-        } finally in.close()
-      } catch {
-        case scala.util.control.NonFatal(t) =>
-          System.err.println(s"[lineage] skipping unreadable record " +
-            s"${st.getPath.getName}: ${t.getMessage}")
-          None
+    // dot-names are publish asides; anything unparseable is an earlier
+    // build's torn record — skip it loudly rather than fail the whole
+    // observability read: lineage is a sideband, and the table's own epoch
+    // guard (not lineage) is what enforces exactly-once
+    fs.listStatus(dir).map(_.getPath.getName).filterNot(_.startsWith("."))
+      .sortBy(n => (epochOf(n), n)).toSeq.flatMap { name =>
+        // a record that vanishes between listStatus and read (a concurrent
+        // GC) is skipped like a torn one
+        try Some(Serialization.read[LineageRecord](table.readString(new Path(dir, name))))
+        catch {
+          case scala.util.control.NonFatal(t) =>
+            System.err.println(s"[lineage] skipping unreadable record $name: ${t.getMessage}")
+            None
+        }
       }
-    }
   }
 
   /** Batch replay of an entire changelog directory in one merge epoch —

@@ -119,12 +119,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
     case other => other
   }
 
-  private def writeString(p: Path, s: String): Unit = {
-    val out = raw.create(p, false)
-    try out.write(s.getBytes(StandardCharsets.UTF_8)) finally out.close()
-  }
-
-  private def readString(p: Path): String = {
+  private[graft] def readString(p: Path): String = {
     val in = fs.open(p)
     try {
       val buf = new java.io.ByteArrayOutputStream()
@@ -170,19 +165,43 @@ final class SnapTable private (val root: String, fs: FileSystem) {
     require(tryCommit(s), s"snapshot ${s.version} already exists (concurrent writer)")
 
   /**
-   * Publish `s` as version `s.version`; false when another writer published
-   * that version first (optimistic concurrency: the caller re-reads the new
-   * current snapshot and retries its operation against it, Iceberg-style).
-   *
-   * The manifest is written ASIDE (a dot-file in `meta/` named for its
-   * target version, see [[SnapTable.asideName]]), claimed under its final
-   * name by one atomic no-replace step, then the aside is deleted — so a
-   * listed manifest is always whole, and a crash at any step leaves at most
-   * a stale aside, which [[expireSnapshots]] collects. The claim is
-   * `link(2)` on local filesystems (EEXIST on an existing name; POSIX rename
-   * and Hadoop's local rename overwrite or check-then-act) and `rename`
-   * elsewhere (fails on an existing destination, atomic on HDFS). An aside
-   * that vanished before its claim (retention collected it) loses.
+   * Publish `content` as the file `target` in one step every `meta/` file
+   * shares; false when the name was already taken. The content is written
+   * ASIDE through the raw FS (no `.crc` sidecar) under a dot-name in the
+   * same dir ([[SnapTable.asideName]]), claimed under `target` by one
+   * atomic no-replace step, then the aside is deleted — so a listed file
+   * is always whole, and a crash at any step leaves at most a stale aside.
+   * The claim is `link(2)` on local filesystems (EEXIST on an existing
+   * name; POSIX rename and Hadoop's local rename overwrite or
+   * check-then-act) and `rename` elsewhere (fails on an existing
+   * destination, atomic on HDFS). An aside that vanished before its claim
+   * (retention collected it) loses.
+   */
+  private[graft] def publish(target: Path, content: String): Boolean = {
+    val aside = new Path(target.getParent, asideName(target.getName))
+    val out = raw.create(aside, false)
+    try out.write(content.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    val won = raw match {
+      case _: org.apache.hadoop.fs.RawLocalFileSystem =>
+        def local(p: Path) = java.nio.file.Paths.get(p.toUri.getPath)
+        try { java.nio.file.Files.createLink(local(target), local(aside)); true }
+        catch {
+          case _: java.nio.file.FileAlreadyExistsException | _: java.nio.file.NoSuchFileException =>
+            false
+        }
+      case _ => try raw.rename(aside, target)
+        catch { case _: java.io.FileNotFoundException => false }
+    }
+    raw.delete(aside, false) // the link's source, or a lost claim's
+    won
+  }
+
+  /**
+   * Publish `s` as version `s.version` ([[publish]] of its manifest); false
+   * when another writer published that version first (optimistic
+   * concurrency: the caller re-reads the new current snapshot and retries
+   * its operation against it, Iceberg-style). A stale manifest aside is
+   * collected by [[expireSnapshots]].
    *
    * A writer targets its snapshot's version + 1 and never burns a number, so
    * versions are gap-free above the retention floor. A publish whose parent
@@ -200,20 +219,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
    */
   private[table] def tryCommit(s: Snapshot): Boolean = {
     def parentListed = s.parent < 0 || fs.exists(snapPath(s.parent)) // version 0 has none
-    val aside = new Path(metaDir, asideName(s.version))
-    writeString(aside, Serialization.write(s))
-    val won = parentListed && (raw match {
-      case _: org.apache.hadoop.fs.RawLocalFileSystem =>
-        def local(p: Path) = java.nio.file.Paths.get(p.toUri.getPath)
-        try { java.nio.file.Files.createLink(local(snapPath(s.version)), local(aside)); true }
-        catch {
-          case _: java.nio.file.FileAlreadyExistsException | _: java.nio.file.NoSuchFileException =>
-            false
-        }
-      case _ => try raw.rename(aside, snapPath(s.version))
-        catch { case _: java.io.FileNotFoundException => false }
-    })
-    raw.delete(aside, false) // the link's source, or a lost claim's
+    val won = parentListed && publish(snapPath(s.version), Serialization.write(s))
     if (won && !parentListed && currentVersion != s.version)
       throw new IllegalStateException(s"version ${s.version} was published while retention " +
         s"expired its parent ${s.parent}: it may hang off the current chain; re-apply the " +
@@ -861,10 +867,11 @@ object SnapTable {
   private[table] def commitDir(version: Long): String =
     f"data/c$version%08d-${java.util.UUID.randomUUID().toString.take(8)}"
 
-  /** Name of a manifest's aside in `meta/` (see [[SnapTable.tryCommit]]):
-    * a dot-file carrying the target version, unique per attempt. */
-  private[table] def asideName(version: Long): String =
-    f".snap-$version%08d.${java.util.UUID.randomUUID().toString.take(8)}.tmp"
+  /** Name of the aside [[SnapTable.publish]] writes for the file `name`:
+    * a dot-file carrying the target name (so its version or epoch), unique
+    * per attempt. */
+  private[table] def asideName(name: String): String =
+    s".$name.${java.util.UUID.randomUUID().toString.take(8)}.tmp"
 
   /** Extend a merge target schema with derived columns not already present. */
   private[table] def withDerived(target: StructType, derived: Derived): StructType =

@@ -272,6 +272,44 @@ class CdcEndToEndSpec extends SparkSpec {
       Seq.fill(3)(("lsn_null", null)) ++ (300 to 304).map(l => ("op_domain", l.toString)))
   }
 
+  test("dirty samples read back equal: null lsns, microseconds, TIMESTAMP_NTZ, any text") {
+    val t = SnapTable.create(spark, tmpDir("table"), Schemas.payloadV2, numBuckets = 4)
+    val ts = java.sql.Timestamp.valueOf("2024-03-01 10:20:05.123456")
+    val seen = java.time.LocalDateTime.parse("2024-03-01T10:20:05.654321")
+    val texts = Seq("plain", "naïve — 日本語 ✓", "say \"hi\"\nnext line\r\n\ttab",
+      "back\\slash {\"j\": [1]}")
+    // per text: a clean row, a conv_id_null row with an lsn, and an op_domain
+    // row; one conv_id_null and one lsn_null row have no lsn
+    val events = texts.zipWithIndex.flatMap { case (text, i) => Seq(
+      ("c1", i, text, Option(10L + i), "U"),
+      (null, i, text, Option(30L - i), "I"),
+      ("c2", i, text, Option(50L + i), "Z"))
+    } ++ Seq((null, 9, "no lsn", None, "I"), ("c3", 9, "no lsn\n", None, "U"))
+    val batch = events.zipWithIndex.map { case ((conv, turn, text, lsn, op), j) =>
+      (conv, turn, "user", text, null: String, ts, lsn, op, seen.plusNanos(1000L * j))
+    }.toDF("conv_id", "turn_idx", "role", "text", "tool", "ts", "lsn", "op", "seen")
+    CdcPipeline.applyBatch(t, batch, epoch = 0, PipelineOptions(
+      errorLimit = ErrorLimit(record = None, percentage = Some(0.9))))
+    val tagged = batch.withColumn(Dirty.ReasonCol, Dirty.reason(Dirty.envelopeRules))
+    val lsnNullsFirst = (r: org.apache.spark.sql.Row) =>
+      (r.getAs[String](Dirty.ReasonCol), Option(r.getAs[java.lang.Long]("lsn")).map(_.longValue))
+    val expected = tagged.filter(col(Dirty.ReasonCol).isNotNull).collect().toSeq
+      .sortBy(lsnNullsFirst)
+    assert(expected.size == 10 && expected.map(_.getAs[String](Dirty.ReasonCol)).toSet ==
+      Set("conv_id_null", "lsn_null", "op_domain"))
+    val samples = CdcPipeline.readDirtySamples(spark, t, 0).get
+    assert(samples.schema == tagged.schema)
+    assert(samples.collect().toSeq == expected)
+  }
+
+  test("lineage reads back in epoch order past eight digits") {
+    val t = SnapTable.create(spark, tmpDir("table"), Schemas.payloadV2, numBuckets = 4)
+    val epochs = Seq(99999999L, 100000000L)
+    for (e <- epochs) CdcPipeline.applyBatch(t, Seq(ChangeEvent("c1", 1, "user", s"t$e", null,
+      new java.sql.Timestamp(1000L), e, "U")).toDF(), e)
+    assert(CdcPipeline.readLineage(spark, t).map(_.epoch) == epochs)
+  }
+
   test("bucket assignment is stable under merge-key type widening") {
     val t = SnapTable.create(spark, tmpDir("table"), Schemas.payloadV2, numBuckets = 8)
     val before = (1 to 100).map(i => ChangeEvent(s"c$i", i, "user", "v1", null,

@@ -53,6 +53,37 @@ class CommitClaimSpec extends SparkSpec {
     assert(t.currentVersion == 1L)
   }
 
+  test("N threads racing publish of one sample and one lineage name: exactly one claim each") {
+    val root = tmpDir("publish")
+    val t = SnapTable.create(spark, root, Schemas.payloadV2, numBuckets = 4)
+    val n = 8
+    for (rel <- Seq("meta/dirty/epoch-00000003.json", "meta/lineage/epoch-00000003.json")) {
+      val target = new org.apache.hadoop.fs.Path(root, rel)
+      val start = new CountDownLatch(1)
+      val pool = Executors.newFixedThreadPool(n)
+      val results = (0 until n).map { i =>
+        pool.submit(new java.util.concurrent.Callable[(Int, Boolean)] {
+          def call(): (Int, Boolean) = { start.await(); (i, t.publish(target, s"writer $i")) }
+        })
+      }
+      start.countDown()
+      val winners = results.map(_.get(30, TimeUnit.SECONDS)).filter(_._2)
+      pool.shutdown()
+      assert(winners.size == 1, s"$rel claims won: $winners")
+      // the name is one whole file, the winner's, and every loser's aside is gone
+      val file = Paths.get(root, rel)
+      assert(Files.isRegularFile(file), s"$rel is not a plain file")
+      assert(new String(Files.readAllBytes(file), StandardCharsets.UTF_8) ==
+        s"writer ${winners.head._1}")
+      assert(file.getParent.toFile.list().toSeq == Seq(file.getFileName.toString))
+    }
+    // a committed lineage record is never replaced: a later claim of its name loses
+    val committed = new org.apache.hadoop.fs.Path(root, "meta/lineage/epoch-00000003.json")
+    val before = t.readString(committed)
+    assert(!t.publish(committed, "late") && t.readString(committed) == before)
+    assert(new java.io.File(root, "meta/lineage").list().toSeq == Seq("epoch-00000003.json"))
+  }
+
   private def oracle(events: Seq[ChangeEvent]) =
     OracleReducer.reduce(events).map(e => (e.conv_id, e.turn_idx, e.text))
   private def state(t: SnapTable) = t.read(spark).select("conv_id", "turn_idx", "text")
@@ -88,7 +119,7 @@ class CommitClaimSpec extends SparkSpec {
 
   test("a kill mid-write leaves a half-written aside: the next epoch commits at once") {
     recoversFrom("half-aside") { (_, root) =>
-      Files.write(Paths.get(root, "meta", SnapTable.asideName(2L)),
+      Files.write(Paths.get(root, "meta", SnapTable.asideName("snap-00000002.json")),
         """{"version":2,"paren""".getBytes(StandardCharsets.UTF_8))
       Nil
     }
@@ -99,7 +130,7 @@ class CommitClaimSpec extends SparkSpec {
       implicit val fmts: Formats = Serialization.formats(NoTypeHints)
       val lost = t.snapshot().copy(version = 2L, parent = 1L,
         props = t.snapshot().props + ("writer" -> "killed"))
-      Files.write(Paths.get(root, "meta", SnapTable.asideName(2L)),
+      Files.write(Paths.get(root, "meta", SnapTable.asideName("snap-00000002.json")),
         Serialization.write(lost).getBytes(StandardCharsets.UTF_8))
       Nil
     }
@@ -111,7 +142,7 @@ class CommitClaimSpec extends SparkSpec {
       CdcPipeline.applyBatch(t, applied.toDF(), 1)
       // the local claim is a hard link: until the aside's delete, the
       // published manifest has a second name
-      Files.createLink(Paths.get(root, "meta", SnapTable.asideName(2L)),
+      Files.createLink(Paths.get(root, "meta", SnapTable.asideName("snap-00000002.json")),
         Paths.get(root, "meta", "snap-00000002.json"))
       applied
     }

@@ -40,7 +40,11 @@ class KillRecoverySpec extends SparkSpec {
       "java.base/java.util.concurrent.atomic", "java.base/sun.nio.ch",
       "java.base/sun.nio.cs", "java.base/sun.security.action",
       "java.base/sun.util.calendar").flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    Seq(javaBin, "-Xmx3g", "-Dspark.ui.enabled=false") ++ addOpens ++ Seq(
+    // a SIGKILLed child runs no exit cleanup: its temp files (Spark
+    // artifact dirs, extracted native libraries) go under a dir this JVM
+    // deletes
+    Seq(javaBin, "-Xmx3g", "-Dspark.ui.enabled=false",
+      s"-Djava.io.tmpdir=${tmpDir("child-tmp")}") ++ addOpens ++ Seq(
       "-cp", System.getProperty("java.class.path"),
       "graft.Main", "ingest", "--changelog", log, "--table", tableDir,
       "--mode", "stream", "--max-files-per-trigger", "1", "--cores", "2")

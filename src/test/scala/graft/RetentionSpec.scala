@@ -82,12 +82,21 @@ class RetentionSpec extends SparkSpec {
     ChangeStreamGen.writeChangelog(spark, cfg, log)
     val table = SnapTable.create(spark, root, Schemas.payloadV1, numBuckets = 8)
     val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-    // corpses a writer killed between the quarantine parquet write and its
-    // claiming rename would leave: one far below the horizon, one fresh
-    val dirtyDir = new Path(root, "meta/dirty")
-    val oldTmp = new Path(dirtyDir, ".tmp-epoch-00000000-111")
-    val freshTmp = new Path(dirtyDir, ".tmp-epoch-00000009-222")
-    fs.mkdirs(oldTmp); fs.mkdirs(freshTmp)
+    // what a killed publish leaves (its aside, in either sideband dir) and
+    // what an earlier build left (`.tmp-epoch-*` asides, `epoch-N/` sample
+    // dirs holding a parquet file), for epochs below the final horizon
+    // (9 - 3 = 6) and at or above it
+    def corpses(epoch: Int): Seq[Path] = {
+      val (dirty, lineage) = (new Path(root, "meta/dirty"), new Path(root, "meta/lineage"))
+      val files = Seq(new Path(dirty, f".epoch-$epoch%08d.json.0a1b2c3d.tmp"),
+        new Path(lineage, f".epoch-$epoch%08d.json.0a1b2c3d.tmp"),
+        new Path(lineage, f".tmp-epoch-$epoch%08d-111.json"),
+        new Path(dirty, f".tmp-epoch-$epoch%08d-111/part-0.parquet"),
+        new Path(dirty, f"epoch-$epoch%08d/part-0.parquet"))
+      files.foreach(f => fs.create(f, false).close())
+      files.take(3) ++ files.drop(3).map(_.getParent)
+    }
+    val (old, fresh) = (Seq(0, 5).flatMap(corpses), Seq(6, 9).flatMap(corpses))
     val opts = PipelineOptions(retention = Some(RetentionPolicy(
       retainSnapshots = 3, retainMetaEpochs = 3, everyEpochs = 1)))
     val chunks = fs.listStatus(new Path(log))
@@ -95,11 +104,10 @@ class RetentionSpec extends SparkSpec {
     chunks.zipWithIndex.foreach { case (dir, i) =>
       CdcPipeline.replayBatch(spark, dir, table, opts, epoch = i.toLong)
     }
-    // after epoch 9 the horizon is 9 - 3 = 6: the epoch-0 corpse must be
-    // collected (it would otherwise accumulate forever on a long stream)...
-    assert(!fs.exists(oldTmp), "orphaned old .tmp-epoch dir not GC'd")
-    // ...while the fresh one (>= horizon — possibly a LIVE writer mid-
-    // rename) is untouched
-    assert(fs.exists(freshTmp), "in-horizon .tmp-epoch dir wrongly deleted")
+    // below the horizon every corpse is collected (it would otherwise
+    // accumulate forever on a long stream)...
+    assert(old.forall(!fs.exists(_)), s"not GC'd: ${old.filter(fs.exists)}")
+    // ...while those at or above it (possibly a LIVE writer's) are untouched
+    assert(fresh.forall(fs.exists), s"wrongly deleted: ${fresh.filterNot(fs.exists)}")
   }
 }
