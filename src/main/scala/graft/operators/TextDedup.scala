@@ -21,22 +21,51 @@ object TextDedup {
     df.groupBy(md5(col(textCol)).as("content_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
 
-  /** Distinct word-k-gram shingles per doc: (id, shingle).
+  /** Distinct word-k-gram shingles per doc: (id, shingle). */
+  def shingles(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
+    words(df, idCol, textCol).select(col(idCol), explode(gramSet(textCol, k)).as("shingle"))
+
+  /** `df`'s id and text with each doc's word split as `__w`.
     *
-    * The word split is materialized as its OWN projection column before the
+    * The split is materialized as its OWN projection column before the
     * k-gram lambda touches it: Spark evaluates a higher-order function's
     * body per element with no loop-invariant hoisting, so `slice(split(t),
     * i+1, k)` inside the lambda re-splits the text once per gram — O(words²)
     * per document (measured 5x on the LSH pipeline at sf0.1). CollapseProject
     * keeps the multi-referenced non-cheap split un-inlined. */
-  def shingles(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
-    val withWords = Parallelism.ensure(df).select(col(idCol), col(textCol),
-      split(col(textCol), "\\s+").as("__w"))
-    val grams = expr(
-      s"""transform(sequence(0, greatest(size(__w) - $k, 0)),
-         |  i -> concat_ws(' ', slice(__w, i + 1, $k)))""".stripMargin)
-    withWords.select(col(idCol), explode(array_distinct(
-        when(size(col("__w")) >= k, grams).otherwise(array(col(textCol))))).as("shingle"))
+  private def words(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    Parallelism.ensure(df).select(col(idCol), col(textCol), split(col(textCol), "\\s+").as("__w"))
+
+  /** A doc's distinct word-k-gram set over [[words]]' `__w`; a doc under k
+    * words has its whole text as its one gram.
+    *
+    * [[shingles]] explodes this expression itself, not a column holding it:
+    * exploding a gram column lets the optimizer infer `size(grams) > 0` and
+    * push it below the projection into the scan, so every doc's grams are
+    * built twice, the first time before [[Parallelism.ensure]] fans the rows
+    * out (measured 0.59 → 0.98 s for the brute join on a 500-doc corpus). */
+  private def gramSet(textCol: String, k: Int): Column = {
+    val w = col("__w")
+    val grams = transform(sequence(lit(0), greatest(size(w) - k, lit(0))),
+      i => concat_ws(" ", slice(w, i + 1, lit(k))))
+    array_distinct(when(size(w) >= k, grams).otherwise(array(col(textCol))))
+  }
+
+  /** Candidate pairs (a < b) joined to each side's (id, grams, sz), kept at
+    * |A ∩ B| / |A ∪ B| >= threshold: (a, b, jaccard). The join strategy is
+    * AQE's, from the runtime size of the gram side (broadcast under the
+    * session's threshold, shuffle beyond — candidate-proportional either
+    * way). */
+  private def verify(candidates: DataFrame, grams: DataFrame, idCol: String,
+      threshold: Double): DataFrame = {
+    def side(s: String) = grams.select(col(idCol).as(s), col("grams").as(s"__g$s"),
+      col("sz").as(s"sz$s"))
+    candidates.join(side("a"), Seq("a")).join(side("b"), Seq("b"))
+      .withColumn("inter", size(array_intersect(col("__ga"), col("__gb"))))
+      .withColumn("jaccard", col("inter").cast("double") /
+        (col("sza") + col("szb") - col("inter")))
+      .filter(col("jaccard") >= threshold)
+      .select("a", "b", "jaccard")
   }
 
   /**
@@ -91,15 +120,17 @@ object TextDedup {
    * lossless); the candidate shuffle is proportional to Σ over prefix-token
    * of df_prefix² — and prefix tokens are by construction the RAREST grams
    * of each doc, so the hot high-df shingles that blow up the naive join
-   * rarely generate a candidate. The verify never re-tokenizes text: each
-   * doc's gram array is materialized ONCE (the same collect that builds the
-   * prefixes) and joined to the candidate pairs — broadcast below
-   * [[VerifyBroadcastMaxDocs]] docs, shuffle join beyond (candidate-
-   * proportional either way). Filter boundaries subtract 1e-6 so FP
-   * rounding can only ADMIT a borderline candidate (the exact verify
-   * rejects it), never drop a true pair. Reference analogue: none (DataX
-   * has no similarity join); this is the 100 TB standalone form of the
-   * operator.
+   * rarely generate a candidate. The verify never re-tokenizes text: it
+   * joins the candidate pairs to the same per-doc gram arrays the prefixes
+   * come from. Filter boundaries subtract 1e-6 so FP rounding can only
+   * ADMIT a borderline candidate (the exact verify rejects it), never drop
+   * a true pair. Reference analogue: none (DataX has no similarity join);
+   * this is the 100 TB standalone form of the operator.
+   *
+   * Nothing is materialized by hand: the gram arrays' three consumers (the
+   * prefix explode and both verify sides) are one plan, so exchange reuse
+   * shuffles them once for all three, and a lost executor recomputes from
+   * lineage. Building the frame runs no Spark job.
    */
   def ngramJaccardPrefixPairs(df: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", k: Int = 3, threshold: Double = 0.5): DataFrame = {
@@ -111,24 +142,12 @@ object TextDedup {
     // with the groupBy — no extra exchange of the big side)
     val docFreq = sh.groupBy("shingle").agg(count(lit(1)).as("__df"))
     // per-doc canonical gram array, rarest-first (ties by shingle: a total
-    // order, deterministic across runs); reused by the prefix explode AND
-    // both verify sides, so it is computed exactly once
-    // eager localCheckpoint, NOT cache(): it materializes the gram arrays
-    // once for the three consumers below exactly like a cache, but its
-    // executor storage is released by the ContextCleaner as soon as the
-    // caller drops the returned frame — an explicit cache() would pin the
-    // arrays in the session's CacheManager for the session's lifetime, and
-    // this operator cannot unpersist without forcing its (lazy) result.
-    // Trade-off (documented): the truncated lineage means a lost executor
-    // fails the query instead of recomputing — acceptable for a bounded
-    // dedup job, and storage is MEMORY_AND_DISK so large corpora spill.
+    // order, deterministic across runs)
     val docGrams = sh.join(docFreq, Seq("shingle"))
       .groupBy(col(idCol))
       .agg(sort_array(collect_list(struct(col("__df"), col("shingle")))).as("__toks"))
       .select(col(idCol), expr("transform(__toks, x -> x.shingle)").as("grams"),
         size(col("__toks")).as("sz"))
-      .localCheckpoint(true)
-    val nDocs = docGrams.count() // cheap post-checkpoint; drives the verify-join choice
     // prefix tokens with their rank (1-based) for the positional filter
     val prefixes = docGrams.select(col(idCol), col("sz"),
       posexplode(expr(s"slice(grams, 1, greatest(1, " +
@@ -149,25 +168,8 @@ object TextDedup {
         && (lit(1) + least(col("sza") - col("ra"), col("szb") - col("rb"))) >=
           (col("sza") + col("szb")) * (t / (1 + t)) - 1e-6)
       .select("a", "b").distinct()
-    val ga = docGrams.select(col(idCol).as("a"), col("grams").as("__ga"),
-      col("sz").as("sza"))
-    val gb = docGrams.select(col(idCol).as("b"), col("grams").as("__gb"),
-      col("sz").as("szb"))
-    val (ja, jb) =
-      if (nDocs <= VerifyBroadcastMaxDocs) (broadcast(ga), broadcast(gb))
-      else (ga, gb)
-    candidates.join(ja, Seq("a")).join(jb, Seq("b"))
-      .withColumn("inter", size(array_intersect(col("__ga"), col("__gb"))))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (col("sza") + col("szb") - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select("a", "b", "jaccard")
+    verify(candidates, docGrams, idCol, threshold)
   }
-
-  /** Above this many docs the verify side's gram arrays stop being broadcast
-    * (~100 MB at typical doc sizes) and the candidate pairs shuffle-join
-    * them instead — still candidate-proportional. */
-  val VerifyBroadcastMaxDocs: Long = 64000L
 
   /** MinHash signatures: for each of `numHashes` seeded hash functions, the
     * min shingle hash. Returned long array column `sig`.
@@ -193,7 +195,8 @@ object TextDedup {
    * -> exact-Jaccard verify. With (bands, rowsPerBand) = (64, 2) a pair at
    * jaccard 0.5 is caught with prob 1-(1-0.25)^64 ≈ 1-1e-8: effectively
    * exact above 0.5 while candidate generation stays a bucket equi-join
-   * (shuffle on band hash, never an n^2 product).
+   * (shuffle on band hash, never an n^2 product). The verify joins each
+   * candidate to its docs' gram sets, built once per doc, never per pair.
    */
   def minhashLshPairs(df: DataFrame, idCol: String = "doc_id", textCol: String = "text",
       k: Int = 3, numHashes: Int = 128, bands: Int = 64,
@@ -208,36 +211,9 @@ object TextDedup {
     val rj = banded.select(col(idCol).as("b"), col("band"), col("bh"))
     val candidates = l.join(rj, Seq("band", "bh")).filter(col("a") < col("b"))
       .select("a", "b").distinct()
-    // Verify candidates with exact jaccard (join back full docs).
-    val docs = df.select(col(idCol), col(textCol))
-    val pairs = candidates
-      .join(docs.select(col(idCol).as("a"), col(textCol).as("ta")), Seq("a"))
-      .join(docs.select(col(idCol).as("b"), col(textCol).as("tb")), Seq("b"))
-    exactJaccardOnPairs(pairs, "ta", "tb", k)
-      .filter(col("jaccard") >= threshold)
-      .select("a", "b", "jaccard")
-  }
-
-  /** Exact word-k-gram jaccard of two text columns, per row (codegen'd array
-    * ops — used for the verify stage of LSH candidates). */
-  def exactJaccardOnPairs(pairs: DataFrame, ta: String, tb: String, k: Int): DataFrame = {
-    // split hoisted out of the lambda for the same O(words²) reason as in
-    // [[shingles]]
-    def grams(w: String, c: String) =
-      s"""array_distinct(case when size($w) >= $k then
-         |  transform(sequence(0, size($w) - $k),
-         |    i -> concat_ws(' ', slice($w, i + 1, $k)))
-         |  else array($c) end)""".stripMargin
-    pairs
-      .withColumn("__wa", split(col(ta), "\\s+"))
-      .withColumn("__wb", split(col(tb), "\\s+"))
-      .withColumn("ga", expr(grams("__wa", ta)))
-      .withColumn("gb", expr(grams("__wb", tb)))
-      .drop("__wa", "__wb")
-      .withColumn("inter", size(array_intersect(col("ga"), col("gb"))))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (size(col("ga")) + size(col("gb")) - col("inter")))
-      .drop("ga", "gb", "inter", ta, tb)
+    val grams = words(df, idCol, textCol).select(col(idCol), gramSet(textCol, k).as("grams"))
+      .withColumn("sz", size(col("grams")))
+    verify(candidates, grams, idCol, threshold)
   }
 
   /** SimHash bit budget: 60 = 15 hex digits of the token md5 (4 bits each).

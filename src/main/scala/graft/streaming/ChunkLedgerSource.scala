@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -140,41 +140,11 @@ private[streaming] class ChunkLedgerStream(root: String, maxChunksPerTrigger: In
       case Some(target) => fresh.takeWhile(_ <= target)
       case None => fresh
     }
-    // admission = the source's own chunk cap INTERSECTED with whatever cap
-    // the engine passed in `limit` — Trigger.AvailableNow and future rate
-    // configs hand composite ReadLimits here, and ignoring them would
-    // silently over-admit the day a maxOffsets/maxFiles knob is set
-    val chunkCapped = capped.take(math.max(1, maxChunksPerTrigger)).toSeq
-    val admitted = maxFilesOf(limit) match {
-      case None => chunkCapped
-      case Some(cap) =>
-        // whole chunks are the offset granularity: admit chunks while the
-        // cumulative data-file count stays within the cap, but always at
-        // least one chunk so a cap below the smallest chunk cannot stall
-        // the stream forever (same first-file guarantee as the built-in
-        // file source)
-        val f = fs
-        var files = 0L
-        chunkCapped.takeWhile { c =>
-          val n = f.listStatus(new Path(new Path(root), c))
-            .count(s => s.isFile && !s.getPath.getName.startsWith("_")).toLong
-          files += n
-          files <= cap || files == n
-        }
-    }
+    // `limit` is always all-available: the engine passes a source its own
+    // default limit, or all-available under a one-time trigger, so the
+    // chunk cap is the whole admission
+    val admitted = capped.take(math.max(1, maxChunksPerTrigger)).toSeq
     if (admitted.isEmpty) start else ChunkOffset(admitted.last)
-  }
-
-  /** Tightest file/row cap carried by `limit`, if any. This source's rows
-    * ARE data files (one manifest row per file), so ReadMaxRows and
-    * ReadMaxFiles bound the same quantity; ReadMinRows is a floor, not a
-    * cap, and ReadAllAvailable is unbounded. */
-  private def maxFilesOf(limit: ReadLimit): Option[Long] = limit match {
-    case f: ReadMaxFiles => Some(f.maxFiles().toLong)
-    case r: ReadMaxRows => Some(r.maxRows())
-    case c: CompositeReadLimit =>
-      c.getReadLimits.toSeq.flatMap(maxFilesOf).minOption
-    case _ => None
   }
 
   override def reportLatestOffset(): Offset = ChunkOffset(newestComplete())

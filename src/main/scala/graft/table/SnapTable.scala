@@ -419,14 +419,15 @@ final class SnapTable private (val root: String, fs: FileSystem) {
     }
 
   /**
-   * Run one optimistic attempt of `op` per loop iteration; an attempt
-   * returns None when another writer claimed its target version first, in
-   * which case the operation is recomputed against the NEW current
-   * snapshot (Iceberg's optimistic-concurrency loop). The epoch guard is
+   * Run one optimistic attempt of `op` per loop iteration and return the
+   * value of the attempt that commits; an attempt returns None when another
+   * writer claimed its target version first, in which case the operation
+   * is recomputed against the NEW current snapshot (Iceberg's
+   * optimistic-concurrency loop). The epoch guard is
    * re-evaluated inside each attempt, so two ingest jobs racing the same
    * epoch resolve to exactly one Committed and one SkippedEpoch.
    */
-  private def retryingCommit(op: => Option[MergeResult]): MergeResult = {
+  private def retryingCommit[A](op: => Option[A]): A = {
     var attempt = 0
     while (attempt < MaxCommitAttempts) {
       op match {
@@ -702,19 +703,15 @@ final class SnapTable private (val root: String, fs: FileSystem) {
    * operation is the CoW merge with an empty batch, scheduled by policy
    * instead of per-epoch. Returns the number of files rewritten.
    */
-  def compact(spark: SparkSession): Long = {
-    var n = 0L
-    val r = retryingCommit {
+  def compact(spark: SparkSession): Long =
+    retryingCommit {
       val snap = snapshot()
       requireBucketFn(snap)
       val dirty = snap.files.filter(_.kind == "delta").map(_.bucket).toSet
       val files = snap.files.filter(f => dirty(f.bucket))
-      n = files.size
-      if (dirty.isEmpty) Some(MergeResult.SkippedEpoch)
-      else reduceAndWrite(spark, snap, snap, files, None, dirty)
+      if (dirty.isEmpty) Some(0L)
+      else reduceAndWrite(spark, snap, snap, files, None, dirty).map(_ => files.size.toLong)
     }
-    if (r == MergeResult.SkippedEpoch) 0L else n
-  }
 
   /**
    * Layout evolution: rewrite the table into `newBuckets` hash buckets —
@@ -739,7 +736,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
       reduceAndWrite(spark, snap, snap.copy(numBuckets = newBuckets,
         props = snap.props + (PropBucketFn -> BucketFnVersion.toString)),
         snap.files, None, (0 until newBuckets).toSet)
-    }: Unit
+    }
   }
 
   /** Drop tombstones older than `lsnWatermark` by rewriting their buckets —
@@ -752,8 +749,7 @@ final class SnapTable private (val root: String, fs: FileSystem) {
   def expireTombstones(spark: SparkSession, lsnWatermark: Long): Long = {
     compact(spark)
     val expired = col("op") === "D" && col("lsn") < lsnWatermark
-    var n = 0L
-    val r = retryingCommit {
+    retryingCommit {
       val snap = snapshot()
       requireBucketFn(snap)
       // one aggregation yields both the count and the buckets to rewrite;
@@ -763,19 +759,18 @@ final class SnapTable private (val root: String, fs: FileSystem) {
       val perBucket = readAligned(spark, snap, candidates, snap.schema).filter(expired)
         .groupBy(bucketExpr(snap.numBuckets)).count()
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      n = perBucket.values.sum
+      val n = perBucket.values.sum
       // stamp the horizon IN the same commit that drops the tombstones, so
       // a resuming consumer can detect (and refuse) a watermark the expiry
       // has outrun — see [[tombstoneHorizonLsn]]
       val horizon = math.max(lsnWatermark,
         snap.props.get(PropTombstoneHorizon).map(_.toLong).getOrElse(-1L))
-      if (n == 0) Some(MergeResult.SkippedEpoch)
+      if (n == 0) Some(0L)
       else reduceAndWrite(spark, snap,
         snap.copy(props = snap.props + (PropTombstoneHorizon -> horizon.toString)),
         snap.files.filter(f => perBucket.contains(f.bucket)), None, perBucket.keySet,
-        keep = Some(!expired))
+        keep = Some(!expired)).map(_ => n)
     }
-    if (r == MergeResult.SkippedEpoch) 0L else n
   }
 
   /** The lsn watermark below which delete tombstones have been physically

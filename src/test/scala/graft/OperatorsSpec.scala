@@ -3,6 +3,7 @@ package graft
 import graft.functions.DataXTransforms._
 import graft.operators.{Multimodal, Similarity, TextAnalysis, TextDedup}
 import graft.table.SchemaEvolution
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -112,9 +113,15 @@ class OperatorsSpec extends SparkSpec {
   test("exact jaccard pairs leave nothing cached once collected") {
     spark.catalog.clearCache() // this suite's fixture frames are cached
     val fresh = spark.read.parquet(s"$sf/documents.parquet")
-    assert(TextDedup.ngramJaccardPairs(fresh, threshold = 0.5).collect().nonEmpty)
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "ngramJaccardPairs pinned a relation in the session's CacheManager")
+    for ((name, pairs) <- Seq[(String, DataFrame => DataFrame)](
+        "ngramJaccardPairs" -> (TextDedup.ngramJaccardPairs(_, threshold = 0.5)),
+        "ngramJaccardPrefixPairs" -> (TextDedup.ngramJaccardPrefixPairs(_, threshold = 0.5)),
+        "minhashLshPairs" -> (TextDedup.minhashLshPairs(_, threshold = 0.5)))) {
+      assert(pairs(fresh).collect().nonEmpty, name)
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"$name pinned a relation in the session's CacheManager")
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty, s"$name left an RDD persisted")
+    }
   }
 
   test("prefix-filtered jaccard join == brute-force jaccard join") {

@@ -21,6 +21,30 @@ class PlanQualitySpec extends SparkSpec {
     df.queryExecution.executedPlan.toString()
   }
 
+  /** Spark jobs `body` starts on this thread (tagged by a local property,
+    * so suites sharing the session do not count). */
+  private def jobs(body: => Any): Int = {
+    val key = "graft.test.jobs"
+    val tag = java.util.UUID.randomUUID().toString
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty(key) == tag)) started.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setLocalProperty(key, tag)
+      try body finally spark.sparkContext.setLocalProperty(key, null)
+      // listener delivery is async: poll until the count is stable
+      var (stable, last) = (0, -1)
+      while (stable < 5) {
+        Thread.sleep(200)
+        if (started.get == last) stable += 1 else { stable = 0; last = started.get }
+      }
+      last
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   private def formatted(df: DataFrame): String = {
     val qe = df.queryExecution
     qe.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
@@ -94,10 +118,34 @@ class PlanQualitySpec extends SparkSpec {
     // cross product or nested loop over the corpus
     assert(!s.contains("CartesianProduct"), s"prefix join must not cross-join:\n$s")
     assert(!s.contains("BroadcastNestedLoopJoin"), s"prefix join nested-loop:\n$s")
-    // below VerifyBroadcastMaxDocs the gram-array verify sides broadcast
-    // (no shuffle of the arrays to the candidate pairs)
+    // AQE broadcasts the gram-array verify sides from their runtime size
+    // (no shuffle of the arrays to the candidate pairs at this scale)
     assert(s.contains("BroadcastHashJoin") || s.contains("BroadcastExchange"),
       s"verify should broadcast gram arrays at test scale:\n$s")
+  }
+
+  test("shingling builds a doc's grams once, after the fan-out, not in the scan") {
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val df = graft.operators.TextDedup.shingles(docs, "doc_id", "text", 3)
+    val scans = df.queryExecution.executedPlan.toString.linesIterator
+      .filter(_.contains("FileScan")).toList
+    assert(scans.nonEmpty && scans.forall(!_.contains("transform")),
+      s"k-gram filter in the scan:\n${scans.mkString("\n")}")
+  }
+
+  test("prefix jaccard join: building the frame runs no Spark job") {
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    assert(jobs(graft.operators.TextDedup.ngramJaccardPrefixPairs(docs, threshold = 0.5)) == 0)
+  }
+
+  test("prefix jaccard join keeps its lineage and shares the gram arrays' shuffles") {
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val df = graft.operators.TextDedup.ngramJaccardPrefixPairs(docs, threshold = 0.5)
+    val s = planString(df)
+    // an RDD leaf is a materialized cut: a lost executor could not recompute it
+    assert(!s.contains("LogicalRDD") && !s.contains("ExistingRDD"), s"RDD leaf in plan:\n$s")
+    // the gram arrays' consumers reuse one set of exchanges
+    assert(s.contains("ReusedExchange"), s"no exchange reuse:\n$s")
   }
 
   test("IVF assignment broadcasts centroids and reduces the argmax map-side") {
@@ -213,29 +261,6 @@ class PlanQualitySpec extends SparkSpec {
       ev(i, 1000L * e + i, if (dirty && i % 25 == 0) "X" else "U")).toDF().repartition(4)
     val opts = graft.cdc.PipelineOptions(
       errorLimit = graft.cdc.ErrorLimit(record = None, percentage = Some(0.5)))
-    // Spark jobs started on this thread (tagged by a local property, so
-    // suites sharing the session do not count)
-    def jobs(body: => Any): Int = {
-      val key = "graft.test.dirtyJobs"
-      val tag = java.util.UUID.randomUUID().toString
-      val started = new java.util.concurrent.atomic.AtomicInteger()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (Option(j.properties).exists(_.getProperty(key) == tag)) started.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        spark.sparkContext.setLocalProperty(key, tag)
-        try body finally spark.sparkContext.setLocalProperty(key, null)
-        // listener delivery is async: poll until the count is stable
-        var (stable, last) = (0, -1)
-        while (stable < 5) {
-          Thread.sleep(200)
-          if (started.get == last) stable += 1 else { stable = 0; last = started.get }
-        }
-        last
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
     val clean = jobs(graft.cdc.CdcPipeline.applyBatch(t, epoch(1, dirty = false), 1, opts))
     val dirty = jobs(graft.cdc.CdcPipeline.applyBatch(t, epoch(2, dirty = true), 2, opts))
     assert(graft.cdc.CdcPipeline.readDirtySamples(spark, t, 2).get.count() == 16)

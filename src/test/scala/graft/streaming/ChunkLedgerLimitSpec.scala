@@ -7,10 +7,9 @@ import org.apache.spark.sql.connector.read.streaming.ReadLimit
 import java.nio.file.{Files, Paths}
 
 /**
- * Admission control of [[ChunkLedgerStream.latestOffset]] under an explicit
- * engine-passed [[ReadLimit]]: the source's own chunk cap must INTERSECT
- * with file/row caps (Trigger.AvailableNow and rate configs hand composite
- * limits here) instead of silently ignoring them.
+ * Admission of [[ChunkLedgerStream.latestOffset]]: the engine hands this
+ * source all-available (its default limit, and the limit of a one-time
+ * trigger), so the source's own chunk cap bounds each batch.
  */
 class ChunkLedgerLimitSpec extends SparkSpec {
 
@@ -28,42 +27,23 @@ class ChunkLedgerLimitSpec extends SparkSpec {
     root
   }
 
-  private def latest(root: String, maxChunks: Int, limit: ReadLimit,
-      from: String = ""): String = {
+  private def latest(root: String, maxChunks: Int, from: String = ""): String = {
     SparkSession.setActiveSession(spark)
     val s = new ChunkLedgerStream(root, maxChunks)
-    s.latestOffset(ChunkOffset(from), limit) match {
+    s.latestOffset(ChunkOffset(from), ReadLimit.allAvailable()) match {
       case ChunkOffset(c) => c
     }
   }
 
-  test("ReadMaxFiles caps admitted chunks by cumulative data-file count") {
+  test("chunk cap bounds admission, also from a mid-stream offset") {
     val root = mkLedger(Seq(2, 3, 4))
-    // 2 + 3 = 5 <= 5; adding chunk 2 (4 files) would exceed -> stop at 00001
-    assert(latest(root, 10, ReadLimit.maxFiles(5)) == "chunk=00001")
-    // cap below the first chunk still admits it (progress guarantee — the
-    // same first-entry rule as the built-in file source)
-    assert(latest(root, 10, ReadLimit.maxFiles(1)) == "chunk=00000")
-    // unbounded limit leaves the source's own chunk cap in charge
-    assert(latest(root, 10, ReadLimit.allAvailable()) == "chunk=00002")
-    assert(latest(root, 1, ReadLimit.allAvailable()) == "chunk=00000")
-  }
-
-  test("ReadMaxRows caps the same quantity (manifest rows ARE files)") {
-    val root = mkLedger(Seq(2, 3, 4))
-    assert(latest(root, 10, ReadLimit.maxRows(4L)) == "chunk=00000")
-    assert(latest(root, 10, ReadLimit.maxRows(9L)) == "chunk=00002")
-  }
-
-  test("composite limit takes the tightest cap and intersects the chunk cap") {
-    val root = mkLedger(Seq(2, 3, 4))
-    val composite = ReadLimit.compositeLimit(
-      Array(ReadLimit.maxFiles(9), ReadLimit.maxRows(5L)))
-    assert(latest(root, 10, composite) == "chunk=00001")
-    // the source option is still the outer bound even under a loose limit
-    assert(latest(root, 1, ReadLimit.maxFiles(100)) == "chunk=00000")
-    // resuming from a mid-stream offset applies the cap to FRESH chunks only
-    assert(latest(root, 10, ReadLimit.maxFiles(3), from = "chunk=00000")
-      == "chunk=00001")
+    assert(latest(root, 10) == "chunk=00002")
+    assert(latest(root, 2) == "chunk=00001")
+    assert(latest(root, 1) == "chunk=00000")
+    // resuming from a mid-stream offset caps the FRESH chunks only
+    assert(latest(root, 1, from = "chunk=00000") == "chunk=00001")
+    assert(latest(root, 10, from = "chunk=00000") == "chunk=00002")
+    // nothing fresh: the offset stays where it is
+    assert(latest(root, 10, from = "chunk=00002") == "chunk=00002")
   }
 }
