@@ -2,9 +2,17 @@ package graft.table
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, BoundReference, Cast, Expression,
+  Literal}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.json4s._
 import org.json4s.jackson.Serialization
 
@@ -101,8 +109,13 @@ object MergeResult {
  * touches (copy-on-write at bucket granularity), and the bucket column is
  * both the shuffle key and the file layout, so merge shuffle and file IO are
  * proportional to the touched fraction, not table size.
+ *
+ * `conf` is the Hadoop conf `fs` was made with (the session's at load or
+ * create): the parquet files the table opens itself, footers and point
+ * reads, are read with it.
  */
-final class SnapTable private (val root: String, fs: FileSystem) {
+final class SnapTable private (val root: String, private val fs: FileSystem,
+    conf: Configuration) {
   import SnapTable._
 
   private implicit val fmts: Formats = Serialization.formats(NoTypeHints)
@@ -304,15 +317,14 @@ final class SnapTable private (val root: String, fs: FileSystem) {
     readWinners(spark, snap, snap.files, live = false)
   }
 
-  /** The winner rows among `files` of `snap`: rows matching `where` (a
-    * filter applied below the reduce), LWW-reduced iff a delta is among
-    * the files; `live` drops tombstones and the `op` column (user reads). */
+  /** The winner rows among `files` of `snap`, LWW-reduced iff a delta is
+    * among the files; `live` drops tombstones and the `op` column (user
+    * reads). */
   private def readWinners(spark: SparkSession, snap: Snapshot, files: Seq[DataFileEntry],
-      where: Option[Column] = None, live: Boolean = true): DataFrame = {
+      live: Boolean = true): DataFrame = {
     val all = readAligned(spark, snap, files, snap.schema)
-    val matched = where.fold(all)(all.filter)
-    val reduced = if (!files.exists(_.kind == "delta")) matched
-      else graft.functions.LwwWinner.winners(matched, Schemas.keyCols, snap.schema.fieldNames.toSeq)
+    val reduced = if (!files.exists(_.kind == "delta")) all
+      else graft.functions.LwwWinner.winners(all, Schemas.keyCols, snap.schema.fieldNames.toSeq)
     if (live) reduced.filter(col("op") =!= "D").drop("op") else reduced
   }
 
@@ -557,15 +569,14 @@ final class SnapTable private (val root: String, fs: FileSystem) {
       if (named.size <= DriverManifestMax) {
         // footer reads are independent -> parallel on the driver
         import scala.collection.parallel.CollectionConverters._
-        named.par.map { case (p, b, n) => (p, b, n, SnapTable.footerStats(p, fs.getConf)) }
+        named.par.map { case (p, b, n) => (p, b, n, SnapTable.footerStats(p, conf)) }
           .seq.toSeq
       } else {
         val slices = math.min(named.size, spark.sparkContext.defaultParallelism * 2)
-        // ship the session's Hadoop conf (spark.hadoop.* — object-store
+        // ship the table's Hadoop conf (spark.hadoop.* — object-store
         // credentials, endpoints) to the executor-side footer readers; a bare
         // new Configuration() there would read the wrong filesystem config
-        val serConf = new org.apache.spark.util.SerializableConfiguration(
-          spark.sessionState.newHadoopConf())
+        val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
         spark.sparkContext.parallelize(named, slices).map { case (p, b, n) =>
           (p, b, n, SnapTable.footerStats(p, serConf.value))
         }.collect().toSeq
@@ -578,26 +589,142 @@ final class SnapTable private (val root: String, fs: FileSystem) {
 
   // ---- pruned read paths ----------------------------------------------------
 
-  /** Bucket of one concrete key: the layout's own hash expression over
-    * literals, resolved by the analyzer and evaluated interpreted on the
-    * driver (no Spark job, no codegen). */
+  /** `bucketHash` resolved over two bound key inputs, per bucket count. */
+  private val bucketFns = new java.util.concurrent.ConcurrentHashMap[Int, Expression]()
+
+  /** Bucket of one concrete key: the layout's own hash expression, resolved
+    * by the analyzer once per bucket count over bound (string, long) key
+    * inputs and evaluated interpreted on the driver (no Spark job, no
+    * codegen, no analyzer pass per key). */
   private[graft] def bucketOf(spark: SparkSession, convId: String, turnIdx: Long,
       buckets: Int): Int =
-    spark.range(1).select(bucketHash(Seq(lit(convId), lit(turnIdx)), buckets))
-      .queryExecution.analyzed.expressions.head.eval().asInstanceOf[Int]
+    bucketFns.computeIfAbsent(buckets, n => {
+      val keys = spark.createDataFrame(java.util.List.of[Row](), StructType(
+        graft.model.Schemas.mergeKeyCanonicalTypes.map { case (k, t) =>
+          StructField(k, DataType.fromDDL(t)) }))
+      val hash = keys.select(bucketHash(keys.columns.toSeq.map(col), n))
+        .queryExecution.analyzed.expressions.head
+      BindReferences.bindReference(hash, keys.queryExecution.analyzed.output)
+    }).eval(InternalRow(UTF8String.fromString(convId), turnIdx)).asInstanceOf[Int]
 
   /**
-   * Point lookup: prune to the single bucket of the key before scanning —
-   * IO is O(table/numBuckets), the KV-get path (reference analogue: OTS/
-   * HBase row gets). Works in both merge modes (deltas of that bucket are
-   * reduced in-path).
+   * Point lookup, done on the driver with no Spark job: prune to the single
+   * bucket of the key, read that bucket's rows of the key with a parquet
+   * reader through the table's filesystem, LWW-reduce them when a delta is
+   * among the files (the (ts, lsn) order of `LwwWinner`, nulls smallest),
+   * and drop tombstones and `op`. IO is O(table/numBuckets), the KV-get
+   * path (reference analogue: OTS/HBase row gets). The rows come back as a
+   * local frame, so collecting it compiles nothing; it equals
+   * `read(spark)` filtered to the key, schema included.
    */
   def readKey(spark: SparkSession, convId: String, turnIdx: Long): DataFrame = {
     val snap = snapshot()
     requireBucketFn(snap)
     val b = bucketOf(spark, convId, turnIdx, snap.numBuckets)
-    readWinners(spark, snap, snap.files.filter(_.bucket == b),
-      Some(col("conv_id") === convId && col("turn_idx") === turnIdx))
+    val files = snap.files.filter(_.bucket == b)
+    val target = snap.schema
+    val readConf = parquetReadConf(spark)
+    val rows = files.flatMap(f => keyRows(spark, readConf, snap, f, convId, turnIdx))
+    val Seq(ts, lsn, op) = Seq("ts", "lsn", "op").map(target.fieldIndex)
+    def order(r: InternalRow, i: Int) = if (r.isNullAt(i)) Long.MinValue else r.getLong(i)
+    // all rows share the key, so its LWW winner is the first greatest (ts, lsn)
+    val winners = if (!files.exists(_.kind == "delta")) rows
+      else rows.maxByOption(r => (order(r, ts), order(r, lsn))).toSeq
+    val live = winners.filter(r => !r.isNullAt(op) && r.getUTF8String(op).toString != "D")
+    val kept = target.fields.indices.filter(_ != op)
+    val schema = StructType(kept.map(i => target(i).copy(nullable = true)))
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(live.map(r => toRow(InternalRow.fromSeq(
+      kept.map(i => r.get(i, target(i).dataType)))).asInstanceOf[Row]).asJava, schema)
+  }
+
+  /** The table's conf plus the settings Spark's parquet scan hands its row
+    * converter (`ParquetFileFormat` sets the same keys from the session). */
+  private def parquetReadConf(spark: SparkSession): Configuration = {
+    import org.apache.spark.sql.internal.SQLConf
+    val c = new Configuration(conf)
+    val sql = spark.sessionState.conf
+    c.setBoolean(SQLConf.CASE_SENSITIVE.key, sql.caseSensitiveAnalysis)
+    c.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key, sql.isParquetBinaryAsString)
+    c.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, sql.isParquetINT96AsTimestamp)
+    c.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
+      sql.parquetInferTimestampNTZEnabled)
+    c.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, sql.legacyParquetNanosAsLong)
+    c
+  }
+
+  /** The rows of key (`convId`, `turnIdx`) in the data file `f`, as catalyst
+    * rows aligned to `snap`'s schema the way [[SchemaEvolution.align]]
+    * aligns a frame: a missing column is null, a widened one is cast. The
+    * file is read with Spark's own parquet row converter; the datetime
+    * rebase modes come from the file's metadata and the session, as Spark's
+    * scan derives them. Its INT96 time zone conversion applies only to
+    * files that parquet-mr did not write, and this table's files are all
+    * Spark's. */
+  private def keyRows(spark: SparkSession, readConf: Configuration, snap: Snapshot,
+      f: DataFileEntry, convId: String, turnIdx: Long): Seq[InternalRow] = {
+    import org.apache.parquet.filter2.predicate.FilterApi
+    import org.apache.parquet.io.ColumnIOFactory
+    import org.apache.spark.sql.execution.datasources.DataSourceUtils
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetReadSupport}
+    import scala.jdk.CollectionConverters._
+    val target = snap.schema
+    val physical = StructType(StructType.fromDDL(snap.schemaVersions(f.schemaV.toString))
+      .map(_.copy(nullable = true)))
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    val aligned = target.map { t =>
+      physical.fieldNames.indexOf(t.name) match {
+        case -1 => Literal(null, t.dataType)
+        case i if physical(i).dataType == t.dataType => BoundReference(i, t.dataType, true)
+        case i => Cast(BoundReference(i, physical(i).dataType, true), t.dataType, tz)
+      }
+    }
+    val Seq(c, ti) = Schemas.keyCols.map(target.fieldIndex)
+    val conv = UTF8String.fromString(convId)
+    def isKey(r: InternalRow) = !r.isNullAt(c) && r.getUTF8String(c) == conv &&
+      !r.isNullAt(ti) && r.get(ti, target(ti).dataType).asInstanceOf[Number].longValue == turnIdx
+    readConf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, physical.json)
+    // the filter skips other conversations' row groups and records; isKey
+    // is the exact match, turn_idx across its widened types included
+    val filter = FilterCompat.get(FilterApi.eq(FilterApi.binaryColumn("conv_id"),
+      org.apache.parquet.io.api.Binary.fromString(convId)))
+    val r = openParquet(new Path(root, f.path), readConf, filter)
+    try {
+      val meta = r.getFooter.getFileMetaData
+      val kv = meta.getKeyValueMetaData
+      val modes = new ParquetOptions(Map.empty[String, String], spark.sessionState.conf)
+      val support = new ParquetReadSupport(None, false,
+        DataSourceUtils.datetimeRebaseSpec(kv.get, modes.datetimeRebaseModeInRead),
+        DataSourceUtils.int96RebaseSpec(kv.get, modes.int96RebaseModeInRead))
+      val context = support.init(new org.apache.parquet.hadoop.api.InitContext(readConf,
+        kv.asScala.map { case (k, v) => k -> java.util.Collections.singleton(v) }.asJava,
+        meta.getSchema))
+      r.setRequestedSchema(context.getRequestedSchema)
+      val rows = support.prepareForRead(readConf, kv, meta.getSchema, context)
+      val io = new ColumnIOFactory(meta.getCreatedBy)
+        .getColumnIO(context.getRequestedSchema, meta.getSchema, true)
+      val out = Seq.newBuilder[InternalRow]
+      var pages = r.readNextFilteredRowGroup()
+      while (pages != null) {
+        val records = io.getRecordReader(pages, rows, filter)
+        var n = 0L
+        while (n < pages.getRowCount) {
+          val row = records.read()
+          n += 1
+          if (!records.shouldSkipCurrentRecord) {
+            if (row == null) n = pages.getRowCount // the filter ended the row group
+            else {
+              val copied = row.copy()
+              val a = InternalRow.fromSeq(aligned.map(_.eval(copied)))
+              if (isKey(a)) out += a
+            }
+          }
+        }
+        pages = r.readNextFilteredRowGroup()
+      }
+      out.result()
+    } finally r.close()
   }
 
   /**
@@ -901,10 +1028,8 @@ object SnapTable {
     * min/max from the row-group statistics. Runs on the driver for narrow
     * commits, on executors for wide ones. */
   private[table] def footerStats(path: String, conf: Configuration): FooterStats = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf))
+    val r = openParquet(new Path(path), conf)
     try {
       val rows = r.getRecordCount
       val lsnStats = r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala
@@ -918,20 +1043,32 @@ object SnapTable {
     } finally r.close()
   }
 
+  /** Open one parquet file with read options built from `conf`, the
+    * table's Hadoop conf; `filter` prunes row groups. The one-argument
+    * `ParquetFileReader.open` and `ParquetReader.builder` build theirs from
+    * a `new Configuration()`, which parses Hadoop's XML defaults again for
+    * each file and never sees the table's settings. */
+  private def openParquet(path: Path, conf: Configuration,
+      filter: FilterCompat.Filter = FilterCompat.NOOP): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
+      HadoopReadOptions.builder(conf, path).withRecordFilter(filter).build())
+
   /** Key columns for merge/bucketing (fixed for the transcript table). */
   object Schemas {
     val keyCols: Seq[String] = graft.model.Schemas.mergeKeys
   }
 
-  private def filesystem(root: String, spark: SparkSession): FileSystem =
-    new Path(root).getFileSystem(
-      if (spark == null) new Configuration() else spark.sessionState.newHadoopConf())
+  /** The table at `root` over its own filesystem and the Hadoop conf that
+    * filesystem is made with. */
+  private def at(root: String, spark: SparkSession): SnapTable = {
+    val conf = if (spark == null) new Configuration() else spark.sessionState.newHadoopConf()
+    new SnapTable(root, new Path(root).getFileSystem(conf), conf)
+  }
 
   def create(spark: SparkSession, root: String, schema: StructType,
       numBuckets: Int = 32): SnapTable = {
-    val fs = filesystem(root, spark)
-    val t = new SnapTable(root, fs)
-    fs.mkdirs(new Path(root, "meta"))
+    val t = at(root, spark)
+    t.fs.mkdirs(new Path(root, "meta"))
     require(t.history.isEmpty, s"table already exists at $root")
     val envelope = StructType(schema.fields ++
       Seq("ts" -> TimestampType, "lsn" -> LongType, "op" -> StringType)
@@ -948,7 +1085,7 @@ object SnapTable {
     * version is always whole; one lower in the history is deleted where it
     * is read. */
   def load(spark: SparkSession, root: String): SnapTable = {
-    val t = new SnapTable(root, filesystem(root, spark))
+    val t = at(root, spark)
     t.history.reverseIterator.find(t.parsed(_).isDefined)
     t
   }

@@ -457,20 +457,23 @@ class CdcEndToEndSpec extends SparkSpec {
   }
 
   test("point lookup reads only the key's bucket (KV-get path)") {
-    val t = SnapTable.create(spark, tmpDir("table"), Schemas.payloadV2, numBuckets = 16)
+    val t = SnapTable.create(spark, GraftTestFs.root(spark, tmpDir("table")), Schemas.payloadV2,
+      numBuckets = 16)
     val batch = (1 to 400).map(i => ChangeEvent(s"c${i % 80}", i % 5, "user", s"t$i", null,
       new java.sql.Timestamp(1000L + i), i.toLong, "U")).toDF()
     CdcPipeline.applyBatch(t, batch, 0)
     val full = t.read(spark).filter(col("conv_id") === "c7" && col("turn_idx") === 2)
       .select("conv_id", "turn_idx", "text").as[(String, Int, String)].collect().toSet
-    val point = t.readKey(spark, "c7", 2L)
-      .select("conv_id", "turn_idx", "text").as[(String, Int, String)].collect().toSet
+    val (point, opened) = GraftTestFs.opening(t.readKey(spark, "c7", 2L)
+      .select("conv_id", "turn_idx", "text").as[(String, Int, String)].collect().toSet)
     assert(point == full && point.nonEmpty)
-    // pruning: the lookup's scan touches exactly one bucket directory
-    val touchedBuckets = t.readKey(spark, "c7", 2L).inputFiles
-      .map(_.split("__bucket=")(1).split("/")(0)).toSet
-    assert(touchedBuckets.size == 1, s"expected 1 bucket, scanned $touchedBuckets")
-    assert(t.readKey(spark, "c7", 2L).inputFiles.length < t.snapshot().files.size)
+    // pruning: the lookup opens exactly the files of the key's bucket
+    val snap = t.snapshot()
+    def local(rel: String) = new org.apache.hadoop.fs.Path(t.root, rel).toUri.getPath
+    val bucketFiles = snap.files.filter(_.bucket == t.bucketOf(spark, "c7", 2L, 16))
+      .map(f => local(f.path))
+    assert(opened.filter(_.endsWith(".parquet")).sorted == bucketFiles.sorted, opened)
+    assert(bucketFiles.size < snap.files.size)
   }
 
   test("readChangesSince yields exactly the new changes (deletes included) with file pruning") {
@@ -516,7 +519,8 @@ class CdcEndToEndSpec extends SparkSpec {
   }
 
   test("rebucket rewrites the layout; state, lookups and later merges survive") {
-    val t = SnapTable.create(spark, tmpDir("table"), Schemas.payloadV2, numBuckets = 4)
+    val t = SnapTable.create(spark, GraftTestFs.root(spark, tmpDir("table")), Schemas.payloadV2,
+      numBuckets = 4)
     def ev(i: Int, lsn: Long, op: String = "U") = ChangeEvent(s"c$i", 1, "user", s"v$lsn",
       null, new java.sql.Timestamp(1000L + lsn), lsn, op)
     CdcPipeline.applyBatch(t,
@@ -532,8 +536,12 @@ class CdcEndToEndSpec extends SparkSpec {
     assert(t.read(spark).select("conv_id", "text").as[(String, String)]
       .collect().toSet == before)
     // point lookup uses the NEW layout's hash
-    assert(t.readKey(spark, "c42", 1L).select("text").as[String].head() == "v142")
-    assert(t.readKey(spark, "c42", 1L).inputFiles.length < t.snapshot().files.size)
+    val (text, opened) =
+      GraftTestFs.opening(t.readKey(spark, "c42", 1L).select("text").as[String].head())
+    assert(text == "v142")
+    val bucket = t.bucketOf(spark, "c42", 1L, 16)
+    assert(opened.filter(_.endsWith(".parquet")).map(_.split("__bucket=")(1).split("/")(0))
+      .distinct == Seq(bucket.toString), opened)
     // old snapshot still readable under its own layout
     assert(t.readVersion(spark, oldVersion).count() == before.size)
     // subsequent merge buckets by the new count

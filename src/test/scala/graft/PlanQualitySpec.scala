@@ -21,30 +21,6 @@ class PlanQualitySpec extends SparkSpec {
     df.queryExecution.executedPlan.toString()
   }
 
-  /** Spark jobs `body` starts on this thread (tagged by a local property,
-    * so suites sharing the session do not count). */
-  private def jobs(body: => Any): Int = {
-    val key = "graft.test.jobs"
-    val tag = java.util.UUID.randomUUID().toString
-    val started = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty(key) == tag)) started.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setLocalProperty(key, tag)
-      try body finally spark.sparkContext.setLocalProperty(key, null)
-      // listener delivery is async: poll until the count is stable
-      var (stable, last) = (0, -1)
-      while (stable < 5) {
-        Thread.sleep(200)
-        if (started.get == last) stable += 1 else { stable = 0; last = started.get }
-      }
-      last
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   private def formatted(df: DataFrame): String = {
     val qe = df.queryExecution
     qe.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
