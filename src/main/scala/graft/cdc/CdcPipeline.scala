@@ -67,7 +67,8 @@ final case class PipelineOptions(
       * throttle (reference: core/.../transport/channel/Channel.java:176-239
       * budgets BYTES per flow-control window, not only records). When set it
       * replaces the file-count trigger (Spark's file source treats the two
-      * as alternative admission limits). */
+      * as alternative admission limits). The ledger source, which admits
+      * whole chunks, refuses it. */
     maxBytesPerTrigger: Option[Long] = None,
     /** "cow" rewrites touched buckets per epoch (read-optimized); "mor"
       * appends delta files per epoch with O(batch) commit IO and defers the
@@ -231,7 +232,7 @@ object CdcPipeline {
       if (maxLsn > lag) table.expireTombstones(spark, maxLsn - lag): Unit
     }
     table.expireSnapshots(pol.retainSnapshots): Unit
-    gcEpochMeta(spark, table, epoch - pol.retainMetaEpochs)
+    gcEpochMeta(table, epoch - pol.retainMetaEpochs)
   }
 
   /** Delete the quarantine samples and lineage records of epochs strictly
@@ -239,18 +240,13 @@ object CdcPipeline {
     * name under `meta/dirty` and `meta/lineage` carries its epoch as its
     * first run of digits ([[epochOf]]), including an earlier build's
     * `epoch-N/` sample dirs and `.tmp-epoch-*` asides. */
-  private def gcEpochMeta(spark: SparkSession, table: SnapTable,
-      beforeEpoch: Long): Unit = {
+  private def gcEpochMeta(table: SnapTable, beforeEpoch: Long): Unit = {
     if (beforeEpoch <= 0) return
-    // the SESSION's Hadoop conf, not a bare Configuration(): spark.hadoop.*
-    // settings (object-store credentials, endpoints) must reach the FS
-    val conf = spark.sessionState.newHadoopConf()
     for (sub <- Seq("dirty", "lineage")) {
       val dir = new Path(table.root, s"meta/$sub")
-      val fs = dir.getFileSystem(conf)
-      if (fs.exists(dir)) fs.listStatus(dir)
+      if (table.fs.exists(dir)) table.fs.listStatus(dir)
         .filter(st => epochOf(st.getPath.getName).exists(_ < beforeEpoch))
-        .foreach(st => fs.delete(st.getPath, true))
+        .foreach(st => table.fs.delete(st.getPath, true))
     }
   }
 
@@ -336,7 +332,7 @@ object CdcPipeline {
     * before its epoch's skips). */
   def readLineage(spark: SparkSession, table: SnapTable): Seq[LineageRecord] = {
     val dir = new Path(table.root, "meta/lineage")
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = table.fs
     if (!fs.exists(dir)) return Seq.empty
     // dot-names are publish asides; anything unparseable is an earlier
     // build's torn record — skip it loudly rather than fail the whole
@@ -375,6 +371,9 @@ object CdcPipeline {
    */
   def stream(spark: SparkSession, changelogDir: String, table: SnapTable,
       checkpointDir: String, opts: PipelineOptions = PipelineOptions()): StreamingQuery = {
+    require(!(opts.ledgerSource && opts.maxBytesPerTrigger.isDefined),
+      "maxBytesPerTrigger needs the file source: the ledger source admits whole " +
+        "chunks (maxFilesPerTrigger chunks per trigger)")
     val trigger = opts.followIntervalMs
       .map(ms => Trigger.ProcessingTime(ms)).getOrElse(Trigger.AvailableNow())
     if (opts.ledgerSource) {

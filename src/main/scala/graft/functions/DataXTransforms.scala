@@ -142,7 +142,7 @@ object DataXTransforms {
       case (d, MapT(ctx, code)) => ScriptCompiler.compileWithContext(code)(d, ctx)
       case (d, Named(name, ctx)) => TransformRegistry.resolve(name).getOrElse(
         throw new IllegalArgumentException(s"transformer '$name' not registered; " +
-          s"known: ${TransformRegistry.names.sorted.mkString(", ")}"))(d, ctx)
+          s"registered: ${TransformRegistry.names.sorted.mkString(", ")}"))(d, ctx)
     }
 }
 
@@ -163,11 +163,6 @@ object TransformRegistry {
     * context map (the reference's tContext). */
   type ComplexFn = (DataFrame, Map[String, String]) => DataFrame
 
-  /** Built-in single-column names live in the job layer's match; this set
-    * exists so namespace checks mirror TransformerRegistry.checkName. */
-  private val nativeNames = Set(
-    "dx_substr", "dx_pad", "dx_replace", "dx_filter", "dx_script", "dx_groovy", "dx_map")
-
   private val registered = TrieMap.empty[String, ComplexFn]
 
   /** Register a user transform. Names in the reserved `dx_` namespace or
@@ -180,7 +175,7 @@ object TransformRegistry {
   }
 
   def resolve(name: String): Option[ComplexFn] = registered.get(name)
-  def names: Seq[String] = nativeNames.toSeq ++ registered.keys
+  def names: Seq[String] = registered.keys.toSeq
   /** Test hook — the reference has no unregister; jobs re-register on boot. */
   private[graft] def unregister(name: String): Unit = registered.remove(name)
 }

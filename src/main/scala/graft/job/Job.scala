@@ -1,6 +1,6 @@
 package graft.job
 
-import graft.cdc.{CdcPipeline, Dirty, ErrorLimit, PipelineOptions}
+import graft.cdc.{CdcPipeline, Dirty, DirtyStats, ErrorLimit, PipelineOptions}
 import graft.functions.{DataXTransforms, TransformRegistry}
 import graft.model.Schemas
 import graft.sources.{TypedFileSink, TypedFileSource}
@@ -18,13 +18,11 @@ import org.json4s.jackson.JsonMethods
  * `job.content[0].{reader,transformer[],writer}` — and runs it through the
  * Spark engine: readers become DataFrame scans, the transformer chain becomes
  * [[DataXTransforms.applyChain]], writers become sinks (including the
- * snapshot-table MERGE upsert), and `errorLimit` gates the dirty sideband.
+ * snapshot-table MERGE upsert), and `errorLimit` gates both ends' dirty rows.
  *
- * Readers: streamreader (synthetic, column value/random specs — reference
- * streamreader/.../StreamReader.java:241-332), txtfilereader (CSV + typed
- * column projection), parquetreader, changelogreader (CDC envelope dir).
- * Writers: streamwriter (count/print), txtfilewriter, parquetwriter,
- * snaptablewriter (MERGE upsert).
+ * Each plugin kind resolves by name in one place, which `run` and
+ * `preCheck` share: readers in [[read]], transformers in [[toTransform]],
+ * writers in [[writers]].
  */
 object Job {
 
@@ -259,116 +257,121 @@ object Job {
 
   // ---- transformer chain ---------------------------------------------------
 
+  /** Natives own the `dx_` names; any other name resolves through the
+    * [[graft.functions.TransformRegistry]] (third-party transformers,
+    * reference TransformerRegistry.java:23-177). */
   private def toTransform(df: DataFrame, t: TransformSpec): DataXTransforms.Transform = {
     lazy val colName = t.columnName.getOrElse(
       df.columns(t.columnIndex.getOrElse(
         throw new IllegalArgumentException(s"${t.name} needs columnIndex or columnName"))))
+    def code = t.code.orElse(t.paras.headOption).getOrElse(
+      throw new IllegalArgumentException(s"${t.name} needs code (or paras[0])"))
     t.name match {
       case "dx_substr" => DataXTransforms.Substr(colName, t.paras(0).toInt, t.paras(1).toInt)
       case "dx_pad" => DataXTransforms.Pad(colName, t.paras(0), t.paras(1).toInt, t.paras(2))
       case "dx_replace" =>
         DataXTransforms.Replace(colName, t.paras(0).toInt, t.paras(1).toInt, t.paras(2))
       case "dx_filter" => DataXTransforms.Filter(colName, t.paras(0), t.paras(1))
+      // whole-row transforms need no column binding
+      case "dx_script" | "dx_groovy" => DataXTransforms.Script(code)
+      case "dx_map" => DataXTransforms.MapT(t.context, code)
+      case name if TransformRegistry.resolve(name).isDefined =>
+        DataXTransforms.Named(name, t.context)
       case other => throw new IllegalArgumentException(s"unknown transformer '$other'")
     }
   }
 
-  /** Whole-row transforms need no column binding — handled before
-    * [[toTransform]]. Unrecognized names fall through to the
-    * [[graft.functions.TransformRegistry]] (third-party transformers,
-    * reference TransformerRegistry.java:23-177). */
-  private def toTransformAny(df: DataFrame, t: TransformSpec): DataXTransforms.Transform =
-    t.name match {
-      case "dx_script" | "dx_groovy" =>
-        DataXTransforms.Script(t.code.orElse(t.paras.headOption).getOrElse(
-          throw new IllegalArgumentException("dx_script needs code (or paras[0])")))
-      case "dx_map" =>
-        DataXTransforms.MapT(t.context, t.code.orElse(t.paras.headOption).getOrElse(
-          throw new IllegalArgumentException("dx_map needs code (or paras[0])")))
-      case name if TransformRegistry.resolve(name).isDefined =>
-        DataXTransforms.Named(name, t.context)
-      case _ => toTransform(df, t)
-    }
-
   // ---- writers -------------------------------------------------------------
 
-  /** Execute ONE sink action over `df` (possibly a chunk slice). Returns
-    * Some(rows) only when the sink itself has a better row count than the
-    * input (snaptablewriter reports rowsApplied = LWW winners); None means
-    * the caller takes the count from its Observation on the frame — sinks
-    * never re-count, because a writer-side `df.count()` re-executed the
-    * whole read->transform pipeline (a lane now reads its source once).
-    * `chunk` > 0 forces append semantics (the first chunk consumed the
-    * configured truncate/nonConflict mode). */
-  private def write(df: DataFrame, p: PluginSpec, chunk: Int, epochBase: Long): Option[Long] = {
-    def chunkedMode(m: String): String = if (chunk == 0) m else "append"
-    p.name.toLowerCase match {
-      case "streamwriter" =>
+  /** A writer plugin. `run` executes ONE sink action over a lane's frame
+    * or chunk slice (chunk > 0 forces append) under the job's errorLimit,
+    * and returns the rows the sink counts itself (None: the lane's
+    * Observation count; a writer-side `df.count()` would re-execute the
+    * pipeline) and the rows it rejected as dirty. `check` is its dry run. */
+  private[graft] final case class Writer(
+      run: (DataFrame, JValue, Int, ErrorLimit) => (Option[Long], Long),
+      check: (SparkSession, JValue) => Seq[String] = (_, _) => Nil)
+
+  private def missingPath(wp: JValue): Seq[String] =
+    if ((wp \ "path").extractOpt[String].isEmpty) Seq("missing path") else Nil
+
+  /** A file writer of (frame, path, writeMode, parameter); its check also
+    * finds an existing nonConflict target through the target's own Hadoop
+    * FS (java.io.File would pass any non-file:// scheme). */
+  private def fileWriter(write: (DataFrame, String, String, JValue) => Unit): Writer =
+    Writer((df, p, chunk, _) => {
+      write(df, (p \ "path").extract[String], if (chunk > 0) "append"
+        else (p \ "writeMode").extractOpt[String].getOrElse("append"), p)
+      (None, 0L)
+    }, (spark, wp) => missingPath(wp) ++ (wp \ "path").extractOpt[String].filter { path =>
+      val hp = new org.apache.hadoop.fs.Path(path)
+      (wp \ "writeMode").extractOpt[String].contains("nonConflict") &&
+        hp.getFileSystem(spark.sessionState.newHadoopConf()).exists(hp)
+    }.map(path => s"nonConflict target $path already exists"))
+
+  /** A JDBC writer: batched write with row-by-row dirty replay,
+    * insert/replace/update templates and pre/postSql, or the staged load. */
+  private def jdbcWriter(dialectHint: Option[String] = None,
+      defaultWriteMode: String = "insert"): Writer =
+    Writer((df, p, _, _) => {
+      val (written, dirty) = JdbcLane.write(df, p, dialectHint, defaultWriteMode)
+      (Some(written), dirty)
+    }, (_, wp) => JdbcLane.preCheckWrite(wp))
+
+  /** Every writer name, aliases included. */
+  private[graft] val writers: Map[String, Writer] = {
+    val csv = fileWriter { (df, path, mode, p) =>
+      TypedFileSink.writeCsv(df, path, TypedFileSink.WriteConfig(
+        fieldDelimiter = (p \ "fieldDelimiter").extractOpt[String].getOrElse(","),
+        writeMode = mode))
+    }
+    val parquetModes = Map("append" -> "append", "nonConflict" -> "errorifexists",
+      "truncate" -> "overwrite")
+    // the reference's CommonRdbmsWriter family
+    val rdbms = jdbcWriter()
+    Map(
+      "streamwriter" -> Writer((df, p, _, _) => {
         // the full pass (the lane's terminal action) must run BEFORE the
         // bounded show: a LIMIT-ed query would resolve the lane's
         // observations with partial counts
         df.foreach(_ => ())
-        if ((p.parameter \ "print").extractOpt[Boolean].getOrElse(false))
-          df.show(20, truncate = 40)
-        None
-      case "txtfilewriter" | "csvwriter" =>
-        val path = (p.parameter \ "path").extract[String]
-        TypedFileSink.writeCsv(df, path, TypedFileSink.WriteConfig(
-          fieldDelimiter = (p.parameter \ "fieldDelimiter").extractOpt[String].getOrElse(","),
-          writeMode = chunkedMode(
-            (p.parameter \ "writeMode").extractOpt[String].getOrElse("append"))))
-        None
-      case "parquetwriter" =>
-        val path = (p.parameter \ "path").extract[String]
-        val mode = chunkedMode(
-          (p.parameter \ "writeMode").extractOpt[String].getOrElse("append")) match {
-          case "append" => "append"
-          case "nonConflict" => "errorifexists"
-          case "truncate" => "overwrite"
-          case other => throw new IllegalArgumentException(
-            s"writeMode '$other' (expected append|nonConflict|truncate)")
-        }
-        df.write.mode(mode).parquet(path)
-        None
-      case "orcwriter" =>
-        val path = (p.parameter \ "path").extract[String]
-        TypedFileSink.writeOrc(df, path, TypedFileSink.WriteConfig(
-          writeMode = chunkedMode(
-            (p.parameter \ "writeMode").extractOpt[String].getOrElse("append"))))
-        None
-      case "snaptablewriter" =>
-        val path = (p.parameter \ "path").extract[String]
+        if ((p \ "print").extractOpt[Boolean].getOrElse(false)) df.show(20, truncate = 40)
+        (None, 0L)
+      }),
+      "txtfilewriter" -> csv,
+      "csvwriter" -> csv,
+      "parquetwriter" -> fileWriter { (df, path, mode, _) =>
+        df.write.mode(parquetModes.getOrElse(mode, throw new IllegalArgumentException(
+          s"writeMode '$mode' (expected append|nonConflict|truncate)"))).parquet(path)
+      },
+      "orcwriter" -> fileWriter { (df, path, mode, _) =>
+        TypedFileSink.writeOrc(df, path, TypedFileSink.WriteConfig(writeMode = mode))
+      },
+      "snaptablewriter" -> Writer((df, p, _, limit) => {
+        val path = (p \ "path").extract[String]
         val spark = df.sparkSession
         val table =
           if (SnapTable.exists(spark, path)) SnapTable.load(spark, path)
           else SnapTable.create(spark, path, Schemas.payloadV2,
-            (p.parameter \ "buckets").extractOpt[Int].getOrElse(32))
-        val rec = CdcPipeline.applyBatch(table, df, epoch = epochBase + chunk)
-        Some(rec.rowsApplied)
-      case "drdswriter" =>
-        Some(JdbcLane.write(df, p.parameter, dialectHint = Some("drds"))._1)
-      case "adswriter" =>
-        // the reference defaults the ADS lane to staged "load" mode when
-        // writeMode is unset (AdsWriter.java:72-77); insert/stream/replace
-        // still selectable per job
-        Some(JdbcLane.write(df, p.parameter, defaultWriteMode = "load")._1)
-      case "rdbmswriter" | "jdbcwriter" | "mysqlwriter" | "oraclewriter" |
-           "postgresqlwriter" | "sqlserverwriter" | "derbywriter" =>
-        // CommonRdbmsWriter family: batched write with row-by-row dirty
-        // replay, insert/replace/update templates, pre/postSql
-        Some(JdbcLane.write(df, p.parameter)._1)
-      case other => throw new IllegalArgumentException(s"unknown writer '$other'")
-    }
+            (p \ "buckets").extractOpt[Int].getOrElse(32))
+        // each chunk commits the table's next epoch; a chunk over the
+        // job's errorLimit fails before its commit
+        val rec = CdcPipeline.applyBatch(table, df, table.committedEpoch + 1,
+          PipelineOptions(errorLimit = limit))
+        (Some(rec.rowsApplied), rec.rowsDirty)
+      }, (_, wp) => missingPath(wp)),
+      // DRDS speaks the MySQL wire protocol, so the plugin name forces its
+      // dialect (and its mandatory session SQL)
+      "drdswriter" -> jdbcWriter(dialectHint = Some("drds")),
+      // the reference defaults the ADS lane to staged "load" mode when
+      // writeMode is unset (AdsWriter.java:72-77)
+      "adswriter" -> jdbcWriter(defaultWriteMode = "load")) ++
+      Seq("rdbmswriter", "jdbcwriter", "mysqlwriter", "oraclewriter",
+        "postgresqlwriter", "sqlserverwriter", "derbywriter").map(_ -> rdbms)
   }
 
-  /** Epoch base for a snaptablewriter lane (chunk i commits epochBase+i). */
-  private def epochBase(spark: SparkSession, p: PluginSpec): Long =
-    if (p.name.equalsIgnoreCase("snaptablewriter")) {
-      val path = (p.parameter \ "path").extract[String]
-      if (SnapTable.exists(spark, path))
-        SnapTable.load(spark, path).committedEpoch + 1
-      else 0L
-    } else 0L
+  private def writer(p: PluginSpec): Writer = writers.getOrElse(p.name.toLowerCase,
+    throw new IllegalArgumentException(s"unknown writer '${p.name.toLowerCase}'"))
 
   // ---- speed caps (batch lanes) --------------------------------------------
 
@@ -466,29 +469,13 @@ object Job {
           case e: Throwable => problems += s"${tag}reader schema: ${e.getMessage}"
         }
         content.transformers.foreach { t =>
-          try toTransformAny(df, t)
+          try toTransform(df, t)
           catch { case e: Throwable => problems += s"${tag}transformer ${t.name}: ${e.getMessage}" }
         }
       }
-      val wp = content.writer.parameter
-      content.writer.name.toLowerCase match {
-        case "txtfilewriter" | "csvwriter" | "parquetwriter" | "orcwriter" =>
-          val path = (wp \ "path").extractOpt[String]
-          if (path.isEmpty) problems += s"${tag}writer: missing path"
-          else if ((wp \ "writeMode").extractOpt[String].contains("nonConflict") && {
-            // the target's own Hadoop FS, not java.io.File (non-file://
-            // schemes would silently pass the preCheck)
-            val hp = new org.apache.hadoop.fs.Path(path.get)
-            hp.getFileSystem(spark.sessionState.newHadoopConf()).exists(hp)
-          }) problems += s"${tag}writer: nonConflict target ${path.get} already exists"
-        case "snaptablewriter" =>
-          if ((wp \ "path").extractOpt[String].isEmpty) problems += s"${tag}writer: missing path"
-        case "streamwriter" => ()
-        case "rdbmswriter" | "jdbcwriter" | "mysqlwriter" | "oraclewriter" |
-             "postgresqlwriter" | "sqlserverwriter" | "derbywriter" | "adswriter" =>
-          JdbcLane.preCheckWrite(wp).foreach(p => problems += s"${tag}writer: $p")
-        case other => problems += s"${tag}writer: unknown plugin '$other'"
-      }
+      try writer(content.writer).check(spark, content.writer.parameter)
+        .foreach(p => problems += s"${tag}writer: $p")
+      catch { case e: Throwable => problems += s"${tag}writer: ${e.getMessage}" }
     }
     problems.toSeq
   }
@@ -509,8 +496,9 @@ object Job {
 
   /**
    * Run a job spec end-to-end: read -> dirty gate (requiredColumns +
-   * errorLimit) -> transformer chain -> channel repartition -> write, with
-   * the reference's state transitions and post-job hooks.
+   * errorLimit) -> transformer chain -> channel repartition -> write ->
+   * errorLimit over both ends' dirty rows, with the reference's state
+   * transitions and post-job hooks.
    *
    * Row accounting is SINGLE-PASS: `rowsRead`/`rowsWritten` come from
    * `Observation` (CollectMetrics) nodes planted in the lane's plan and
@@ -528,8 +516,10 @@ object Job {
       val spec = parse(json)
       states += Running
       val channels = spec.settings.speed.channel.getOrElse(1)
+      val limit = spec.settings.errorLimit
       var (rowsRead, rowsWritten, rowsDirty) = (0L, 0L, 0L)
       for ((content, ci) <- spec.contents.zipWithIndex) {
+        val sink = writer(content.writer)
         val readObs = org.apache.spark.sql.Observation(s"graft-read-$ci")
         val raw = read(spark, content.reader, channels)
           .observe(readObs, count(lit(1)).as("rows"))
@@ -538,17 +528,15 @@ object Job {
           case JArray(cs) => cs.map(_.extract[String])
           case _ => Nil
         }
-        val (clean, dirty) =
-          if (required.isEmpty) (raw, 0L)
+        val (clean, readerDirty) =
+          if (required.isEmpty) (raw, DirtyStats(0L, 0L, Map.empty))
           else {
             val split = Dirty.split(raw, required.map(c =>
               Dirty.Rule(s"${c}_null", col(c).isNotNull)))
-            val stats = split.stats().enforce(spec.settings.errorLimit)
-            (split.clean, stats.dirty)
+            (split.clean, split.stats().enforce(limit))
           }
-        rowsDirty += dirty
         val transformed = DataXTransforms.applyChain(clean,
-          content.transformers.map(toTransformAny(clean, _)))
+          content.transformers.map(toTransform(clean, _)))
         val sized = if (channels > 1) transformed.repartition(channels) else transformed
         // byte->record width sampling probes a FRESH read plan (no
         // Observation node) so the bounded probe can't leak a partial count
@@ -558,14 +546,21 @@ object Job {
           case Some(cap) => chunked(sized, cap)
           case None => Seq(sized)
         }
-        val base = epochBase(spark, content.writer)
+        var writerDirty = 0L
         for ((slice, chunk) <- slices.zipWithIndex) {
           val writeObs = org.apache.spark.sql.Observation(s"graft-write-$ci-$chunk")
           val observed = slice.observe(writeObs, count(lit(1)).as("rows"))
-          rowsWritten += write(observed, content.writer, chunk, base)
-            .getOrElse(writeObs.get("rows").asInstanceOf[Long])
+          val (rows, dirty) = sink.run(observed, content.writer.parameter, chunk, limit)
+          rowsWritten += rows.getOrElse(writeObs.get("rows").asInstanceOf[Long])
+          writerDirty += dirty
         }
-        rowsRead += readObs.get("rows").asInstanceOf[Long]
+        val laneRead = readObs.get("rows").asInstanceOf[Long]
+        val laneDirty = readerDirty.dirty + writerDirty
+        rowsRead += laneRead
+        rowsDirty += laneDirty
+        // the same gate over the rows either end rejected
+        DirtyStats(laneRead - laneDirty, laneDirty,
+          readerDirty.byReason + ("writer" -> writerDirty)).enforce(limit)
       }
       states += Succeeded
       finish(Report(states.toSeq, rowsRead, rowsWritten, rowsDirty,

@@ -9,13 +9,9 @@ import java.sql.{Connection, PreparedStatement, SQLException}
  * with transaction-per-batch and row-by-row dirty replay on batch failure —
  * the reference's CommonRdbmsWriter behavior (reference:
  * plugin-rdbms-util/.../writer/CommonRdbmsWriter.java:262-398; writeMode
- * template builder WriterUtil.java:111-168), rebuilt for `foreachPartition`.
- *
- * Scale shape: one connection + one prepared statement per Spark partition,
- * `batchSize` rows per executeBatch (the reference defaults 2048) — on a
- * 1000-executor cluster, write parallelism = partition count, which the
- * caller sizes with `repartition(n)` against the DB's connection budget
- * (the reference's channel count, JobContainer.java:416-486).
+ * template builder WriterUtil.java:111-168), rebuilt on [[SinkPartitions]]:
+ * one connection + one prepared statement per Spark partition, `batchSize`
+ * rows per executeBatch (the reference defaults 2048).
  */
 object JdbcWrite {
 
@@ -54,6 +50,17 @@ object JdbcWrite {
   /** Result of one partition's write. */
   final case class PartitionResult(written: Long, dirty: Long)
 
+  /** Bind `columns` of `row`, in order, to parameters 1..n of `st`; a null
+    * cell binds SQL NULL. */
+  private def bind(st: PreparedStatement, row: Row, columns: IndexedSeq[Int]): Unit = {
+    var p = 0
+    while (p < columns.length) {
+      val c = columns(p)
+      st.setObject(p + 1, if (row.isNullAt(c)) null else row.get(c))
+      p += 1
+    }
+  }
+
   /**
    * Write one partition's rows: buffer to `batchSize`, executeBatch inside a
    * transaction; if the batch fails, roll back and replay row-by-row,
@@ -69,19 +76,12 @@ object JdbcWrite {
     var written = 0L
     var dirty = 0L
     val buf = new scala.collection.mutable.ArrayBuffer[Row](batchSize)
-
-    def bind(r: Row): Unit = {
-      var i = 0
-      while (i < r.length) {
-        if (r.isNullAt(i)) st.setObject(i + 1, null) else st.setObject(i + 1, r.get(i))
-        i += 1
-      }
-    }
+    def bindAll(r: Row): Unit = bind(st, r, 0 until r.length)
 
     def flush(): Unit = {
       if (buf.isEmpty) return
       try {
-        buf.foreach { r => bind(r); st.addBatch() }
+        buf.foreach { r => bindAll(r); st.addBatch() }
         st.executeBatch()
         conn.commit()
         written += buf.size
@@ -92,7 +92,7 @@ object JdbcWrite {
           // row-by-row replay: good rows commit, offenders go to dirty
           buf.foreach { r =>
             try {
-              bind(r); st.executeUpdate(); conn.commit(); written += 1
+              bindAll(r); st.executeUpdate(); conn.commit(); written += 1
             } catch {
               case e: SQLException =>
                 conn.rollback(); dirty += 1; onDirty(r, e)
@@ -116,45 +116,28 @@ object JdbcWrite {
   }
 
   /**
-   * Distributed write: one connection per partition via `connect`. Returns
-   * (written, dirty) totals. `connect` must be serializable-safe (a
-   * function creating the connection ON THE EXECUTOR — driver connections
-   * never serialize).
-   *
-   * Delivery semantics are AT-LEAST-ONCE, exactly like the reference's
-   * channel replay after a task failover: a Spark task retry or speculative
-   * duplicate re-runs its whole partition's side-effecting writes. Under
-   * `Insert` mode the re-applied rows surface as key violations (routed to
-   * dirty by the row-by-row replay); `Replace`/`Update` upserts are
-   * retry-IDEMPOTENT and are the modes to use when the target has a
-   * primary key. Exactly-once needs a transactional target with an epoch
-   * guard — that is the snapshot table's MERGE path, not raw JDBC. The
-   * returned totals are deterministic under retries: each partition's
-   * (written, dirty) counts come back through a `collect` (a retried task's
-   * result REPLACES its predecessor's), not through accumulators (which
-   * double-count every re-run). Callers on clusters with speculation
-   * enabled should disable it for Insert-mode jobs
-   * (`spark.speculation=false`) — a speculative duplicate racing the
-   * original is the one case where even upsert modes can interleave.
+   * Distributed write: each partition through [[writePartition]] on its
+   * own connection from `connect` ([[SinkPartitions]] has the loop and its
+   * retry semantics). Returns (written, dirty) totals. A re-run partition's
+   * rows surface under `Insert` as key violations (routed to dirty by the
+   * row-by-row replay); `Replace`/`Update` upserts are retry-idempotent and
+   * are the modes to use when the target has a primary key. Exactly-once
+   * needs a transactional target with an epoch guard — that is the
+   * snapshot table's MERGE path, not raw JDBC.
    */
   def write(df: DataFrame, connect: () => Connection, mode: WriteMode, table: String,
       batchSize: Int = 2048, preSql: Seq[String] = Nil, postSql: Seq[String] = Nil): (Long, Long) = {
-    val cols = df.columns.toSeq
-    val sql = template(mode, table, cols)
+    val sql = template(mode, table, df.columns.toSeq)
     // pre/postSql run ONCE per job on a driver-side connection, around the
     // distributed writes (reference: WriterUtil.executeSqls — e.g. a
     // truncate/DELETE before load, an index rebuild or audit insert after)
     if (preSql.nonEmpty) runSqls(connect, preSql)
-    val results = df.rdd.mapPartitions { rows =>
-      if (rows.isEmpty) Iterator.empty
-      else {
-        val conn = connect()
-        val res = try writePartition(conn, sql, rows, batchSize) finally conn.close()
-        Iterator.single((res.written, res.dirty))
-      }
-    }.collect()
+    val totals = SinkPartitions.counts(df, connect) { (conn, rows) =>
+      val res = writePartition(conn, sql, rows, batchSize)
+      (res.written, res.dirty)
+    }
     if (postSql.nonEmpty) runSqls(connect, postSql)
-    (results.map(_._1).sum, results.map(_._2).sum)
+    totals
   }
 
   /**
@@ -172,9 +155,7 @@ object JdbcWrite {
    * Retry shape: each partition fills the transit table under a SINGLE
    * transaction (commit at partition end), so a failed task's rows vanish
    * with its rollback and the retry re-fills from nothing — the block-id
-   * overwrite analogue. As with Insert mode, speculative duplicates are
-   * the one hole (two attempts both committing): disable speculation for
-   * load-mode jobs (`spark.speculation=false`).
+   * overwrite analogue.
    *
    * Returns rows published. `stagingDdl` comes from the dialect
    * ([[JdbcDialect.stagingDdl]]); `staging` defaults to the reference's
@@ -191,30 +172,20 @@ object JdbcWrite {
     runSqls(connect, Seq(stagingDdl(stg, table)))
     try {
       val sql = template(Insert, stg, cols)
-      val counts = df.rdd.mapPartitions { rows =>
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val conn = connect()
-          try {
-            conn.setAutoCommit(false)
-            val st = conn.prepareStatement(sql)
-            var n = 0L; var pending = 0
-            rows.foreach { r =>
-              var i = 0
-              while (i < r.length) {
-                if (r.isNullAt(i)) st.setObject(i + 1, null) else st.setObject(i + 1, r.get(i))
-                i += 1
-              }
-              st.addBatch(); n += 1; pending += 1
-              if (pending >= batchSize) { st.executeBatch(); pending = 0 }
-            }
-            if (pending > 0) st.executeBatch()
-            conn.commit() // the partition's one commit — all rows or none
-            st.close()
-            Iterator.single(n)
-          } finally conn.close()
+      val all = cols.indices
+      val (staged, _) = SinkPartitions.counts(df, connect) { (conn, rows) =>
+        conn.setAutoCommit(false)
+        val st = conn.prepareStatement(sql)
+        var n = 0L; var pending = 0
+        rows.foreach { r =>
+          bind(st, r, all); st.addBatch(); n += 1; pending += 1
+          if (pending >= batchSize) { st.executeBatch(); pending = 0 }
         }
-      }.collect()
+        if (pending > 0) st.executeBatch()
+        conn.commit() // the partition's one commit — all rows or none
+        st.close()
+        (n, 0L)
+      }
       // atomic publish: truncate-if-overwrite + INSERT..SELECT in one txn
       val conn = connect()
       try {
@@ -229,7 +200,7 @@ object JdbcWrite {
           case e: Exception => conn.rollback(); throw e
         } finally st.close()
       } finally conn.close()
-      counts.sum
+      staged
     } finally {
       // transit table always goes away, published or not
       try runSqls(connect, Seq(s"DROP TABLE $stg"))
@@ -254,48 +225,32 @@ object JdbcWrite {
       batchSize: Int = 1024): (Long, Long) = {
     val cols = df.columns.toSeq
     val dataCols = cols.filterNot(_ == opCol)
-    val keyIdx = keyCols.map(cols.indexOf)
-    val dataIdx = dataCols.map(cols.indexOf)
+    val keyIdx = keyCols.map(cols.indexOf).toIndexedSeq
+    val dataIdx = dataCols.map(cols.indexOf).toIndexedSeq
     val opIdx = cols.indexOf(opCol)
     require(keyIdx.forall(_ >= 0) && opIdx >= 0,
       s"applyChanges needs $keyCols and '$opCol' in ${cols.mkString(",")}")
     val delSql = s"DELETE FROM $table WHERE " +
       keyCols.map(k => s"$k = ?").mkString(" AND ")
     val insSql = template(Insert, table, dataCols)
-    val results = df.rdd.mapPartitions { rows =>
-      if (rows.isEmpty) Iterator.empty
-      else {
-        val conn = connect()
-        try {
-          conn.setAutoCommit(false)
-          val del = conn.prepareStatement(delSql)
-          val ins = conn.prepareStatement(insSql)
-          var ups = 0L; var dels = 0L; var pending = 0
-          def flush(): Unit = if (pending > 0) {
-            del.executeBatch(); ins.executeBatch(); conn.commit(); pending = 0
-          }
-          rows.foreach { r =>
-            keyIdx.zipWithIndex.foreach { case (ci, pi) =>
-              del.setObject(pi + 1, r.get(ci))
-            }
-            del.addBatch()
-            if (r.getString(opIdx) == "D") dels += 1
-            else {
-              dataIdx.zipWithIndex.foreach { case (ci, pi) =>
-                if (r.isNullAt(ci)) ins.setObject(pi + 1, null)
-                else ins.setObject(pi + 1, r.get(ci))
-              }
-              ins.addBatch(); ups += 1
-            }
-            pending += 1
-            if (pending >= batchSize) flush()
-          }
-          flush()
-          Iterator.single((ups, dels))
-        } finally conn.close()
+    SinkPartitions.counts(df, connect) { (conn, rows) =>
+      conn.setAutoCommit(false)
+      val del = conn.prepareStatement(delSql)
+      val ins = conn.prepareStatement(insSql)
+      var ups = 0L; var dels = 0L; var pending = 0
+      def flush(): Unit = if (pending > 0) {
+        del.executeBatch(); ins.executeBatch(); conn.commit(); pending = 0
       }
-    }.collect()
-    (results.map(_._1).sum, results.map(_._2).sum)
+      rows.foreach { r =>
+        bind(del, r, keyIdx); del.addBatch()
+        if (r.getString(opIdx) == "D") dels += 1
+        else { bind(ins, r, dataIdx); ins.addBatch(); ups += 1 }
+        pending += 1
+        if (pending >= batchSize) flush()
+      }
+      flush()
+      (ups, dels)
+    }
   }
 
   /** Execute statements sequentially on one fresh connection. */

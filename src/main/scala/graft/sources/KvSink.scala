@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -16,11 +16,9 @@ import org.apache.spark.sql.functions._
  *    hbase11xwriter/.../NormalTask.java:31-100) == [[Set]] with a rowkey
  *    built from the key columns.
  *
- * The store is behind [[KvClient]] (one client per partition, created on the
- * executor); tests exercise the write-mode semantics against an in-memory
- * store. Scale shape: `foreachPartition`, one connection per partition,
- * writes streamed — partition count = write parallelism, sized by the caller
- * against the store's connection budget.
+ * The store is behind [[KvClient]], one client per partition through
+ * [[SinkPartitions]], writes streamed; tests exercise the write-mode
+ * semantics against an in-memory store.
  */
 object KvSink {
 
@@ -94,24 +92,14 @@ object KvSink {
     val prepared = df.select(
       concat_ws(keySep, keyCols.map(c => col(c).cast("string")): _*).as("__k"),
       concat_ws(valueSep, valueCols.map(c => col(c).cast("string")): _*).as("__v"))
-    // counts come back as per-partition results through collect, NOT
-    // accumulators: a task retry or speculative duplicate re-runs the
-    // partition, and an accumulator would count it twice — the collected
-    // result of a retried task REPLACES its predecessor's, so the totals
-    // are deterministic under retries (same fix as JdbcWrite.write)
-    val results = prepared.rdd.mapPartitions { rows =>
-      if (rows.isEmpty) Iterator.empty
-      else {
-        val c = clientFactory()
-        var written = 0L
-        var skipped = 0L
-        try rows.foreach { r =>
-          if (apply1(c, mode, r.getString(0), r.getString(1))) written += 1
-          else skipped += 1
-        } finally c.close()
-        Iterator.single((written, skipped))
+    SinkPartitions.counts(prepared, clientFactory) { (c, rows) =>
+      var written = 0L
+      var skipped = 0L
+      rows.foreach { r =>
+        if (apply1(c, mode, r.getString(0), r.getString(1))) written += 1
+        else skipped += 1
       }
-    }.collect()
-    (results.map(_._1).sum, results.map(_._2).sum)
+      (written, skipped)
+    }
   }
 }

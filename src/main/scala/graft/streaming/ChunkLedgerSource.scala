@@ -81,17 +81,16 @@ private[streaming] class ChunkLedgerStream(root: String, maxChunksPerTrigger: In
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
 
-  private def fs = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    new Path(root).getFileSystem(conf)
-  }
+  /** Resolved once per stream, as Spark's FileStreamSource does, with the
+    * session's Hadoop conf. */
+  private lazy val fs =
+    new Path(root).getFileSystem(SparkSession.active.sessionState.newHadoopConf())
 
   /** Chunk dir names, sorted: one top-level listing. */
   private def chunkNames(): IndexedSeq[String] = {
-    val f = fs
     val rootPath = new Path(root)
-    if (!f.exists(rootPath)) return IndexedSeq.empty
-    f.listStatus(rootPath).filter(_.isDirectory).map(_.getPath.getName).sorted.toIndexedSeq
+    if (!fs.exists(rootPath)) return IndexedSeq.empty
+    fs.listStatus(rootPath).filter(_.isDirectory).map(_.getPath.getName).sorted.toIndexedSeq
   }
 
   private def isComplete(chunk: String): Boolean =
@@ -152,9 +151,8 @@ private[streaming] class ChunkLedgerStream(root: String, maxChunksPerTrigger: In
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val from = start.asInstanceOf[ChunkOffset].lastChunk
     val to = end.asInstanceOf[ChunkOffset].lastChunk
-    val f = fs
     completeChunksAfter(from).takeWhile(_ <= to).map { c =>
-      val files = f.listStatus(new Path(new Path(root), c))
+      val files = fs.listStatus(new Path(new Path(root), c))
         .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
         .map(s => (s.getPath.toString, s.getLen))
       ChunkPartition(c, files): InputPartition

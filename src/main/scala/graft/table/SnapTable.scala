@@ -114,7 +114,7 @@ object MergeResult {
  * create): the parquet files the table opens itself, footers and point
  * reads, are read with it.
  */
-final class SnapTable private (val root: String, private val fs: FileSystem,
+final class SnapTable private (val root: String, private[graft] val fs: FileSystem,
     conf: Configuration) {
   import SnapTable._
 

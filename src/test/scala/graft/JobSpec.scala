@@ -509,4 +509,94 @@ class JobSpec extends SparkSpec {
     assert(report.error.isEmpty, report.error)
     assert(spark.read.parquet(out).count() == 3)
   }
+
+  /** A job from a one-row streamreader into writer `name`, with one
+    * parameter object every writer kind accepts: a fresh `path` for the
+    * file and table writers, a Derby target for the JDBC ones. */
+  private def anyWriterJob(name: String, db: String): String = {
+    val c = java.sql.DriverManager.getConnection(s"jdbc:derby:memory:$db;create=true")
+    try c.createStatement().execute("CREATE TABLE w (v VARCHAR(8))")
+    catch { case _: java.sql.SQLException => () } // made by an earlier call
+    finally c.close()
+    s"""{"job": {"content": [{
+       |  "reader": {"name": "streamreader", "parameter": {
+       |    "column": [{"value": "x", "type": "string", "name": "v"}], "sliceRecordCount": 1}},
+       |  "writer": {"name": "$name", "parameter": {
+       |    "path": "${tmpDir("anywriter")}/out",
+       |    "connection": [{"jdbcUrl": "jdbc:derby:memory:$db", "table": ["w"]}]}}}]}}
+       |""".stripMargin
+  }
+
+  test("preCheck accepts a drdswriter job") {
+    val problems = Job.preCheck(spark, anyWriterJob("drdswriter", "drdspre"))
+    assert(problems.isEmpty, problems)
+  }
+
+  test("preCheck accepts every writer name that run accepts") {
+    // the documented writer names, aliases included
+    assert(Job.writers.keySet == Set("streamwriter", "txtfilewriter", "csvwriter",
+      "parquetwriter", "orcwriter", "snaptablewriter", "drdswriter", "adswriter",
+      "rdbmswriter", "jdbcwriter", "mysqlwriter", "oraclewriter", "postgresqlwriter",
+      "sqlserverwriter", "derbywriter"))
+    for (name <- Job.writers.keys) {
+      val problems = Job.preCheck(spark, anyWriterJob(name, "everywriter"))
+      assert(problems.isEmpty, s"$name: $problems")
+    }
+    val unknown = anyWriterJob("nosuchwriter", "everywriter")
+    assert(Job.preCheck(spark, unknown) == Seq("writer: unknown writer 'nosuchwriter'"))
+    assert(Job.run(spark, unknown).error.contains("unknown writer 'nosuchwriter'"))
+  }
+
+  test("rows a JDBC writer rejects are dirty rows under the job's errorLimit") {
+    val (path, out) = (tmpDir("jdbcdirty"), "jdbc:derby:memory:jobdirty")
+    (1L to 10L).map(i => (i, s"n$i")).toDF("id", "name").coalesce(1)
+      .write.parquet(s"$path/src")
+    val c = java.sql.DriverManager.getConnection(s"$out;create=true")
+    c.createStatement().execute("CREATE TABLE dst (id BIGINT PRIMARY KEY, name VARCHAR(8))")
+    c.close()
+    // keys 1..3 are already in the target, so plain inserts reject them
+    def job(limit: Long) =
+      s"""{"job": {
+         |  "setting": {"errorLimit": {"record": $limit}},
+         |  "content": [{
+         |    "reader": {"name": "parquetreader", "parameter": {"path": "$path/src"}},
+         |    "writer": {"name": "derbywriter", "parameter": {
+         |      "writeMode": "insert",
+         |      "connection": [{"jdbcUrl": "$out", "table": ["dst"]}],
+         |      "preSql": ["DELETE FROM dst",
+         |        "INSERT INTO dst VALUES (1, 'old'), (2, 'old'), (3, 'old')"]}}}]}}
+         |""".stripMargin
+    val ok = Job.run(spark, job(limit = 3))
+    assert(ok.error.isEmpty, ok.error)
+    assert((ok.rowsRead, ok.rowsWritten, ok.rowsDirty) == (10L, 7L, 3L))
+    val failed = Job.run(spark, job(limit = 0))
+    assert(failed.states.last == Job.Failed)
+    assert(failed.error.exists(_.contains("dirty records 3 exceed errorLimit.record=0")),
+      failed.error)
+  }
+
+  test("snaptablewriter gates its chunk under the job's errorLimit, before the commit") {
+    import graft.model.ChangeEvent
+    val src = s"${tmpDir("snapdirty")}/src"
+    val table = s"${tmpDir("snapdirty")}/t"
+    // one event with an op outside the domain among 100: 1% dirty, under
+    // the pipeline's default 2% but over the job's record limit
+    ((1 to 99).map(i => ChangeEvent(s"c$i", 1, "user", s"v$i", null,
+        new java.sql.Timestamp(1000L + i), i.toLong, "I")) :+
+      ChangeEvent("c100", 1, "user", "bad", null, new java.sql.Timestamp(1100L), 100L, "X"))
+      .toDF().write.parquet(src)
+    val json =
+      s"""{"job": {
+         |  "setting": {"errorLimit": {"record": 0}},
+         |  "content": [{
+         |    "reader": {"name": "parquetreader", "parameter": {"path": "$src"}},
+         |    "writer": {"name": "snaptablewriter", "parameter": {
+         |      "path": "$table", "buckets": 4}}}]}}
+         |""".stripMargin
+    val report = Job.run(spark, json)
+    assert(report.states.last == Job.Failed)
+    assert(report.error.exists(_.contains("errorLimit.record=0")), report.error)
+    val t = SnapTable.load(spark, table)
+    assert(t.currentVersion == 0 && t.committedEpoch == -1, "no epoch may commit")
+  }
 }

@@ -46,4 +46,15 @@ class ChunkLedgerLimitSpec extends SparkSpec {
     // nothing fresh: the offset stays where it is
     assert(latest(root, 10, from = "chunk=00002") == "chunk=00002")
   }
+
+  test("a ledger tail refuses a byte budget it would ignore") {
+    import graft.cdc.{CdcPipeline, PipelineOptions}
+    import graft.table.SnapTable
+    val t = SnapTable.create(spark, tmpDir("ledgerbytes"), graft.model.Schemas.payloadV2)
+    val e = intercept[IllegalArgumentException] {
+      CdcPipeline.stream(spark, mkLedger(Seq(1)), t, tmpDir("ledgerckpt"),
+        PipelineOptions(ledgerSource = true, maxBytesPerTrigger = Some(1L << 20))).stop()
+    }
+    assert(e.getMessage.contains("maxBytesPerTrigger"))
+  }
 }
